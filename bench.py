@@ -279,8 +279,10 @@ def format_driver_line(out: dict, limit: int = 1900) -> str:
     timings, spreads, per-pass samples and detail maps all live in
     ``bench_history/`` (the archive _previous_bench prefers). If the
     line still exceeds ``limit`` (far more queries than today's 63),
-    the comparable drops, then per-query precision falls to 1dp; the
-    contract keys (metric/value/unit/queries/sf) are never dropped.
+    the comparable drops, then per-query precision falls to 1dp, then to
+    whole seconds; the contract keys (metric/value/unit/queries/sf) are
+    never dropped, so a line that is still too long raises ValueError
+    rather than print a line the driver would truncate.
     tests/test_bench_baseline.py pins the real headline set's headroom."""
     slim = dict(out)
     slim["queries"] = {q: round(v, 2) for q, v in out["queries"].items()}
@@ -296,9 +298,16 @@ def format_driver_line(out: dict, limit: int = 1900) -> str:
     if len(line) > limit and "comparable" in slim:
         del slim["comparable"]
         line = json.dumps(slim, separators=(",", ":"))
-    if len(line) > limit:
-        slim["queries"] = {q: round(v, 1) for q, v in slim["queries"].items()}
+    for ndigits in (1, None):
+        if len(line) <= limit:
+            break
+        slim["queries"] = {q: round(v, ndigits) for q, v in out["queries"].items()}
         line = json.dumps(slim, separators=(",", ":"))
+    if len(line) > limit:
+        raise ValueError(
+            f"bench line is {len(line)} chars at whole-second precision; "
+            f"limit {limit}"
+        )
     return line
 
 

@@ -8,10 +8,14 @@ db/schema.rb:55,62):
   evaluate -> persist job_data -> status transition + debounce ->
   open/close job_errors -> fan out alerts.
 
-This class drives the same steps with Spark doing every data-touching
-stage in one job per tick. Time is injected (``tick(now)``) so golden
-tests and backtests replay deterministically — the same mechanism serves
-the reference's `to_date` historical runs (db/schema.rb:68).
+This class drives the same steps with the data plane in Spark — the
+due list, the window fetch and evaluation, the job_data append and the
+monitors swap, a handful of jobs per tick however many monitors are due —
+and the control tables (alert outbox, dispatch log, job_errors) read and
+written on the driver with Arrow (``store.py``), so their few rows cost
+no Spark job. Time is injected (``tick(now)``) so golden tests and
+backtests replay deterministically — the same mechanism serves the
+reference's `to_date` historical runs (db/schema.rb:68).
 """
 
 from __future__ import annotations
@@ -25,8 +29,8 @@ from rearview_spark.monitors.cron import next_fire
 from rearview_spark.monitors.evaluate import MonitorSpec, evaluate_monitors
 from rearview_spark.monitors.lifecycle import RESOLVED, TRIGGERED, transition
 from rearview_spark.monitors.notify import AlertRouter
-from rearview_spark.monitors.schemas import JOB_ERRORS, MONITORS
-from rearview_spark.monitors.store import JobStore
+from rearview_spark.monitors.schemas import ALERT_OUTBOX, JOB_ERRORS, MONITORS
+from rearview_spark.monitors.store import JobStore, arrow_table
 
 
 class MonitorScheduler:
@@ -75,8 +79,8 @@ class MonitorScheduler:
         them (re-sending only the unmarked tail).
 
         Result-sink shape (the 10^5-monitor question): the collect below
-        pulls ONE summary row per due monitor — status + graph-point
-        count, never the series data, which stays in the Spark job and
+        pulls ONE summary row per due monitor — job id, status and
+        message, never the series data, which stays in the Spark job and
         lands in job_data via the store writer. That makes the tick's
         driver traffic O(active monitors), ~100 B/row: 10^5 due monitors
         collect ~10 MB and iterate a trivial Python loop, comfortably
@@ -87,7 +91,9 @@ class MonitorScheduler:
         foreachBatch rewrite: transitions need read-your-writes against
         the open-error table inside one commit, which a streaming sink
         can't give without re-introducing the same per-shard serial
-        point.
+        point. job_errors is read once and rewritten whole on the driver
+        (Arrow, no Spark job), so incident history adds file I/O to a
+        tick but not Spark jobs.
         """
         # drain alerts stranded by a predecessor that died mid-dispatch
         stranded = self._drain_outbox()
@@ -98,20 +104,22 @@ class MonitorScheduler:
 
         specs = [MonitorSpec.from_row(r) for r in due]
         results = evaluate_monitors(self.spark, specs, self.metrics, now)
-        by_id = {r["job_id"]: r for r in results.collect()}
+        by_id = {
+            r["job_id"]: r
+            for r in results.select("job_id", "status", "message").collect()
+        }
 
         # status transitions + debounce (S4/S5) on the driver: due list is
         # config-scale; the heavy work already happened in the Spark job.
-        errors_df = self.store.read("job_errors")
-        open_errors = {
-            r["job_id"]: r.asDict()
-            for r in errors_df.filter(F.col("status") == TRIGGERED).collect()
-        }
+        # job_errors is read once; its rows serve the open incidents, the
+        # next id and the rewrite in _merge_errors.
+        errors = self.store.read_rows("job_errors")
+        open_errors = {r["job_id"]: r.asDict() for r in errors if r["status"] == TRIGGERED}
         new_error_rows: list[tuple] = []
         closed_job_ids: set[int] = set()
         updated_monitors: list[dict] = []
         deferred_alerts: list[tuple] = []
-        next_error_id = (errors_df.agg(F.max("id")).collect()[0][0] or 0) + 1
+        next_error_id = max((r["id"] for r in errors), default=0) + 1
 
         for mon in due:
             res = by_id.get(mon["id"])
@@ -165,7 +173,7 @@ class MonitorScheduler:
             outbox=self._outbox_rows(deferred_alerts, now),
         )
         self.store.append_job_data(results, now)  # persist job_data (S8)
-        self._merge_errors(open_errors, new_error_rows, closed_job_ids, now)
+        self._merge_errors(errors, open_errors, new_error_rows, closed_job_ids, now)
         n_alerts = self._drain_outbox()
         return {"ran": len(due), "alerts": n_alerts + stranded}
 
@@ -182,13 +190,11 @@ class MonitorScheduler:
         return int.from_bytes(h[:8], "big") >> 1
 
     def _outbox_rows(self, deferred_alerts: list[tuple], now: dt.datetime):
-        from rearview_spark.monitors.schemas import ALERT_OUTBOX
-
         rows = [
             (self._alert_id(job_id, now), job_id, alert_keys, message, new_status, now)
             for job_id, alert_keys, message, new_status in deferred_alerts
         ]
-        return self.spark.createDataFrame(rows, ALERT_OUTBOX)
+        return arrow_table(rows, ALERT_OUTBOX)
 
     def _drain_outbox(self) -> int:
         """Dispatch every pending outbox alert, marking each in the
@@ -222,15 +228,15 @@ class MonitorScheduler:
 
     def _merge_errors(
         self,
+        current: list,
         open_errors: dict[int, dict],
         new_rows: list[tuple],
         closed_job_ids: set[int],
         now: dt.datetime,
     ) -> None:
-        current = self.store.read("job_errors")
         touched = set(open_errors) | closed_job_ids
         rows = []
-        for r in current.collect():
+        for r in current:
             d = r.asDict()
             if d["status"] == TRIGGERED and d["job_id"] in closed_job_ids:
                 d["status"] = RESOLVED
@@ -240,9 +246,7 @@ class MonitorScheduler:
             rows.append(tuple(d[f.name] for f in JOB_ERRORS.fields))
         rows.extend(new_rows)
         if rows or touched:
-            self.store.overwrite(
-                "job_errors", self.spark.createDataFrame(rows, JOB_ERRORS)
-            )
+            self.store.overwrite("job_errors", arrow_table(rows, JOB_ERRORS))
 
     # -- simulated run loop (tests / backtest) ------------------------------
 

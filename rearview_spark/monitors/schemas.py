@@ -122,6 +122,7 @@ USERS = T.StructType(
 # monitors swap that commits the status transitions (store.save_monitors
 # outbox=), so a crash between the CAS and dispatch can never lose an
 # alert — the next tick drains it (at-least-once, notify.py's contract).
+# Read and written on the driver with pyarrow (store.py).
 ALERT_OUTBOX = T.StructType(
     [
         T.StructField("id", T.LongType(), False),  # deterministic (job_id, fired_at) hash
@@ -133,9 +134,10 @@ ALERT_OUTBOX = T.StructType(
     ]
 )
 
-# Append-only dispatch log: outbox rows anti-joined against it are the
-# pending set. Marked per-alert AFTER the send, so a crash mid-drain
-# redelivers only the unsent tail.
+# Append-only dispatch log, one small parquet file per mark: outbox rows
+# whose id is not in it are the pending set (filtered on the driver,
+# store.JobStore.pending_alerts). Marked per-alert AFTER the send, so a
+# crash mid-drain redelivers only the unsent tail.
 ALERT_DISPATCHES = T.StructType(
     [
         T.StructField("id", T.LongType(), False),

@@ -24,6 +24,20 @@ transactional properties re-created file-system-first (SURVEY.md §4.2 #4):
 Config tables are dimension-scale: full rewrite per tick is bounded and
 cheap.
 
+**Control tables on the driver.** The alert outbox sidecar, the
+``alert_dispatches`` log and ``job_errors`` are born on the driver (the
+tick builds their rows in Python) and consumed there (the drain and the
+lifecycle loop iterate them). They hold a few rows per tick, and through
+Spark each read or write would cost a job or more (schedule, scan,
+collect) for a few kilobytes of I/O. Their files are read and
+written with pyarrow instead (:func:`arrow_table`, :func:`arrow_rows`),
+under the declared schemas (``pyspark.sql.pandas.types.to_arrow_schema``,
+timestamps ``timestamp[us, UTC]``), so ``JobStore.read`` and the
+dashboards keep reading the same files through Spark, and files Spark
+wrote earlier (INT96 timestamps) still read on the driver. The data
+plane — window fetch, evaluation, job_data and the monitors table users
+write through DataFrames — stays on Spark.
+
 The mechanism is split generic-core / typed-store: the schema-agnostic
 :class:`VersionedParquetTables` is the parquet implementation behind
 ``rearview_spark.sources.table_format`` (the single place the
@@ -39,14 +53,64 @@ import shutil
 import uuid
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from rearview_spark.monitors import schemas
+
+
+def arrow_table(rows, schema: T.StructType) -> pa.Table:
+    """Driver rows (tuples, dicts or Rows of a flat schema) as an Arrow
+    table under ``schema``. Values convert exactly as
+    ``spark.createDataFrame`` converts them (``toInternal``: a naive
+    datetime is local wall-clock time), so a file written here reads
+    back through Spark as the rows a Spark write would have stored."""
+    arrow = to_arrow_schema(schema)
+    internal = [schema.toInternal(r) for r in rows]
+    cols = list(zip(*internal)) if internal else [()] * len(arrow)
+    return pa.table(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+
+
+def arrow_rows(table: pa.Table, schema: T.StructType) -> list:
+    """Rows of an Arrow table under ``schema``, as Spark's ``collect``
+    returns them (``fromInternal``: timestamps back to naive local)."""
+    cols = [
+        table.column(f.name).cast(pa.int64()).to_pylist()
+        if isinstance(f.dataType, T.TimestampType)
+        else table.column(f.name).to_pylist()
+        for f in schema.fields
+    ]
+    return [schema.fromInternal(t) for t in zip(*cols)]
+
+
+def read_arrow(path: Path, schema: T.StructType) -> pa.Table:
+    """A parquet directory read on the driver, cast to ``schema``. Files
+    starting with ``.`` or ``_`` are skipped, as Spark skips them; files
+    Spark wrote (INT96 timestamps, ``element``-named lists) cast to the
+    declared types file by file."""
+    arrow = to_arrow_schema(schema)
+    if not path.exists():
+        return arrow.empty_table()
+    return pads.dataset(str(path), schema=arrow, format="parquet").to_table()
 
 
 class ConcurrentWriteError(RuntimeError):
     """The table version moved past the caller's snapshot (lost-update
     guard), or another writer claimed the same next version."""
+
+
+def _write(payload: DataFrame | pa.Table, path: Path) -> None:
+    if isinstance(payload, pa.Table):
+        path.mkdir(parents=True)
+        pq.write_table(payload, path / "part-00000.parquet")
+    else:
+        payload.write.mode("overwrite").parquet(str(path))
 
 
 class VersionedParquetTables:
@@ -168,11 +232,16 @@ class VersionedParquetTables:
     def overwrite(
         self,
         table: str,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         expect_version: int | None = None,
-        sidecars: dict[str, DataFrame] | None = None,
+        sidecars: dict[str, DataFrame | pa.Table] | None = None,
     ) -> int:
         """Atomic versioned swap; returns the new version number.
+
+        The payload and each sidecar are a Spark DataFrame (written by a
+        Spark job) or a ``pyarrow.Table`` (written by the driver as one
+        parquet file); either way they land in the same staging dir and
+        commit through the same claim and pointer flip.
 
         With ``expect_version`` this is a compare-and-swap: it fails if
         the table has moved since the caller read that version, and the
@@ -206,10 +275,10 @@ class VersionedParquetTables:
         tmp = self.root / f".{table}.CURRENT.{uuid.uuid4().hex}"
         published = False
         try:
-            df.write.mode("overwrite").parquet(str(wdir))
+            _write(df, wdir)
             for sub, sdf in (sidecars or {}).items():
                 assert sub.startswith("_"), "sidecar dirs must be underscore-hidden"
-                sdf.write.mode("overwrite").parquet(str(wdir / sub))
+                _write(sdf, wdir / sub)
             # Fencing: re-verify we still own the claim IMMEDIATELY before
             # publishing. A reclaimer that stole the claim (TTL expiry
             # during a stalled write) deleted/replaced the claim file, so
@@ -273,17 +342,25 @@ class JobStore(VersionedParquetTables):
     schema map and the reference's typed operations (save_monitors with
     the atomic outbox sidecar, job_data appends, dispatch log)."""
 
+    SCHEMAS = {
+        "monitors": schemas.MONITORS,
+        "job_data": schemas.JOB_DATA,
+        "job_errors": schemas.JOB_ERRORS,
+        "applications": schemas.APPLICATIONS,
+        "users": schemas.USERS,
+    }
+
     def read(self, table: str) -> DataFrame:
-        return self.read_table(
-            table,
-            {
-                "monitors": schemas.MONITORS,
-                "job_data": schemas.JOB_DATA,
-                "job_errors": schemas.JOB_ERRORS,
-                "applications": schemas.APPLICATIONS,
-                "users": schemas.USERS,
-            }[table],
-        )
+        return self.read_table(table, self.SCHEMAS[table])
+
+    def read_rows(self, table: str) -> list:
+        """The current snapshot as driver rows, read without Spark — for
+        the control tables the tick consumes on the driver."""
+        _, path = self.current_version(table)
+        if path is None:
+            return []
+        schema = self.SCHEMAS[table]
+        return arrow_rows(read_arrow(path, schema), schema)
 
     # -- typed operations ---------------------------------------------------
 
@@ -291,7 +368,7 @@ class JobStore(VersionedParquetTables):
         self,
         df: DataFrame,
         expect_version: int | None = None,
-        outbox: DataFrame | None = None,
+        outbox: DataFrame | pa.Table | None = None,
     ) -> int:
         """Swap the monitors table; when ``outbox`` is given, its rows are
         committed in the SAME pointer flip (sidecar ``_outbox``) — the
@@ -304,63 +381,58 @@ class JobStore(VersionedParquetTables):
         crash and the next tick's opening drain — e.g. a user registering
         a monitor — would silently discard the owed alerts, and the
         at-least-once guarantee would hold only if the scheduler were the
-        sole writer (ADVICE r04 #2)."""
-        carried = self._undispatched_outbox()
-        if carried is not None and outbox is not None:
-            outbox = carried.unionByName(outbox).dropDuplicates(["id"])
-        elif carried is not None:
-            outbox = carried
-        sidecars = {"_outbox": outbox} if outbox is not None else None
+        sole writer. With nothing owed, no sidecar is written."""
+        if isinstance(outbox, DataFrame):
+            rows = outbox.select(schemas.ALERT_OUTBOX.fieldNames()).collect()
+            outbox = arrow_table(rows, schemas.ALERT_OUTBOX)
+        owed = self.read_outbox()
+        if outbox is not None:
+            owed = pa.concat_tables([owed, outbox])
+        owed = self._undispatched(owed)
+        sidecars = {"_outbox": owed} if owed.num_rows else None
         return self.overwrite("monitors", df, expect_version, sidecars=sidecars)
 
-    def _undispatched_outbox(self) -> DataFrame | None:
-        """Pending rows of the current version's outbox, or None when the
-        current version carries no outbox sidecar (the common case — one
-        existence check, no Spark job)."""
+    def read_outbox(self) -> pa.Table:
+        """The current monitors version's alert outbox, read on the
+        driver (empty when the version carried none)."""
         _, path = self.current_version("monitors")
-        if path is None or not (Path(path) / "_outbox").exists():
-            return None
-        return (
-            self.read_outbox()
-            .dropDuplicates(["id"])
-            .join(self._read_dispatch_log(), "id", "left_anti")
-        )
+        if path is None:
+            return to_arrow_schema(schemas.ALERT_OUTBOX).empty_table()
+        return read_arrow(path / "_outbox", schemas.ALERT_OUTBOX)
 
-    def read_outbox(self) -> DataFrame:
-        """The current monitors version's alert outbox (empty frame when
-        the version carried none)."""
-        _, path = self.current_version("monitors")
-        if path is not None and (Path(path) / "_outbox").exists():
-            return self.spark.read.schema(schemas.ALERT_OUTBOX).parquet(
-                str(Path(path) / "_outbox")
-            )
-        return self.spark.createDataFrame([], schemas.ALERT_OUTBOX)
+    def _undispatched(self, outbox: pa.Table) -> pa.Table:
+        """``outbox`` minus the ids in the dispatch log, first row per id
+        (ids are deterministic, so duplicates are re-runs of one alert)."""
+        if not outbox.num_rows:
+            return outbox
+        seen = set(
+            read_arrow(self._legacy_path("alert_dispatches"), schemas.ALERT_DISPATCHES)
+            .column("id").to_pylist()
+        )
+        keep = []
+        for i, alert_id in enumerate(outbox.column("id").to_pylist()):
+            if alert_id not in seen:
+                seen.add(alert_id)
+                keep.append(i)
+        return outbox.take(pa.array(keep, pa.int64()))
 
     def pending_alerts(self) -> list:
-        """Outbox rows not yet marked dispatched, oldest first. Config
-        scale (bounded by alerts-per-tick), so a driver collect is fine."""
-        from pyspark.sql import functions as F
-
-        dispatched = self._read_dispatch_log()
-        return (
-            self.read_outbox()
-            .dropDuplicates(["id"])
-            .join(dispatched, "id", "left_anti")
-            .orderBy(F.col("fired_at"), F.col("id"))
-            .collect()
-        )
-
-    def _read_dispatch_log(self) -> DataFrame:
-        path = self._legacy_path("alert_dispatches")
-        if path.exists() and any(path.iterdir()):
-            return self.spark.read.schema(schemas.ALERT_DISPATCHES).parquet(str(path))
-        return self.spark.createDataFrame([], schemas.ALERT_DISPATCHES)
+        """Outbox rows not yet marked dispatched, oldest first."""
+        rows = arrow_rows(self._undispatched(self.read_outbox()), schemas.ALERT_OUTBOX)
+        return sorted(rows, key=lambda r: (r["fired_at"], r["id"]))
 
     def mark_alert_dispatched(self, alert_id: int, now: dt.datetime) -> None:
-        self.append(
-            "alert_dispatches",
-            self.spark.createDataFrame([(alert_id, now)], schemas.ALERT_DISPATCHES),
+        """Log one send: a parquet file of one row, written under a
+        dot-prefixed name (hidden from both readers) and renamed into
+        place, so a crash mid-write leaves the alert unmarked rather
+        than the log unreadable."""
+        log = self._legacy_path("alert_dispatches")
+        log.mkdir(exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        pq.write_table(
+            arrow_table([(alert_id, now)], schemas.ALERT_DISPATCHES), log / f".{name}"
         )
+        os.replace(log / f".{name}", log / name)
 
     def append_job_data(self, run_results: DataFrame, now: dt.datetime) -> None:
         """Materialize run results as job_data rows (R12/S8).

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import warnings
 
 import pytest
 
@@ -86,7 +87,23 @@ SLOW_TESTS = {
 
 def pytest_collection_modifyitems(config, items):
     here = os.path.dirname(os.path.abspath(__file__))
+    seen, files = set(), set()
     for item in items:
         rel = os.path.relpath(item.fspath, here) + "::" + item.nodeid.split("::", 1)[1]
+        seen.add(rel)
+        files.add(rel.split("::", 1)[0])
         if rel in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+    # A renamed or deleted test drops off the slow lane without a trace;
+    # name the stale ids. Only collected files are checked, and nothing
+    # when node ids were named (the rest of their file is not collected).
+    if any("::" in arg for arg in config.args):
+        return
+    stale = sorted(
+        t for t in SLOW_TESTS if t.split("::", 1)[0] in files and t not in seen
+    )
+    if stale:
+        warnings.warn(
+            f"SLOW_TESTS ids match no collected test: {', '.join(stale)}",
+            pytest.PytestWarning,
+        )

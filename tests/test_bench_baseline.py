@@ -10,6 +10,8 @@ import json
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
@@ -166,3 +168,23 @@ def test_printed_line_degrades_without_dropping_contract_keys():
     assert len(doc["queries"]) == 40
     for k in ("metric", "value", "unit", "queries", "sf"):
         assert k in doc
+
+
+def test_printed_line_falls_to_whole_seconds_then_raises():
+    # past the 1dp fallback the line degrades once more, to whole
+    # seconds, and a line that still cannot fit raises instead of
+    # printing something the driver would cut off
+    queries = {f"q{i:03d}": 12.345 for i in range(60)}
+    out = {"metric": "m", "value": 740.7, "unit": "sec", "queries": queries, "sf": 0.1}
+    whole = json.dumps(
+        dict(out, queries={q: 12 for q in queries}), separators=(",", ":")
+    )
+    tenths = json.dumps(
+        dict(out, queries={q: 12.3 for q in queries}), separators=(",", ":")
+    )
+    assert len(whole) < len(tenths)
+    line = bench.format_driver_line(out, limit=len(whole))
+    assert line == whole
+    assert json.loads(line)["queries"]["q000"] == 12
+    with pytest.raises(ValueError, match="whole-second"):
+        bench.format_driver_line(out, limit=len(whole) - 1)
