@@ -22,9 +22,12 @@ Statuses (reference state machine, SURVEY.md §2.4 S4 — distinct graphite
 job_errors): 'success' | 'failed' (expr truthy) | 'error' (empty window or
 expression error).
 
-Scale: one Spark job evaluates ALL due monitors — each target's plan is
-tagged (job_id, var) and unioned, so Catalyst sees a single DAG and the
-grouped-map UDF fans out across executors by job_id. Per-job input is
+Scale: one action, run by the caller, evaluates ALL due monitors — each
+target's plan is tagged (window group, var) and unioned with one sentinel
+row per group, so Catalyst sees a single DAG, every monitor reaches the
+grouped-map UDF (empty windows and bad targets included) and the UDF fans
+out across executors by window group. The frame comes back lazy and
+uncached; a caller that consumes it twice caches it. Per-job input is
 capped (``max_points_per_job``) before collection into the worker.
 """
 
@@ -224,6 +227,13 @@ def bind_variables(pdf: pd.DataFrame) -> dict[str, object]:
     return out
 
 
+# One row per window group carrying only its key (``var`` null). Unioned
+# into the tagged points, it makes every group reach the grouped UDF, even
+# one whose window is empty or whose targets failed to compile, so the
+# UDF emits every monitor's row and the evaluation stays one action.
+_SENTINEL = "grp string, var string, metric string, ts timestamp, value double"
+
+
 def evaluate_monitors(
     spark: SparkSession,
     monitors: Iterable[MonitorSpec],
@@ -232,8 +242,13 @@ def evaluate_monitors(
     max_points_per_job: int = MAX_POINTS_PER_JOB_DEFAULT,
     with_graph: bool = True,
 ) -> DataFrame:
-    """Evaluate every monitor's window in ONE Spark job; returns a
-    DataFrame with RUN_RESULT schema.
+    """Plan the evaluation of every monitor's window; returns a lazy,
+    uncached DataFrame with RUN_RESULT schema, one row per monitor.
+
+    No Spark job runs here: the caller's action evaluates ALL the
+    monitors at once. A caller that consumes the frame twice (the scheduler collects
+    the statuses, then appends job_data) caches it and unpersists it
+    when done.
 
     The monitors list is config-scale (the reference preloads all jobs
     into its scheduler, Rakefile:4-7) — iterating it on the driver builds
@@ -249,7 +264,6 @@ def evaluate_monitors(
     # *distinct* windows, not monitor count — with fleets of monitors on
     # the same golden metrics (the common production shape) that is the
     # difference between O(monitors) and O(distinct targets) scan work.
-    plan_errors: dict[int, str] = {}
     scheduled: dict[int, dt.datetime] = {}
     groups: dict[str, list[MonitorSpec]] = {}
     for spec in specs:
@@ -261,13 +275,14 @@ def evaluate_monitors(
         groups.setdefault(key, []).append(spec)
 
     tagged_frames = []
-    group_exprs: dict[str, list[tuple]] = {}
+    # key -> (members, target compile error or None)
+    group_info: dict[str, tuple[list[tuple], str | None]] = {}
     for key, members in groups.items():
         lead = members[0]
         end = scheduled[lead.id]
         start = end - dt.timedelta(minutes=lead.minutes)
         windowed = window_fetch(metrics, start, end)
-        ok = True
+        frames, error = [], None
         for i, target in enumerate(lead.metrics):
             try:
                 plan = compile_target(target)
@@ -287,19 +302,21 @@ def evaluate_monitors(
                 else:
                     df = plan(windowed)
             except Exception as e:  # noqa: BLE001 — bad target -> error status
-                for m in members:
-                    plan_errors[m.id] = f"target {target!r}: {e}"
-                ok = False
+                error = f"target {target!r}: {e}"
                 break
-            tagged_frames.append(
+            frames.append(
                 df.select(
                     F.lit(key).alias("grp"),
                     F.lit(_var_name(i)).alias("var"),
                     "metric", "ts", "value",
                 )
             )
-        if ok:
-            group_exprs[key] = [
+        if error is None:
+            # a group's points join the union only once ALL its targets
+            # compiled; a bad later target leaves just its sentinel
+            tagged_frames.extend(frames)
+        group_info[key] = (
+            [
                 (
                     m.id,
                     m.monitor_expr,
@@ -307,13 +324,36 @@ def evaluate_monitors(
                     scheduled[m.id].isoformat(),
                 )
                 for m in members
-            ]
+            ],
+            error,
+        )
 
-    b_exprs = spark.sparkContext.broadcast(group_exprs)
+    b_groups = spark.sparkContext.broadcast(group_info)
 
     def _eval_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf["grp"].iloc[0]
-        members = b_exprs.value[key]
+        members, plan_error = b_groups.value[pdf["grp"].iloc[0]]
+        pdf = pdf[pdf["var"].notna()]  # drop the sentinel row
+        out = []
+        graph_records = None  # read by emit at call time
+
+        def emit(job_id, sched_iso, status, message, output):
+            out.append(
+                {
+                    "job_id": job_id,
+                    "scheduled_ts": pd.Timestamp(sched_iso),
+                    "status": status,
+                    "message": message,
+                    "output": output,
+                    "graph_data": graph_records,
+                }
+            )
+
+        if plan_error is not None or pdf.empty:
+            # the reference's graphite-error path: no series to chart
+            for job_id, _, _, sched_iso in members:
+                emit(job_id, sched_iso, "error", plan_error or "no data in window", None)
+            return pd.DataFrame(out)
+
         if len(pdf) > max_points_per_job:
             pdf = pdf.sort_values("ts").tail(max_points_per_job)
         if with_graph:
@@ -336,20 +376,6 @@ def evaluate_monitors(
                 variables = bind_variables(pdf)
             except Exception as e:  # noqa: BLE001
                 bind_error = f"monitor_expr error: {e}"
-
-        out = []
-
-        def emit(job_id, sched_iso, status, message, output):
-            out.append(
-                {
-                    "job_id": job_id,
-                    "scheduled_ts": pd.Timestamp(sched_iso),
-                    "status": status,
-                    "message": message,
-                    "output": output,
-                    "graph_data": graph_records,
-                }
-            )
 
         for job_id, expr, label, sched_iso in members:
             if not has_data:
@@ -376,25 +402,8 @@ def evaluate_monitors(
                     emit(job_id, sched_iso, "success", None, repr(value))
         return pd.DataFrame(out)
 
-    if tagged_frames:
-        union = tagged_frames[0]
-        for f in tagged_frames[1:]:
-            union = union.unionByName(f)
-        # cache: consumed twice (seen-id check + returned frame)
-        results = union.groupBy("grp").applyInPandas(_eval_group, RUN_RESULT).cache()
-    else:
-        results = spark.createDataFrame([], RUN_RESULT)
-
-    # Monitors whose window produced zero rows never reach the UDF — they
-    # are the reference's graphite-error path. Same for bad targets.
-    rows = []
-    seen = {r["job_id"] for r in results.select("job_id").collect()} if tagged_frames else set()
-    for spec in specs:
-        if spec.id in seen:
-            continue
-        msg = plan_errors.get(spec.id, "no data in window")
-        rows.append((spec.id, scheduled[spec.id], "error", msg, None, None))
-    if rows:
-        extra = spark.createDataFrame(rows, RUN_RESULT)
-        results = results.unionByName(extra) if tagged_frames else extra
-    return results
+    sentinels = spark.createDataFrame([(k, None, None, None, None) for k in group_info], _SENTINEL)
+    union = sentinels.coalesce(1)
+    for f in tagged_frames:
+        union = union.unionByName(f)
+    return union.groupBy("grp").applyInPandas(_eval_group, RUN_RESULT)

@@ -8,29 +8,33 @@ db/schema.rb:55,62):
   evaluate -> persist job_data -> status transition + debounce ->
   open/close job_errors -> fan out alerts.
 
-This class drives the same steps with the data plane in Spark — the
-due list, the window fetch and evaluation, the job_data append and the
-monitors swap, a handful of jobs per tick however many monitors are due —
-and the control tables (alert outbox, dispatch log, job_errors) read and
-written on the driver with Arrow (``store.py``), so their few rows cost
-no Spark job. Time is injected (``tick(now)``) so golden tests and
-backtests replay deterministically — the same mechanism serves the
-reference's `to_date` historical runs (db/schema.rb:68).
+This class drives the same steps with only the data plane in Spark —
+the window fetch and evaluation (one action, the tick's status collect)
+and the job_data append (read from the cached evaluation), a handful of
+jobs per tick however many monitors are due. The config and control
+tables (the monitors table, alert outbox, dispatch log, job_errors) are
+read and written on the driver with Arrow (``store.py``), so their few
+rows cost no Spark job and a tick with nothing due launches none. Time
+is injected (``tick(now)``) so golden tests and backtests replay
+deterministically — the same mechanism serves the reference's `to_date`
+historical runs (db/schema.rb:68).
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from rearview_spark.monitors.cron import next_fire
 from rearview_spark.monitors.evaluate import MonitorSpec, evaluate_monitors
 from rearview_spark.monitors.lifecycle import RESOLVED, TRIGGERED, transition
 from rearview_spark.monitors.notify import AlertRouter
 from rearview_spark.monitors.schemas import ALERT_OUTBOX, JOB_ERRORS, MONITORS
-from rearview_spark.monitors.store import JobStore, arrow_table
+from rearview_spark.monitors.store import JobStore, arrow_rows, arrow_table
 
 
 class MonitorScheduler:
@@ -49,13 +53,17 @@ class MonitorScheduler:
     # -- due-job selection (R2/R6/R7 access paths) --------------------------
 
     def due_monitors(self, now: dt.datetime) -> list[dict]:
-        rows = (
-            self.store.read("monitors")
-            .filter(F.col("active") & F.col("deleted_at").isNull())
-            .filter(F.col("next_run").isNull() | (F.col("next_run") <= F.lit(now)))
-            .collect()
+        """Active, undeleted monitors whose ``next_run`` is unset or not
+        after ``now``, filtered on the driver; only those become rows."""
+        table = self.store.read_arrow("monitors")
+        # ``now`` converts as Spark converts a literal (naive = local)
+        now_us = pa.scalar(T.TimestampType().toInternal(now), pa.timestamp("us", tz="UTC"))
+        next_run = table["next_run"]
+        due = pc.and_(
+            pc.and_(table["active"], pc.is_null(table["deleted_at"])),
+            pc.or_kleene(pc.is_null(next_run), pc.less_equal(next_run, now_us)),
         )
-        return [r.asDict() for r in rows]
+        return [r.asDict() for r in arrow_rows(table.filter(due), MONITORS)]
 
     # -- one tick -----------------------------------------------------------
 
@@ -78,7 +86,14 @@ class MonitorScheduler:
         the owed alerts durable; the next tick's opening drain delivers
         them (re-sending only the unmarked tail).
 
-        Result-sink shape (the 10^5-monitor question): the collect below
+        Spark work: the due list and the monitors swap are driver-side
+        Arrow I/O, so a tick with nothing due launches no Spark job. The
+        evaluation frame is cached; the status collect is the one action
+        that evaluates every due monitor, the job_data append reads the
+        cache, and the frame is unpersisted however the tick ends (a lost
+        CAS included).
+
+        Result-sink shape (the 10^5-monitor question): the status collect
         pulls ONE summary row per due monitor — job id, status and
         message, never the series data, which stays in the Spark job and
         lands in job_data via the store writer. That makes the tick's
@@ -103,7 +118,21 @@ class MonitorScheduler:
             return {"ran": 0, "alerts": stranded}
 
         specs = [MonitorSpec.from_row(r) for r in due]
-        results = evaluate_monitors(self.spark, specs, self.metrics, now)
+        # cached: the collect below runs the evaluation, the job_data
+        # append reads it back; released however the tick ends
+        results = evaluate_monitors(self.spark, specs, self.metrics, now).cache()
+        try:
+            n_alerts = self._commit(now, due, results, monitors_version)
+        finally:
+            results.unpersist()
+        return {"ran": len(due), "alerts": n_alerts + stranded}
+
+    def _commit(
+        self, now: dt.datetime, due: list[dict], results: DataFrame, monitors_version: int
+    ) -> int:
+        """Run the evaluation (the status collect), then the transitions,
+        the CAS-gated monitors swap, the job_data append, the incident
+        rewrite and the drain. Returns the number of alerts sent."""
         by_id = {
             r["job_id"]: r
             for r in results.select("job_id", "status", "message").collect()
@@ -174,8 +203,7 @@ class MonitorScheduler:
         )
         self.store.append_job_data(results, now)  # persist job_data (S8)
         self._merge_errors(errors, open_errors, new_error_rows, closed_job_ids, now)
-        n_alerts = self._drain_outbox()
-        return {"ran": len(due), "alerts": n_alerts + stranded}
+        return self._drain_outbox()
 
     # -- outbox (at-least-once alert delivery) ------------------------------
 
@@ -218,12 +246,13 @@ class MonitorScheduler:
         expect_version: int | None = None,
         outbox=None,
     ) -> None:
-        current = self.store.read("monitors")
-        upd_df = self.spark.createDataFrame(
-            [tuple(m[f.name] for f in MONITORS.fields) for m in updated], MONITORS
-        )
-        ids = [m["id"] for m in updated]
-        merged = current.filter(~F.col("id").isin(ids)).unionByName(upd_df)
+        """Replace the updated rows in the monitors table, on the driver."""
+        current = self.store.read_arrow("monitors")
+        ids = pa.array([m["id"] for m in updated], pa.int64())
+        merged = pa.concat_tables([
+            current.filter(pc.invert(pc.is_in(current["id"], value_set=ids))),
+            arrow_table(updated, MONITORS),
+        ])
         self.store.save_monitors(merged, expect_version=expect_version, outbox=outbox)
 
     def _merge_errors(

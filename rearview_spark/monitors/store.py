@@ -24,19 +24,21 @@ transactional properties re-created file-system-first (SURVEY.md §4.2 #4):
 Config tables are dimension-scale: full rewrite per tick is bounded and
 cheap.
 
-**Control tables on the driver.** The alert outbox sidecar, the
-``alert_dispatches`` log and ``job_errors`` are born on the driver (the
-tick builds their rows in Python) and consumed there (the drain and the
-lifecycle loop iterate them). They hold a few rows per tick, and through
-Spark each read or write would cost a job or more (schedule, scan,
-collect) for a few kilobytes of I/O. Their files are read and
-written with pyarrow instead (:func:`arrow_table`, :func:`arrow_rows`),
+**Control and config tables on the driver.** The alert outbox sidecar,
+the ``alert_dispatches`` log and ``job_errors`` are born on the driver
+(the tick builds their rows in Python) and consumed there (the drain and
+the lifecycle loop iterate them). The tick also reads the monitors table
+for its due list and swaps in the updated rows. These tables hold tens
+to thousands of rows, and through Spark each read or write would cost a
+job or more (schedule, scan, collect) for a few kilobytes of I/O. In the
+tick their files are read and written with pyarrow instead
+(:func:`arrow_table`, :func:`arrow_rows`, :meth:`JobStore.read_arrow`),
 under the declared schemas (``pyspark.sql.pandas.types.to_arrow_schema``,
 timestamps ``timestamp[us, UTC]``), so ``JobStore.read`` and the
 dashboards keep reading the same files through Spark, and files Spark
-wrote earlier (INT96 timestamps) still read on the driver. The data
-plane — window fetch, evaluation, job_data and the monitors table users
-write through DataFrames — stays on Spark.
+wrote (INT96 timestamps) still read on the driver. The data plane —
+window fetch, evaluation and job_data — stays on Spark, and so do the
+monitors-table writes users make with ``save_monitors(DataFrame)``.
 
 The mechanism is split generic-core / typed-store: the schema-agnostic
 :class:`VersionedParquetTables` is the parquet implementation behind
@@ -353,27 +355,34 @@ class JobStore(VersionedParquetTables):
     def read(self, table: str) -> DataFrame:
         return self.read_table(table, self.SCHEMAS[table])
 
+    def read_arrow(self, table: str) -> pa.Table:
+        """The current snapshot as an Arrow table, read without Spark
+        (empty when the table has never been written)."""
+        _, path = self.current_version(table)
+        schema = self.SCHEMAS[table]
+        if path is None:
+            return to_arrow_schema(schema).empty_table()
+        return read_arrow(path, schema)
+
     def read_rows(self, table: str) -> list:
         """The current snapshot as driver rows, read without Spark — for
         the control tables the tick consumes on the driver."""
-        _, path = self.current_version(table)
-        if path is None:
-            return []
-        schema = self.SCHEMAS[table]
-        return arrow_rows(read_arrow(path, schema), schema)
+        return arrow_rows(self.read_arrow(table), self.SCHEMAS[table])
 
     # -- typed operations ---------------------------------------------------
 
     def save_monitors(
         self,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         expect_version: int | None = None,
         outbox: DataFrame | pa.Table | None = None,
     ) -> int:
         """Swap the monitors table; when ``outbox`` is given, its rows are
         committed in the SAME pointer flip (sidecar ``_outbox``) — the
         status transitions and the alerts they owe become visible
-        atomically together.
+        atomically together. ``df`` is a user's DataFrame (a Spark write)
+        or the scheduler's merged ``pyarrow.Table`` (a driver write);
+        both go through the same claim, CAS and pointer flip.
 
         Still-undispatched rows from the PREVIOUS version's outbox are
         always carried forward into the new sidecar (union, deduped by

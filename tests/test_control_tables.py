@@ -1,9 +1,11 @@
 """The monitor store's control tables — the alert outbox sidecar, the
-``alert_dispatches`` log and ``job_errors`` — are read and written on the
-driver with pyarrow. These tests pin that the files stay interchangeable
-with Spark's in both directions, that a drain interrupted mid-way
-redelivers only its unsent tail, and that a tick's Spark job count does
-not grow with incident history."""
+``alert_dispatches`` log and ``job_errors`` — and, in the tick, the
+monitors table are read and written on the driver with pyarrow. These
+tests pin that the files stay interchangeable with Spark's in both
+directions, that a drain interrupted mid-way redelivers only its unsent
+tail, that a tick's Spark job count does not grow with incident history
+and is zero when nothing is due, and that a tick releases the evaluation
+it cached."""
 
 from __future__ import annotations
 
@@ -12,6 +14,7 @@ import os
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from rearview_spark.monitors.notify import AlertRouter, CollectingNotifier
 from rearview_spark.monitors.scheduler import MonitorScheduler
@@ -21,7 +24,12 @@ from rearview_spark.monitors.schemas import (
     JOB_ERRORS,
     MONITORS,
 )
-from rearview_spark.monitors.store import JobStore, arrow_rows, arrow_table
+from rearview_spark.monitors.store import (
+    ConcurrentWriteError,
+    JobStore,
+    arrow_rows,
+    arrow_table,
+)
 
 T0 = dt.datetime(2024, 1, 1, 0, 0)
 NOW = T0 + dt.timedelta(minutes=60)
@@ -39,12 +47,28 @@ ERROR_ROWS = [
 ]
 
 
-def _monitor(id, cron="* * * * *"):
-    return (
+def _monitor(id, cron="* * * * *", **cols):
+    row = dict(zip(MONITORS.fieldNames(), (
         id, f"mon{id}", True, None, None, cron, "success", 1,
         [f"email:ops{id}@example.com"], None, 60, f"monitor {id}", 1,
         ["stats.req"], "a.mean() > 100", 60, None, T0, T0,
-    )
+    )))
+    row.update(cols)
+    return tuple(row.values())
+
+
+# null next_run / deleted_at / to_date / alert_keys, empty and
+# multi-element lists, sub-second times; due at NOW: ids 1, 5 and 6
+MONITOR_ROWS = [
+    _monitor(1),
+    _monitor(2, next_run=NOW + US, last_run=T0 + US, to_date=NOW - US,
+             alert_keys=[], metrics=["stats.req", "sumSeries(stats.*)"]),
+    _monitor(3, next_run=NOW, deleted_at=T0 + US, alert_keys=["webhook", "email:x"],
+             metrics=[]),
+    _monitor(4, active=False, next_run=NOW - US, alert_keys=None),
+    _monitor(5, next_run=NOW - US, updated_at=NOW + US),
+    _monitor(6, next_run=NOW),
+]
 
 
 def _metrics(spark, value: float):
@@ -183,3 +207,73 @@ def test_tick_spark_jobs_flat_in_incident_history(spark, tmp_path):
         assert len(errors) == len(seed) + 1  # the tick opened one incident
         assert max(r["id"] for r in errors) == len(seed) + 1
     assert jobs["history"] == jobs["empty"], jobs
+
+
+def test_arrow_written_monitors_read_back_through_spark(spark, tmp_path):
+    st = JobStore(spark, str(tmp_path / "store"))
+    st.save_monitors(arrow_table(MONITOR_ROWS, MONITORS))
+    assert sorted(tuple(r) for r in st.read("monitors").collect()) == MONITOR_ROWS
+    assert st.read_rows("monitors") == sorted(MONITOR_ROWS)
+    path = st.current_version("monitors")[1]
+    assert _ts_types(path, "next_run") == {"timestamp[us, tz=UTC]"}
+
+
+def test_spark_written_monitors_give_the_same_due_list(spark, tmp_path):
+    """A monitors version a user wrote through Spark (INT96 timestamps)
+    yields on the driver the due list Spark's own filter selects."""
+    st = JobStore(spark, str(tmp_path / "store"))
+    st.save_monitors(spark.createDataFrame(MONITOR_ROWS, MONITORS))
+    assert _ts_types(st.current_version("monitors")[1], "next_run") == {"timestamp[ns]"}
+    spark_due = (
+        st.read("monitors")
+        .filter(F.col("active") & F.col("deleted_at").isNull())
+        .filter(F.col("next_run").isNull() | (F.col("next_run") <= F.lit(NOW)))
+        .collect()
+    )
+    due = MonitorScheduler(spark, st, None).due_monitors(NOW)
+    assert sorted(due, key=lambda d: d["id"]) == sorted(
+        (r.asDict() for r in spark_due), key=lambda d: d["id"]
+    )
+    assert sorted(d["id"] for d in due) == [1, 5, 6]
+
+
+def test_tick_with_nothing_due_launches_no_spark_job(spark, tmp_path):
+    """The due list is read on the driver: a tick that finds nothing due
+    (an hourly monitor one minute after it ran) starts no Spark job."""
+    st = JobStore(spark, str(tmp_path / "store"))
+    st.save_monitors(spark.createDataFrame([_monitor(1, cron="0 * * * *")], MONITORS))
+    sched = MonitorScheduler(spark, st, _metrics(spark, 200.0), AlertRouter())
+    assert _tick_jobs(spark, sched, NOW, f"due-{tmp_path.name}") > 0
+    idle = NOW + dt.timedelta(minutes=1)
+    assert _tick_jobs(spark, sched, idle, f"idle-{tmp_path.name}") == 0
+    assert sched.tick(idle) == {"ran": 0, "alerts": 0}
+
+
+class _RacedScheduler(MonitorScheduler):
+    """Moves the monitors table past the tick's snapshot right after the
+    due list is read, when ``race`` is set: the tick then loses its CAS."""
+
+    race = False
+
+    def due_monitors(self, now):
+        due = super().due_monitors(now)
+        if self.race:
+            self.store.save_monitors(self.store.read("monitors"))
+        return due
+
+
+def test_tick_releases_its_cached_evaluation(spark, tmp_path):
+    """Three ticks, the second losing its CAS, leave as many persisted
+    RDDs as there were before them."""
+    st = JobStore(spark, str(tmp_path / "store"))
+    st.save_monitors(spark.createDataFrame([_monitor(1)], MONITORS))
+    sched = _RacedScheduler(spark, st, _metrics(spark, 200.0), AlertRouter())
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    sched.tick(NOW)
+    sched.race = True
+    with pytest.raises(ConcurrentWriteError):
+        sched.tick(NOW + dt.timedelta(minutes=1))
+    sched.race = False
+    assert sched.tick(NOW + dt.timedelta(minutes=2))["ran"] == 1
+    assert persisted().size() == before

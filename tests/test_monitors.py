@@ -336,6 +336,28 @@ def test_scheduler_skips_inactive_and_deleted(spark, store):
     assert sched.tick(NOW)["ran"] == 0
 
 
+def test_bad_later_target_errors_alone(spark, store):
+    """A monitor whose first target compiles and whose second does not
+    gets ``error`` with the target message; a healthy monitor evaluated
+    in the same call keeps its normal status, directly and in a tick."""
+    m = make_metrics(spark, {"stats.req": [200.0] * 61})
+    bad_targets = ["stats.req", "noSuchFn(stats.req)"]
+    specs = [spec(id=1), spec(id=2, metrics=bad_targets)]
+    out = {r["job_id"]: r for r in evaluate_monitors(spark, specs, m, NOW).collect()}
+    assert out[1]["status"] == "failed"
+    assert out[2]["status"] == "error"
+    assert out[2]["message"].startswith("target 'noSuchFn(stats.req)': ")
+    assert out[2]["graph_data"] is None
+
+    rows = [monitor_row(id=1), monitor_row(id=2, metrics=bad_targets)]
+    store.save_monitors(spark.createDataFrame(rows, MONITORS))
+    assert MonitorScheduler(spark, store, m).tick(NOW)["ran"] == 2
+    status = {r["id"]: r["status"] for r in store.read("monitors").collect()}
+    assert status == {1: "failed", 2: "error"}
+    msgs = {r["job_id"]: r["message"] for r in store.read("job_errors").collect()}
+    assert msgs[2] == out[2]["message"]
+
+
 def test_store_versioned_swap_and_cas(spark, store):
     from rearview_spark.monitors.store import ConcurrentWriteError
 
