@@ -48,6 +48,56 @@ def bcast_state(df: DataFrame, n_rows: int | None) -> DataFrame:
     return df
 
 
+def observed_checkpoint(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
+    """Eager ``localCheckpoint`` of ``df`` that also returns scalar
+    aggregates over its rows, computed by the job that fills the
+    checkpoint — ``{name: value}`` for each ``name=aggregate_column``.
+
+    The iterative operators need a driver scalar after almost every
+    checkpoint (an edge count gating the state broadcast, a renorm max,
+    a convergence sum). Taking it with a separate ``agg().collect()``
+    re-reads the checkpoint in its own job, two under AQE when the
+    global aggregate has an exchange. ``Dataset.observe`` computes the
+    same aggregates as the rows stream into the checkpoint, at no extra
+    job.
+
+    Correctness constraints:
+
+    - The observe node sits DIRECTLY under the checkpoint, so its
+      aggregates run in the fill job's final result stage. Spark applies
+      result-stage accumulator updates once per partition even when a
+      task is retried; an aggregate observed in a shuffle-map stage
+      could double-count on a stage retry.
+    - The checkpoint is EAGER: the metrics arrive only when the fill
+      action finishes, and ``Observation.get`` blocks until then.
+    - ``Observation`` objects are single-use, so every call builds a
+      fresh one.
+
+    Aggregates over an empty frame follow SQL: a count is 0, a max or
+    sum is ``None``.
+    """
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    cp = df.observe(
+        obs, *[col.alias(name) for name, col in aggs.items()]
+    ).localCheckpoint(eager=True)
+    return cp, obs.get
+
+
+def warn_not_converged(op: str, cap_name: str, cap: int) -> None:
+    """Warn that a fixed-point loop hit its round cap before a round
+    confirmed convergence — its result may not be the fixed point."""
+    import warnings
+
+    warnings.warn(
+        f"{op}: stopped at {cap_name}={cap} without converging; "
+        "the result may not be the fixed point",
+        RuntimeWarning,
+        stacklevel=3,
+    )
+
+
 #: logical-plan node names whose presence implies the input already went
 #: (or will go) through an Exchange — parallelism is then at least
 #: spark.sql.shuffle.partitions and the small-scan guard is moot.

@@ -42,6 +42,8 @@ from pyspark.sql import functions as F
 
 from rearview_spark.operators._util import bcast_state as _bcast_state
 from rearview_spark.operators._util import ensure_parallelism
+from rearview_spark.operators._util import observed_checkpoint as _observed_checkpoint
+from rearview_spark.operators._util import warn_not_converged
 from rearview_spark.operators.text import normalize_text, tokens
 
 # Fixed, public hash-mixing constants (string salts keep the scheme
@@ -525,6 +527,16 @@ def incremental_minhash_dedup(
     0.7x). The caller guarantees it was built with the SAME
     num_hashes/shingle_n/bands — band keys are positional slices of
     ``sig``, so a mismatch silently matches nothing.
+
+    Invariant (documented, not checked — checking costs an action):
+    ``new_sigs`` must be exactly ``minhash_store_rows(new_docs, …)``,
+    with the SAME id set as ``new_docs``. The retry-hygiene anti-join
+    below excludes store rows by ``new_docs`` ids, while the output
+    rows come from ``new_sigs``. An id only in ``new_sigs`` keeps its
+    own store row on a retry (doubling its bucket occupancy — the
+    decision reversal the anti-join exists to prevent); an id only in
+    ``new_docs`` hides a store row from the batch's matching without
+    emitting a decision for it.
     """
     if new_sigs is None:
         new_sigs = minhash_store_rows(
@@ -1273,58 +1285,45 @@ def connected_components(
     round N's plan does not replay rounds 1..N-1 (the classic iterative-
     DataFrame trap). Label state is 16 bytes/node — billions of nodes fit
     a modest cluster; this is the scalable alternative to collecting the
-    pair graph to the driver."""
+    pair graph to the driver. Stopping at ``max_iter`` before a round
+    confirms the fixed point warns: labels may still be moving."""
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     edges = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=True)
-    labels = (
-        edges.select("src")
-        .distinct()
-        .select(F.col("src").alias("id"), F.col("src").alias("comp"))
-        .localCheckpoint(eager=True)
-    )
-
     # Convergence test: min-propagation only ever DECREASES labels, so the
     # exact sum of labels is strictly monotone until the fixpoint — equal
-    # sums mean no label moved. One tiny aggregate over the checkpointed
-    # frame per round, instead of the label-vs-label shuffle join the
-    # first version paid per round (that join doubled the per-iteration
-    # wall on configuration-scale graphs). decimal(38) keeps the sum
-    # exact at any node count.
-    def _label_sum(df: DataFrame):
-        return df.agg(F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")).collect()[0]["s"]
-
-    # node count rides the same pre-loop aggregate job as the first
-    # convergence sum — it gates the per-round broadcast of the O(nodes)
-    # label frame into the edge join (checkpointed state has no stats,
-    # so the planner would otherwise SMJ and re-shuffle the edge list
-    # every round; _util.bcast_state documents the measurement)
-    first = labels.agg(
-        F.sum(F.col("comp").cast("decimal(38,0)")).alias("s"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    prev_sum, n_nodes = first["s"], first["n"]
+    # sums mean no label moved. decimal(38) keeps the sum exact at any
+    # node count. Every sum (and the node count gating the per-round
+    # broadcast of the O(nodes) label frame into the edge join — see
+    # _util.bcast_state) is observed by the job that fills the label
+    # checkpoint, so a round costs no job beyond its propagation.
+    label_sum = F.sum(F.col("comp").cast("decimal(38,0)"))
+    labels, obs = _observed_checkpoint(
+        edges.select("src")
+        .distinct()
+        .select(F.col("src").alias("id"), F.col("src").alias("comp")),
+        s=label_sum,
+        n=F.count(F.lit(1)),
+    )
+    prev_sum, n_nodes = obs["s"], obs["n"]
     for _ in range(max_iter):
         lb = _bcast_state(labels, n_nodes)
         neighbor_min = (
             edges.join(lb, edges.dst == lb.id)
             .select(F.col("src").alias("id"), "comp")
         )
-        # LAZY checkpoint (r16): the convergence-sum collect right
-        # below materializes it, so each round schedules ONE job
-        # (propagation + checkpoint-fill + node-scale sum) instead of
-        # an eager checkpoint job followed by a separate sum job.
-        labels = (
+        labels, obs = _observed_checkpoint(
             labels.unionByName(neighbor_min)
             .groupBy("id")
-            .agg(F.min("comp").alias("comp"))
-            .localCheckpoint(eager=False)
+            .agg(F.min("comp").alias("comp")),
+            s=label_sum,
         )
-        cur_sum = _label_sum(labels)
-        if cur_sum == prev_sum:
+        if obs["s"] == prev_sum:
             break
-        prev_sum = cur_sum
+        prev_sum = obs["s"]
+    else:
+        warn_not_converged("connected_components", "max_iter", max_iter)
     return labels.select(F.col("id"), F.col("comp").alias("component"))
 
 

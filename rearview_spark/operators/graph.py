@@ -47,8 +47,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rearview_spark.operators._util import bcast_state as _bcast_state
+from rearview_spark.operators._util import observed_checkpoint as _observed_checkpoint
+from rearview_spark.operators._util import warn_not_converged
 
 PAGERANK_SCALE = 10**12
+
+
+def _edges_by_src(edges: DataFrame) -> tuple[DataFrame, int]:
+    """Edges repartitioned by ``src``, checkpointed, and their row count."""
+    ew, obs = _observed_checkpoint(edges.repartition("src"), m=F.count(F.lit(1)))
+    return ew, obs["m"]
 
 
 def pagerank(
@@ -76,8 +84,8 @@ def pagerank(
     Returns ``(node, rank_fp, rank)`` — ``rank_fp`` the bigint
     fixed-point rank, ``rank`` its single-division double projection.
 
-    Driver-side scalars: one ``count()`` for n (node count — the same
-    "scalar aggregate" class as the PQ codebook fits). The edge list is
+    Driver-side scalar: the node count n, observed by the job that
+    fills the node checkpoint (no job of its own). The edge list is
     repartitioned by ``src`` and locally checkpointed ONCE; at real
     scale swap ``localCheckpoint`` for a reliable checkpoint dir.
     """
@@ -87,8 +95,10 @@ def pagerank(
         .repartition("src")
         .localCheckpoint(eager=True)
     )
-    nodes = ew.select(F.col("src").alias("node")).distinct().localCheckpoint(eager=True)
-    n = nodes.count()
+    nodes, obs = _observed_checkpoint(
+        ew.select(F.col("src").alias("node")).distinct(), n=F.count(F.lit(1))
+    )
+    n = obs["n"]
     if n == 0:
         return nodes.select(
             "node",
@@ -154,22 +164,23 @@ def personalized_pagerank(
     Unlike uniform PageRank the mass is not conserved toward 1 — rank
     decays with distance from the seeds, which is the point. Same scale
     shape as :func:`pagerank`: edge list repartitioned + checkpointed
-    once, per-iteration broadcast-sized rank join + right-outer to the
-    node frame, driver-side scalar for s."""
+    once, per-iteration broadcast-sized rank join, s observed by the
+    job that fills the node checkpoint."""
     deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     ew = edges.join(deg, "src").repartition("src").localCheckpoint(eager=True)
     sflag = seeds.select("node").distinct().withColumn("_seed", F.lit(1))
-    nodes = (
+    nodes, obs = _observed_checkpoint(
         ew.select(F.col("src").alias("node"))
         .distinct()
         .join(sflag, "node", "left")
-        .select("node", F.coalesce(F.col("_seed"), F.lit(0)).alias("_seed"))
-        .localCheckpoint(eager=True)
+        .select("node", F.coalesce(F.col("_seed"), F.lit(0)).alias("_seed")),
+        s=F.sum("_seed"),
+        n=F.count(F.lit(1)),
     )
-    s = nodes.agg(F.sum("_seed")).collect()[0][0] or 0
+    s = obs["s"] or 0
     if s == 0:
         raise ValueError("personalized_pagerank: no seed appears in the graph")
-    n = nodes.count()  # cheap: nodes is an eager checkpoint
+    n = obs["n"]
     base = ((damping_den - damping_num) * scale) // (damping_den * s)
     ranks = nodes.select(
         "node",
@@ -398,11 +409,9 @@ def label_propagation(edges: DataFrame, iterations: int = 4) -> DataFrame:
     Per-iteration ``localCheckpoint`` bounds lineage exactly as in
     :func:`pagerank` (same reliable-checkpoint swap at deployment).
     """
-    ew = edges.repartition("src").localCheckpoint(eager=True)
-    # edge-row count bounds the node count (every node appears as src),
-    # and counting the materialized checkpoint is one cheap job — an
-    # exact-enough driver scalar to gate the per-iteration broadcast
-    m = ew.count()
+    # edge-row count bounds the node count (every node appears as src):
+    # an exact-enough driver scalar to gate the per-iteration broadcast
+    ew, m = _edges_by_src(edges)
     labels = (
         ew.select(F.col("src").alias("node"))
         .distinct()
@@ -443,18 +452,17 @@ def k_core(edges: DataFrame, k: int, max_rounds: int = 8) -> DataFrame:
 
     Scale shape per round: one out-degree hash aggregate (map-side
     combined) + two semi-joins of the current edge list against the
-    O(survivors) keep-list. The edge frame shrinks monotonically; a
-    driver-side count per round (the documented scalar-aggregate
-    class) detects the fixed point and stops. ``max_rounds`` bounds
-    the worst case — degeneracy-ordered graphs need O(peel depth)
-    rounds, and each round is a full parallel sweep, not per-node
-    work.
+    O(survivors) keep-list. The edge frame shrinks monotonically; the
+    edge count observed by each round's checkpoint-fill job detects
+    the fixed point and stops. ``max_rounds`` bounds the worst case —
+    degeneracy-ordered graphs need O(peel depth) rounds, and each
+    round is a full parallel sweep, not per-node work. Stopping at
+    ``max_rounds`` before a round confirms the fixed point warns.
 
     Returns ``(node, core_degree)`` — survivors with their degree
     inside the core.
     """
-    cur = edges.repartition("src").localCheckpoint(eager=True)
-    prev_edges = cur.count()
+    cur, prev_edges = _edges_by_src(edges)
     for _ in range(max_rounds):
         keep = (
             cur.groupBy("src")
@@ -465,21 +473,21 @@ def k_core(edges: DataFrame, k: int, max_rounds: int = 8) -> DataFrame:
         # keep-list rows <= distinct src <= current edge count, a
         # driver scalar this loop already maintains — broadcast the
         # semi-join probe side while that bound fits
-        cur = (
-            cur.join(_bcast_state(keep, prev_edges), "src", "left_semi")
-            .join(
+        cur, obs = _observed_checkpoint(
+            cur.join(_bcast_state(keep, prev_edges), "src", "left_semi").join(
                 _bcast_state(
                     keep.select(F.col("src").alias("dst")), prev_edges
                 ),
                 "dst",
                 "left_semi",
-            )
-            .localCheckpoint(eager=True)
+            ),
+            m=F.count(F.lit(1)),
         )
-        now = cur.count()
-        if now == prev_edges:
+        if obs["m"] == prev_edges:
             break
-        prev_edges = now
+        prev_edges = obs["m"]
+    else:
+        warn_not_converged("k_core", "max_rounds", max_rounds)
     return (
         cur.groupBy("src")
         .agg(F.count("*").alias("core_degree"))
@@ -601,7 +609,6 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int = 6) -> DataFrame
 
     Returns ``(node, hops)`` for reached nodes only (seeds at 0).
     """
-    ew = edges.repartition("src").localCheckpoint(eager=True)
     # reached-set rows <= nodes <= edge rows HOLDS under the module's
     # symmetric-edges contract (every node appears as a src; undirected
     # callers emit both directions). On a raw directed list, dst-only
@@ -609,7 +616,7 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int = 6) -> DataFrame
     # still far under Spark's 8 GB broadcast cap at the guard default,
     # but bound with distinct src+dst if this is ever exposed to
     # unsymmetrized input (ADVICE r16).
-    m = ew.count()
+    ew, m = _edges_by_src(edges)
     in_graph = ew.select(F.col("src").alias("node")).distinct()
     dist = (
         seeds.select("node")
@@ -667,22 +674,20 @@ def hits(
     Scale shape per iteration: two equi-joins of the checkpointed edge
     list against O(nodes) score frames (each on its own join key: dst
     for authorities, src for hubs) + two map-side-combined hash
-    aggregates; the two renorm maxima are one-row driver scalars (the
-    PageRank-n class), NOT partition-less windows — the plan stays
-    sweep-clean. Returns ``(node, hub_fp, hub, auth_fp, auth)`` with
-    zeros for roles a node never plays (a pure source has no authority;
-    a pure sink no hubness).
+    aggregates; the two renorm maxima are observed by the jobs that
+    fill the score checkpoints, NOT partition-less windows — the plan
+    stays sweep-clean. Returns ``(node, hub_fp, hub, auth_fp, auth)``
+    with zeros for roles a node never plays (a pure source has no
+    authority; a pure sink no hubness).
     """
     if iterations < 1:
         raise ValueError(
             "hits: iterations must be >= 1 (authority scores only exist "
             "after the first propagation step)"
         )
-    ew = edges.repartition("src").localCheckpoint(eager=True)
-    # hub/authority state is O(src nodes)/O(dst nodes) <= edge rows;
-    # one cheap count over the materialized checkpoint bounds every
-    # renorm round's broadcast decision (see _bcast_state)
-    m = ew.count()
+    # hub/authority state is O(src nodes)/O(dst nodes) <= edge rows, so
+    # m bounds every renorm round's broadcast decision (_bcast_state)
+    ew, m = _edges_by_src(edges)
     srcs = ew.select(F.col("src").alias("node")).distinct()
     dsts = ew.select(F.col("dst").alias("node")).distinct()
     h = srcs.select("node", F.lit(scale).cast("long").alias("h")).localCheckpoint(
@@ -690,21 +695,16 @@ def hits(
     )
 
     def _renorm(df: DataFrame, col: str) -> DataFrame:
-        # Checkpoint the AGGREGATE, then take the max off the
-        # materialized rows: the edge-score join lineage is scanned
-        # once per renorm, not twice (the r13 bench read the two-scan
-        # form at 10.8 s — this halves per-iteration join work; the
-        # division itself rides lazily as a projection over the
-        # checkpointed frame, identical numbers). The checkpoint is
-        # LAZY (r16): the max collect right below materializes it, so
-        # each renorm schedules ONE job (checkpoint-fill + node-scale
-        # max) instead of two back-to-back.
-        df = df.localCheckpoint(eager=False)
-        m = df.agg(F.max(col)).collect()[0][0]
-        if not m:
+        # Checkpoint the AGGREGATE and observe its max in the same
+        # fill job: the edge-score join lineage is scanned once per
+        # renorm, and the max costs no job of its own. The division
+        # rides lazily as a projection over the checkpointed frame.
+        df, obs = _observed_checkpoint(df, mx=F.max(col))
+        mx = obs["mx"]
+        if not mx:
             raise ValueError("hits: score mass vanished (empty graph?)")
         return df.select(
-            "node", F.expr(f"({col} * {scale}) div {m}").alias(col)
+            "node", F.expr(f"({col} * {scale}) div {mx}").alias(col)
         )
 
     a = None
@@ -982,9 +982,8 @@ def shortest_paths(
             "shortest_paths: negative edge weights are out of contract "
             "(bounded-round relaxation assumes non-negative costs)"
         )
-    ew = edges.repartition("src").localCheckpoint(eager=True)
     # same broadcast bound as bfs_hops: reached <= nodes <= edge rows
-    m = ew.count()
+    ew, m = _edges_by_src(edges)
     in_graph = ew.select(F.col("src").alias("node")).distinct()
     dist = (
         seeds.select("node")

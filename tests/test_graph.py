@@ -416,3 +416,61 @@ def test_shortest_paths_weighted_vs_round_bound(spark):
     neg = spark.createDataFrame([(1, 2, -1), (2, 1, -1)], "src bigint, dst bigint, w bigint")
     with pytest.raises(ValueError, match="negative"):
         shortest_paths(neg, seeds)
+
+
+def test_hits_iteration_costs_six_jobs(spark, count_jobs):
+    """Each HITS iteration launches 6 jobs: per renorm, the score
+    broadcast, the join/partial-agg shuffle map and the checkpoint fill,
+    which also yields the renorm max."""
+    from rearview_spark.operators.graph import hits
+
+    df = spark.createDataFrame([(0, 1), (2, 1), (4, 1), (0, 3)], "src bigint, dst bigint")
+    _, two = count_jobs(lambda: hits(df, 2).collect())
+    _, three = count_jobs(lambda: hits(df, 3).collect())
+    assert three - two == 6
+
+
+def test_connected_components_round_costs_three_jobs(spark, count_jobs):
+    """Each propagation round launches 3 jobs: the label broadcast, the
+    shuffle map and the checkpoint fill, which also yields the
+    convergence sum."""
+    import warnings
+
+    from rearview_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(8)], "id_a bigint, id_b bigint"
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", RuntimeWarning)
+        _, one = count_jobs(lambda: connected_components(pairs, max_iter=1).collect())
+        _, two = count_jobs(lambda: connected_components(pairs, max_iter=2).collect())
+    assert two - one == 3
+
+
+def test_fixed_points_warn_when_stopped_unconverged(spark):
+    """A 9-node path needs more than 3 rounds: connected_components at
+    max_iter=3 and k_core at max_rounds=3 both warn. A triangle
+    converges within the default caps and neither warns."""
+    import warnings
+
+    from rearview_spark.operators.dedup import connected_components
+
+    path = [(i, i + 1) for i in range(8)]
+    pairs = spark.createDataFrame(path, "id_a bigint, id_b bigint")
+    with pytest.warns(RuntimeWarning, match=r"connected_components: .*max_iter=3"):
+        got = connected_components(pairs, max_iter=3).collect()
+    assert len({r["component"] for r in got}) > 1
+    # a 2-core peel of a path removes one end node per side per round
+    edges = spark.createDataFrame(_sym(path), "src bigint, dst bigint")
+    with pytest.warns(RuntimeWarning, match=r"k_core: .*max_rounds=3"):
+        assert k_core(edges, k=2, max_rounds=3).count() > 0
+    tri = [(0, 1), (1, 2), (0, 2)]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        got = connected_components(
+            spark.createDataFrame(tri, "id_a bigint, id_b bigint")
+        ).collect()
+        assert {r["component"] for r in got} == {0}
+        tri_edges = spark.createDataFrame(_sym(tri), "src bigint, dst bigint")
+        assert k_core(tri_edges, k=2).count() == 3

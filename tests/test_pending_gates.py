@@ -49,3 +49,15 @@ def test_lttb_gate_decimates(spark):
 
     sdf = QUERIES["ts_lttb_downsample"]["fn"](spark, SF_DIR).toPandas()
     assert 0 < len(sdf) < 3385  # 20 points per big series
+
+
+def test_oracle_check_resolves_pending_and_rejects_unknown_names():
+    """A named gate is looked up in the live and pending registries; a
+    name in neither is reported, never silently dropped."""
+    import oracle_check as oc
+
+    live = next(iter(sorted(oc.resolve([])[0])))
+    names = [live, *sorted(_pending())[:1], "no_such_gate"]
+    gates, unknown = oc.resolve(names)
+    assert sorted(gates) == sorted(names[:-1])
+    assert unknown == ["no_such_gate"]

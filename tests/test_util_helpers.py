@@ -250,3 +250,51 @@ def test_global_running_sums_multi_column(spark):
         global_running_sums(df, ["k"], ["a"], ["x", "y"])
     with pytest.raises(ValueError):
         global_running_sums(df, ["k"], ["a"], ["a"])  # clashes with input
+
+
+def test_observed_checkpoint_scalars_match_separate_agg(spark):
+    """The observed scalars equal a separate agg().collect() over the
+    same rows, and the returned frame holds those rows."""
+    from pyspark.sql import functions as F
+
+    from rearview_spark.operators._util import observed_checkpoint
+
+    df = spark.range(200).select(
+        (F.col("id") % 17).alias("k"), (F.col("id") * 3).alias("v")
+    ).groupBy("k").agg(F.sum("v").alias("v"))
+    cp, got = observed_checkpoint(
+        df, n=F.count(F.lit(1)), mx=F.max("v"), s=F.sum("v")
+    )
+    want = df.agg(
+        F.count(F.lit(1)).alias("n"), F.max("v").alias("mx"), F.sum("v").alias("s")
+    ).collect()[0].asDict()
+    assert got == want
+    assert sorted(map(tuple, cp.collect())) == sorted(map(tuple, df.collect()))
+
+
+def test_observed_checkpoint_empty_frame(spark):
+    from pyspark.sql import functions as F
+
+    from rearview_spark.operators._util import observed_checkpoint
+
+    df = spark.createDataFrame([], "v bigint")
+    cp, got = observed_checkpoint(df, n=F.count(F.lit(1)), mx=F.max("v"))
+    assert got == {"n": 0, "mx": None}
+    assert cp.count() == 0
+
+
+def test_observed_checkpoint_launches_one_job(spark, count_jobs):
+    """Over an input whose shuffle already ran (a checkpointed,
+    repartitioned frame), the fill job alone yields the scalars."""
+    from pyspark.sql import functions as F
+
+    from rearview_spark.operators._util import observed_checkpoint
+
+    pre = spark.range(100).repartition(4, "id").localCheckpoint(eager=True)
+    (_, got), jobs = count_jobs(
+        lambda: observed_checkpoint(
+            pre.select((F.col("id") * 2).alias("v")), mx=F.max("v")
+        )
+    )
+    assert got == {"mx": 198}
+    assert jobs == 1

@@ -22,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from rearview_spark.operators._util import observed_checkpoint
 from rearview_spark.operators.dedup import _bcast_state
 from rearview_spark.operators.joins import sorted_neighborhood_pairs
 from rearview_spark.plans.relational import Tables
@@ -34,36 +35,31 @@ def cc_count_rounds(pairs, id_a="id_a", id_b="id_b", max_iter=25):
     edges = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=True)
-    labels = (
+    label_sum = F.sum(F.col("comp").cast("decimal(38,0)"))
+    labels, obs = observed_checkpoint(
         edges.select("src")
         .distinct()
-        .select(F.col("src").alias("id"), F.col("src").alias("comp"))
-        .localCheckpoint(eager=True)
+        .select(F.col("src").alias("id"), F.col("src").alias("comp")),
+        s=label_sum,
+        n=F.count(F.lit(1)),
     )
-    first = labels.agg(
-        F.sum(F.col("comp").cast("decimal(38,0)")).alias("s"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    prev_sum, n_nodes = first["s"], first["n"]
+    prev_sum, n_nodes = obs["s"], obs["n"]
     rounds = 0
     for _ in range(max_iter):
         lb = _bcast_state(labels, n_nodes)
         neighbor_min = edges.join(lb, edges.dst == lb.id).select(
             F.col("src").alias("id"), "comp"
         )
-        labels = (
+        labels, obs = observed_checkpoint(
             labels.unionByName(neighbor_min)
             .groupBy("id")
-            .agg(F.min("comp").alias("comp"))
-            .localCheckpoint(eager=False)
+            .agg(F.min("comp").alias("comp")),
+            s=label_sum,
         )
-        cur_sum = labels.agg(
-            F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
         rounds += 1
-        if cur_sum == prev_sum:
+        if obs["s"] == prev_sum:
             break
-        prev_sum = cur_sum
+        prev_sum = obs["s"]
     return rounds, n_nodes
 
 

@@ -3,6 +3,9 @@ entry on Spark and its oracle_sql() on DuckDB over the same parquet dir,
 compare row counts + column names + values (order-insensitive).
 
 Usage: python tools/oracle_check.py [sf_dir] [query_name ...]
+
+Named queries may be live or pending (staged, not yet registered); a
+name found in neither registry exits 1 before anything runs.
 """
 
 from __future__ import annotations
@@ -133,19 +136,32 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
     return problems
 
 
+def resolve(names: list[str]) -> tuple[dict, list[str]]:
+    """``(gates, unknown)``: every live gate when ``names`` is empty,
+    else each named gate looked up in the live registry, then the
+    pending one; ``unknown`` lists the names found in neither."""
+    from rearview_spark.plans import all_pending, all_queries
+
+    live = all_queries()
+    if not names:
+        return live, []
+    known = {**all_pending(), **live}
+    gates = {n: known[n] for n in names if n in known}
+    return gates, sorted(set(names) - gates.keys())
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-
-    from rearview_spark.plans import all_queries
+    gates, unknown = resolve(sys.argv[2:])
+    if unknown:
+        print(f"unknown gate name(s), neither live nor pending: {unknown}")
+        return 1
 
     spark = get_spark("oracle_check")
     con = duck_con(sf_dir)
 
     failed = []
-    for name, spec in sorted(all_queries().items()):
-        if only and name not in only:
-            continue
+    for name, spec in sorted(gates.items()):
         try:
             sdf = spec["fn"](spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
