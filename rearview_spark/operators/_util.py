@@ -74,10 +74,14 @@ def observed_checkpoint(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
       fresh one.
 
     Aggregates over an empty frame follow SQL: a count is 0, a max or
-    sum is ``None``.
+    sum is ``None``. With no aggregates this is a plain eager
+    checkpoint and the dict is empty (``Dataset.observe`` rejects an
+    empty list).
     """
     from pyspark.sql import Observation
 
+    if not aggs:
+        return df.localCheckpoint(eager=True), {}
     obs = Observation()
     cp = df.observe(
         obs, *[col.alias(name) for name, col in aggs.items()]
@@ -85,17 +89,63 @@ def observed_checkpoint(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
     return cp, obs.get
 
 
-def warn_not_converged(op: str, cap_name: str, cap: int) -> None:
-    """Warn that a fixed-point loop hit its round cap before a round
-    confirmed convergence — its result may not be the fixed point."""
+def fixed_point(
+    state: DataFrame,
+    step,
+    rounds: int,
+    *,
+    obs: dict | None = None,
+    converge_on: str | None = None,
+    op: str = "fixed_point",
+    cap_name: str = "rounds",
+    **observe,
+) -> DataFrame:
+    """Iterate ``state = step(state, obs)`` for at most ``rounds`` rounds
+    and return the last state. ``step`` builds the next round's frame
+    lazily; this loop owns everything around it.
+
+    Checkpoint policy (the one place it is stated): every round's frame
+    is cut from its lineage by an eager ``localCheckpoint``, so round N
+    never replays rounds 1..N-1 and the fill job is the round's only
+    action. A local checkpoint keeps its blocks on the executors that
+    wrote them; losing one mid-loop fails the job rather than
+    recomputing the lost round. A deployment that must survive executor
+    loss swaps the ``localCheckpoint`` in :func:`observed_checkpoint`,
+    which every round goes through, for a reliable ``checkpoint`` into
+    a checkpoint directory — no operator holds its own copy of the
+    policy.
+
+    Observations: each ``name=aggregate_column`` in ``observe`` is
+    computed by the job that fills the round's checkpoint
+    (:func:`observed_checkpoint`) and handed to the NEXT round's
+    ``step`` as ``obs`` — the first round gets the ``obs`` passed in.
+    With no ``observe`` aggregates the round is a plain eager
+    checkpoint and ``obs`` passes through unchanged.
+
+    Convergence: with ``converge_on`` (a key of ``observe``), the loop
+    stops after the first round whose observed scalar equals the
+    previous one, seeded from ``obs`` — an input already at its fixed
+    point costs one round. Running out of rounds before such a round
+    warns (``RuntimeWarning`` naming ``op`` and ``cap_name``), pointed
+    at the operator's caller. Without ``converge_on``, ``rounds`` is a
+    fixed round count and nothing warns.
+    """
     import warnings
 
-    warnings.warn(
-        f"{op}: stopped at {cap_name}={cap} without converging; "
-        "the result may not be the fixed point",
-        RuntimeWarning,
-        stacklevel=3,
-    )
+    for _ in range(rounds):
+        state, new = observed_checkpoint(step(state, obs), **observe)
+        if converge_on is not None and new[converge_on] == obs[converge_on]:
+            return state
+        if observe:
+            obs = new
+    if converge_on is not None:
+        warnings.warn(
+            f"{op}: stopped at {cap_name}={rounds} without converging; "
+            "the result may not be the fixed point",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+    return state
 
 
 #: logical-plan node names whose presence implies the input already went
@@ -215,8 +265,8 @@ def global_row_number(
          eager ``localCheckpoint``) so the two downstream jobs — the
          P-row count collect and the final window — see the SAME
          placement (the range partitioner re-samples per job otherwise;
-         at deployment scale swap for a reliable ``checkpoint``, same
-         boundary as graph.py's iteration notes);
+         at deployment scale swap for a reliable ``checkpoint``, the
+         same boundary :func:`fixed_point` states);
       3. per-partition ``row_number`` (WindowExec PARTITIONED by the
          frozen partition id — P parallel sorts of ~n/P rows each);
       4. add each partition's prefix offset, computed from a P-row

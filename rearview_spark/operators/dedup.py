@@ -41,9 +41,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from rearview_spark.operators._util import bcast_state as _bcast_state
-from rearview_spark.operators._util import ensure_parallelism
+from rearview_spark.operators._util import ensure_parallelism, fixed_point
 from rearview_spark.operators._util import observed_checkpoint as _observed_checkpoint
-from rearview_spark.operators._util import warn_not_converged
 from rearview_spark.operators.text import normalize_text, tokens
 
 # Fixed, public hash-mixing constants (string salts keep the scheme
@@ -1281,9 +1280,7 @@ def connected_components(
     of its own label and its neighbors' labels — converges in O(graph
     diameter) rounds (dup clusters are shallow; a handful of rounds in
     practice, bounded by ``max_iter``). Each round is one shuffle-join +
-    one aggregate; ``localCheckpoint`` truncates the growing lineage so
-    round N's plan does not replay rounds 1..N-1 (the classic iterative-
-    DataFrame trap). Label state is 16 bytes/node — billions of nodes fit
+    one aggregate. Label state is 16 bytes/node — billions of nodes fit
     a modest cluster; this is the scalable alternative to collecting the
     pair graph to the driver. Stopping at ``max_iter`` before a round
     confirms the fixed point warns: labels may still be moving."""
@@ -1306,24 +1303,30 @@ def connected_components(
         s=label_sum,
         n=F.count(F.lit(1)),
     )
-    prev_sum, n_nodes = obs["s"], obs["n"]
-    for _ in range(max_iter):
+    n_nodes = obs["n"]
+
+    def step(labels: DataFrame, _) -> DataFrame:
         lb = _bcast_state(labels, n_nodes)
         neighbor_min = (
             edges.join(lb, edges.dst == lb.id)
             .select(F.col("src").alias("id"), "comp")
         )
-        labels, obs = _observed_checkpoint(
+        return (
             labels.unionByName(neighbor_min)
             .groupBy("id")
-            .agg(F.min("comp").alias("comp")),
-            s=label_sum,
+            .agg(F.min("comp").alias("comp"))
         )
-        if obs["s"] == prev_sum:
-            break
-        prev_sum = obs["s"]
-    else:
-        warn_not_converged("connected_components", "max_iter", max_iter)
+
+    labels = fixed_point(
+        labels,
+        step,
+        max_iter,
+        obs=obs,
+        converge_on="s",
+        op="connected_components",
+        cap_name="max_iter",
+        s=label_sum,
+    )
     return labels.select(F.col("id"), F.col("comp").alias("component"))
 
 

@@ -47,16 +47,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rearview_spark.operators._util import bcast_state as _bcast_state
+from rearview_spark.operators._util import fixed_point
 from rearview_spark.operators._util import observed_checkpoint as _observed_checkpoint
-from rearview_spark.operators._util import warn_not_converged
 
 PAGERANK_SCALE = 10**12
 
 
-def _edges_by_src(edges: DataFrame) -> tuple[DataFrame, int]:
-    """Edges repartitioned by ``src``, checkpointed, and their row count."""
-    ew, obs = _observed_checkpoint(edges.repartition("src"), m=F.count(F.lit(1)))
-    return ew, obs["m"]
+def _edges_by_src(edges: DataFrame, **checks) -> tuple[DataFrame, dict]:
+    """Edges repartitioned by ``src`` and checkpointed, with their row
+    count ``m`` and any ``checks`` aggregates observed by the fill job."""
+    return _observed_checkpoint(
+        edges.repartition("src"), m=F.count(F.lit(1)), **checks
+    )
 
 
 def pagerank(
@@ -72,7 +74,7 @@ def pagerank(
     Every node must appear as a ``src`` at least once (callers using an
     undirected relationship emit both directions, which guarantees it);
     nodes that receive no contributions in an iteration still get the
-    teleport base via the right-outer node join.
+    teleport base.
 
     Recurrence (all bigint):
 
@@ -81,61 +83,15 @@ def pagerank(
                      + sum over in-edges (u,v) of
                        (num * r_t(u)) div (den * outdeg(u))
 
+    This is :func:`personalized_pagerank` with every node a seed, and
+    runs the same core. Off contract, a dst-only node also gets the
+    teleport base (personalized PageRank gives it its contributions
+    only).
+
     Returns ``(node, rank_fp, rank)`` — ``rank_fp`` the bigint
     fixed-point rank, ``rank`` its single-division double projection.
-
-    Driver-side scalar: the node count n, observed by the job that
-    fills the node checkpoint (no job of its own). The edge list is
-    repartitioned by ``src`` and locally checkpointed ONCE; at real
-    scale swap ``localCheckpoint`` for a reliable checkpoint dir.
     """
-    deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    ew = (
-        edges.join(deg, "src")
-        .repartition("src")
-        .localCheckpoint(eager=True)
-    )
-    nodes, obs = _observed_checkpoint(
-        ew.select(F.col("src").alias("node")).distinct(), n=F.count(F.lit(1))
-    )
-    n = obs["n"]
-    if n == 0:
-        return nodes.select(
-            "node",
-            F.lit(0).cast("long").alias("rank_fp"),
-            F.lit(0.0).alias("rank"),
-        )
-    base = ((damping_den - damping_num) * scale) // (damping_den * n)
-    ranks = nodes.select("node", F.lit(scale // n).cast("long").alias("r"))
-    for _ in range(iterations):
-        # n is exact and driver-side: broadcast the O(nodes) rank frame
-        # into the edge join while it fits (see _bcast_state) so the
-        # checkpointed edge list is never re-shuffled per iteration.
-        ranks = _bcast_state(ranks, n)
-        contrib = ew.join(ranks, ew["src"] == ranks["node"]).select(
-            F.col("dst").alias("node"),
-            F.expr(f"({damping_num} * r) div ({damping_den} * outdeg)").alias("c"),
-        )
-        # zero-contribution nodes get the teleport base via a UNION of
-        # zero rows into the SAME aggregation (r16) — sum over
-        # {contribs, one 0} == coalesce(sum(contribs), 0) exactly
-        # (bigint), so the per-iteration right-outer node join (an
-        # extra broadcast + join stage per iteration) disappears; the
-        # union rides into the existing groupBy exchange.
-        ranks = (
-            contrib.unionByName(
-                nodes.select("node", F.lit(0).cast("long").alias("c"))
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("s"))
-            .select("node", (F.lit(base) + F.col("s")).alias("r"))
-            .localCheckpoint(eager=True)
-        )
-    return ranks.select(
-        "node",
-        F.col("r").alias("rank_fp"),
-        (F.col("r") / F.lit(float(scale))).alias("rank"),
-    )
+    return _seeded_rank(edges, None, iterations, damping_num, damping_den, scale)
 
 
 def personalized_pagerank(
@@ -162,25 +118,51 @@ def personalized_pagerank(
     with s = |seeds present in the graph| (off-graph seeds are ignored
     on BOTH engines — proximity to a node with no edges is undefined).
     Unlike uniform PageRank the mass is not conserved toward 1 — rank
-    decays with distance from the seeds, which is the point. Same scale
-    shape as :func:`pagerank`: edge list repartitioned + checkpointed
-    once, per-iteration broadcast-sized rank join, s observed by the
-    job that fills the node checkpoint."""
+    decays with distance from the seeds, which is the point."""
+    return _seeded_rank(edges, seeds, iterations, damping_num, damping_den, scale)
+
+
+def _seeded_rank(
+    edges: DataFrame,
+    seeds: DataFrame | None,
+    iterations: int,
+    damping_num: int,
+    damping_den: int,
+    scale: int,
+) -> DataFrame:
+    """The rank recurrence behind :func:`pagerank` (``seeds`` None:
+    every node is a seed) and :func:`personalized_pagerank`.
+
+    Scale shape: the edge list is joined to its out-degrees,
+    repartitioned by ``src`` and checkpointed ONCE; each iteration is
+    one partition-local join against the O(nodes) rank frame —
+    broadcast while the node count n fits (see ``_bcast_state``), so
+    the edge list is never re-shuffled — plus one dst-keyed aggregate.
+    Driver scalars: the seed count s and node count n, observed by the
+    job that fills the node checkpoint (no job of their own)."""
     deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     ew = edges.join(deg, "src").repartition("src").localCheckpoint(eager=True)
-    sflag = seeds.select("node").distinct().withColumn("_seed", F.lit(1))
+    nodes = ew.select(F.col("src").alias("node")).distinct()
+    if seeds is None:
+        flagged, contrib_seed = nodes.withColumn("_seed", F.lit(1)), F.lit(1)
+    else:
+        sflag = seeds.select("node").distinct().withColumn("_seed", F.lit(1))
+        flagged = nodes.join(sflag, "node", "left").select(
+            "node", F.coalesce(F.col("_seed"), F.lit(0)).alias("_seed")
+        )
+        contrib_seed = F.lit(None)
     nodes, obs = _observed_checkpoint(
-        ew.select(F.col("src").alias("node"))
-        .distinct()
-        .join(sflag, "node", "left")
-        .select("node", F.coalesce(F.col("_seed"), F.lit(0)).alias("_seed")),
-        s=F.sum("_seed"),
-        n=F.count(F.lit(1)),
+        flagged, s=F.sum("_seed"), n=F.count(F.lit(1))
     )
-    s = obs["s"] or 0
+    s, n = obs["s"] or 0, obs["n"]
     if s == 0:
-        raise ValueError("personalized_pagerank: no seed appears in the graph")
-    n = obs["n"]
+        if seeds is not None:
+            raise ValueError("personalized_pagerank: no seed appears in the graph")
+        return nodes.select(
+            "node",
+            F.lit(0).cast("long").alias("rank_fp"),
+            F.lit(0.0).alias("rank"),
+        )
     base = ((damping_den - damping_num) * scale) // (damping_den * s)
     ranks = nodes.select(
         "node",
@@ -189,25 +171,22 @@ def personalized_pagerank(
         .cast("long")
         .alias("r"),
     )
-    for _ in range(iterations):
-        # rank frame is O(nodes) with n exact — broadcast while it
-        # fits, same as pagerank (see _bcast_state)
-        ranks = _bcast_state(ranks, n)
-        contrib = ew.join(ranks, ew["src"] == ranks["node"]).select(
+
+    def step(ranks: DataFrame, _) -> DataFrame:
+        rb = _bcast_state(ranks, n)
+        contrib = ew.join(rb, ew["src"] == rb["node"]).select(
             F.col("dst").alias("node"),
+            contrib_seed.cast("int").alias("_seed"),
             F.expr(f"({damping_num} * r) div ({damping_den} * outdeg)").alias("c"),
         )
-        # same union-of-zero-rows shape as pagerank (r16): every node
-        # contributes exactly one zero row carrying its seed flag
-        # (contrib rows carry NULL), so max(_seed) recovers the flag in
-        # the SAME aggregation — sum over {contribs, one 0} ==
-        # coalesce(sum(contribs), 0) exactly (bigint) and the per-
-        # iteration right-outer node join stage disappears.
-        ranks = (
-            contrib.select(
-                "node", F.lit(None).cast("int").alias("_seed"), "c"
-            )
-            .unionByName(
+        # Every node adds one zero row carrying its seed flag, so one
+        # aggregation yields both the flag (max) and the contribution
+        # sum: sum over {contribs, one 0} == coalesce(sum(contribs), 0)
+        # exactly (bigint), with no per-iteration node join. Contribution
+        # rows carry the uniform flag (1) or NULL, which decides whether
+        # an off-contract dst-only node gets the teleport base.
+        return (
+            contrib.unionByName(
                 nodes.select("node", "_seed", F.lit(0).cast("long").alias("c"))
             )
             .groupBy("node")
@@ -219,8 +198,9 @@ def personalized_pagerank(
                     + F.col("su")
                 ).cast("long").alias("r"),
             )
-            .localCheckpoint(eager=True)
         )
+
+    ranks = fixed_point(ranks, step, iterations)
     return ranks.select(
         "node",
         F.col("r").alias("rank_fp"),
@@ -406,31 +386,28 @@ def label_propagation(edges: DataFrame, iterations: int = 4) -> DataFrame:
     the SAME key, one (node, label) hash aggregate with map-side
     combine, one max_by hash aggregate keyed by node. State between
     iterations is O(nodes); nothing edge-sized persists or re-shuffles.
-    Per-iteration ``localCheckpoint`` bounds lineage exactly as in
-    :func:`pagerank` (same reliable-checkpoint swap at deployment).
     """
     # edge-row count bounds the node count (every node appears as src):
     # an exact-enough driver scalar to gate the per-iteration broadcast
-    ew, m = _edges_by_src(edges)
+    ew, obs = _edges_by_src(edges)
+    m = obs["m"]
     labels = (
         ew.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("label"))
     )
-    for _ in range(iterations):
-        labels = _bcast_state(labels, m)
-        nbr = ew.join(labels, ew["src"] == labels["node"]).select(
+
+    def step(labels: DataFrame, _) -> DataFrame:
+        lb = _bcast_state(labels, m)
+        nbr = ew.join(lb, ew["src"] == lb["node"]).select(
             F.col("dst").alias("node"), "label"
         )
         counts = nbr.groupBy("node", "label").agg(F.count("*").alias("cnt"))
-        labels = (
-            counts.groupBy("node")
-            .agg(
-                F.expr("max_by(label, struct(cnt, -label))").alias("label")
-            )
-            .localCheckpoint(eager=True)
+        return counts.groupBy("node").agg(
+            F.expr("max_by(label, struct(cnt, -label))").alias("label")
         )
-    return labels
+
+    return fixed_point(labels, step, iterations)
 
 
 def k_core(edges: DataFrame, k: int, max_rounds: int = 8) -> DataFrame:
@@ -462,32 +439,35 @@ def k_core(edges: DataFrame, k: int, max_rounds: int = 8) -> DataFrame:
     Returns ``(node, core_degree)`` — survivors with their degree
     inside the core.
     """
-    cur, prev_edges = _edges_by_src(edges)
-    for _ in range(max_rounds):
+    cur, obs = _edges_by_src(edges)
+
+    def peel(cur: DataFrame, obs: dict) -> DataFrame:
         keep = (
             cur.groupBy("src")
             .agg(F.count("*").alias("d"))
             .filter(F.col("d") >= k)
             .select("src")
         )
-        # keep-list rows <= distinct src <= current edge count, a
-        # driver scalar this loop already maintains — broadcast the
+        # keep-list rows <= distinct src <= this round's edge count
+        # (observed by the previous round's fill) — broadcast the
         # semi-join probe side while that bound fits
-        cur, obs = _observed_checkpoint(
-            cur.join(_bcast_state(keep, prev_edges), "src", "left_semi").join(
-                _bcast_state(
-                    keep.select(F.col("src").alias("dst")), prev_edges
-                ),
-                "dst",
-                "left_semi",
-            ),
-            m=F.count(F.lit(1)),
+        m = obs["m"]
+        return cur.join(_bcast_state(keep, m), "src", "left_semi").join(
+            _bcast_state(keep.select(F.col("src").alias("dst")), m),
+            "dst",
+            "left_semi",
         )
-        if obs["m"] == prev_edges:
-            break
-        prev_edges = obs["m"]
-    else:
-        warn_not_converged("k_core", "max_rounds", max_rounds)
+
+    cur = fixed_point(
+        cur,
+        peel,
+        max_rounds,
+        obs=obs,
+        converge_on="m",
+        op="k_core",
+        cap_name="max_rounds",
+        m=F.count(F.lit(1)),
+    )
     return (
         cur.groupBy("src")
         .agg(F.count("*").alias("core_degree"))
@@ -607,42 +587,54 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int = 6) -> DataFrame
     grows to O(reached nodes), not O(nodes), and ``max_hops`` bounds
     the rounds exactly like PageRank's fixed iterations.
 
-    Returns ``(node, hops)`` for reached nodes only (seeds at 0).
+    Returns ``(node, hops)`` for reached nodes only (seeds at 0). This
+    is :func:`shortest_paths` with unit weights, and runs the same core.
     """
-    # reached-set rows <= nodes <= edge rows HOLDS under the module's
-    # symmetric-edges contract (every node appears as a src; undirected
-    # callers emit both directions). On a raw directed list, dst-only
-    # nodes enter dist too and the state can approach ~2x edge rows —
-    # still far under Spark's 8 GB broadcast cap at the guard default,
-    # but bound with distinct src+dst if this is ever exposed to
-    # unsymmetrized input (ADVICE r16).
-    ew, m = _edges_by_src(edges)
+    ew, obs = _edges_by_src(edges)
+    return _relax(ew, obs["m"], seeds, max_hops, F.lit(1), "hops")
+
+
+def _relax(
+    ew: DataFrame, m: int, seeds: DataFrame, rounds: int, cost, col: str
+) -> DataFrame:
+    """Bounded min-plus relaxation behind :func:`bfs_hops` (``cost`` 1)
+    and :func:`shortest_paths` (``cost`` the weight column) over the
+    src-partitioned, checkpointed edge list ``ew`` of ``m`` rows: the
+    ``(node, <col>)`` frame after ``rounds`` rounds of
+
+        d_{t+1}(v) = min(d_t(v), min over in-edges (u,v) of d_t(u) + cost)
+
+    from the in-graph seeds at 0. The reached frame is broadcast into
+    the edge join while ``m`` bounds it: reached <= nodes <= edge rows
+    under the symmetric-edges contract (every node appears as a src).
+    On a raw directed list dst-only nodes enter the state too and it
+    can approach ~2x edge rows — still far under Spark's 8 GB
+    broadcast cap at the guard default.
+    """
     in_graph = ew.select(F.col("src").alias("node")).distinct()
     dist = (
         seeds.select("node")
         .distinct()
         .join(in_graph, "node", "left_semi")
-        .select("node", F.lit(0).cast("long").alias("hops"))
+        .select("node", F.lit(0).cast("long").alias(col))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_hops):
+
+    def step(dist: DataFrame, _) -> DataFrame:
         db = _bcast_state(dist, m)
-        reached = ew.join(db, ew["src"] == db["node"]).select(
-            F.col("dst").alias("node"), (F.col("hops") + 1).alias("h")
+        relaxed = ew.join(db, ew["src"] == db["node"]).select(
+            F.col("dst").alias("node"), (F.col(col) + cost).cast("long").alias("_d")
         )
-        step = reached.groupBy("node").agg(F.min("h").alias("h"))
-        dist = (
-            dist.join(step, "node", "full_outer")
-            .select(
-                "node",
-                F.least(
-                    F.coalesce(F.col("hops"), F.lit(max_hops + 1)),
-                    F.coalesce(F.col("h"), F.lit(max_hops + 1)),
-                ).alias("hops"),
-            )
-            .localCheckpoint(eager=True)
+        best = relaxed.groupBy("node").agg(F.min("_d").alias("_d"))
+        return dist.join(best, "node", "full_outer").select(
+            "node",
+            F.least(
+                F.coalesce(F.col(col), F.col("_d")),
+                F.coalesce(F.col("_d"), F.col(col)),
+            ).cast("long").alias(col),
         )
-    return dist
+
+    return fixed_point(dist, step, rounds)
 
 
 HITS_SCALE = 10**6
@@ -687,7 +679,8 @@ def hits(
         )
     # hub/authority state is O(src nodes)/O(dst nodes) <= edge rows, so
     # m bounds every renorm round's broadcast decision (_bcast_state)
-    ew, m = _edges_by_src(edges)
+    ew, obs = _edges_by_src(edges)
+    m = obs["m"]
     srcs = ew.select(F.col("src").alias("node")).distinct()
     dsts = ew.select(F.col("dst").alias("node")).distinct()
     h = srcs.select("node", F.lit(scale).cast("long").alias("h")).localCheckpoint(
@@ -964,50 +957,26 @@ def shortest_paths(
     non-negative integer weights the recurrence is pure int64 min/plus
     arithmetic — aggregation-order-immune, replayable by a chained-CTE
     oracle, no tie-break rule needed (min over equal ints is itself).
-    Negative weights are rejected loudly (Bellman-Ford would need the
-    full |V|-1 rounds plus a negative-cycle check — out of contract).
+    NULL or negative weights are rejected loudly (Bellman-Ford would
+    need the full |V|-1 rounds plus a negative-cycle check — out of
+    contract); they are counted by the job that fills the edge
+    checkpoint, at no job of their own.
 
     Scale shape per round: one equi-join of the (repartitioned,
     checkpointed-once) edge list against the O(reached) distance frame
     on the src key, one min hash aggregate with map-side combine keyed
     by dst, one full-outer min-merge with the previous frame; state
-    stays O(reached nodes) with per-round ``localCheckpoint`` lineage
-    cuts. Weight-domain bound: max dist <= rounds * max(w), so int64
-    is safe for any real weight scale.
+    stays O(reached nodes). Weight-domain bound: max dist <= rounds *
+    max(w), so int64 is safe for any real weight scale. Runs the same
+    core as :func:`bfs_hops`.
 
     Returns ``(node, dist)`` for reached nodes only (seeds at 0).
     """
-    if edges.filter(F.col("w") < 0).limit(1).count() > 0:
+    w = F.col("w")
+    ew, obs = _edges_by_src(edges, bad=F.count_if(w.isNull() | (w < 0)))
+    if obs["bad"]:
         raise ValueError(
-            "shortest_paths: negative edge weights are out of contract "
-            "(bounded-round relaxation assumes non-negative costs)"
+            f"shortest_paths: {obs['bad']} edge weights are NULL or negative; "
+            "the bounded-round relaxation needs non-negative costs"
         )
-    # same broadcast bound as bfs_hops: reached <= nodes <= edge rows
-    ew, m = _edges_by_src(edges)
-    in_graph = ew.select(F.col("src").alias("node")).distinct()
-    dist = (
-        seeds.select("node")
-        .distinct()
-        .join(in_graph, "node", "left_semi")
-        .select("node", F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(rounds):
-        db = _bcast_state(dist, m)
-        relaxed = ew.join(db, ew["src"] == db["node"]).select(
-            F.col("dst").alias("node"),
-            (F.col("dist") + F.col("w")).cast("long").alias("d"),
-        )
-        step = relaxed.groupBy("node").agg(F.min("d").alias("d"))
-        dist = (
-            dist.join(step, "node", "full_outer")
-            .select(
-                "node",
-                F.least(
-                    F.coalesce(F.col("dist"), F.col("d")),
-                    F.coalesce(F.col("d"), F.col("dist")),
-                ).cast("long").alias("dist"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return dist
+    return _relax(ew, obs["m"], seeds, rounds, w, "dist")

@@ -919,7 +919,7 @@ def pq_fit(
     joined rows, not m separate fits). Deterministic init (the k
     smallest ids' subvectors) and smallest-code tie-breaks keep the fit
     reproducible — the property the recursive SQL oracle relies on.
-    Lineage is truncated per iteration (localCheckpoint).
+    The Lloyd iterations run through ``_util.fixed_point``.
 
     r16 adjudication — this broadcast-join shape STAYS, measured
     against three zero-shuffle rewrites (kmeans_fit's r16 driver-side
@@ -937,7 +937,7 @@ def pq_fit(
     iteration, wins PQ's loop never had on the table."""
     from pyspark.sql import Window
 
-    from rearview_spark.operators._util import ensure_parallelism
+    from rearview_spark.operators._util import ensure_parallelism, fixed_point
 
     sub = dim // m
     subs = _subvectors(ensure_parallelism(corpus, id_col), m, sub, id_col, vec_col).cache()
@@ -951,7 +951,8 @@ def pq_fit(
         )
         .localCheckpoint(eager=True)
     )
-    for _ in range(iters):
+
+    def step(codebook: DataFrame, _) -> DataFrame:
         d = _sq_l2(F.col("sv"), F.col("centroid"))
         assigned = (
             subs.join(F.broadcast(codebook), "s")
@@ -968,12 +969,13 @@ def pq_fit(
             .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
             .select("s", "code", F.transform("pm", lambda t: t["m"]).alias("centroid"))
         )
-        codebook = (
+        return (
             codebook.select("s", "code", F.col("centroid").alias("_prev"))
             .join(means, ["s", "code"], "left")
             .select("s", "code", F.coalesce("centroid", "_prev").alias("centroid"))
-            .localCheckpoint(eager=True)
         )
+
+    codebook = fixed_point(codebook, step, iters)
     # codebook is checkpointed; the subvector cache has no readers left
     subs.unpersist()
     return codebook
@@ -993,7 +995,7 @@ def pq_encode(
     billion-vector index fits executor memory and the ANN scan reads
     codes, not vectors. Broadcast codebook, map-side argmin — the corpus
     never shuffles."""
-    from rearview_spark.operators._util import ensure_parallelism
+    from rearview_spark.operators._util import ensure_parallelism, fixed_point
 
     sub = dim // m
     subs = _subvectors(ensure_parallelism(corpus, id_col), m, sub, id_col, vec_col)

@@ -6,92 +6,6 @@ gate) and ``bench.py``."""
 from __future__ import annotations
 
 
-# Names the driver should check FIRST this round, ahead of the generic
-# staleness ordering below: operators new this round, so each gets a
-# driver-green row the round it lands. Names listed here but not (yet)
-# registered are skipped, so the list may lead the implementation.
-_NEW_THIS_ROUND = (
-    # Empty by design since r10 (VERDICT_r09 next-round #1): gates
-    # registered for the first time in a round need no entry — group
-    # (c) below ("never driver-checked") front-loads them automatically
-    # — and listing already-green gates burns window slots
-    # re-confirming fresh greens instead of rotating stale ones.
-    #
-    # Ceiling arithmetic before registering anything (driver hashes the
-    # FIRST 50 entries): len(never-checked new) + len(stalest cohort to
-    # rotate) must stay <= 50. r10 landed on exactly 50 (27 new + the
-    # full 20-row r06 cohort + 3 r07 rotations); after r10 the stalest
-    # cohort was the 44 unrotated r07 rows, so r11 registers at most
-    # 6 new gates (2 staged: ts_rollup_refresh,
-    # graph_copurchase_components) while rotating all 44.
-    #
-    # r13 collapsed the whole staged backlog (VERDICT_r12 next-round #1):
-    # all 30 PENDING_QUERIES flipped live in one move, plus 20 gates NEW
-    # in r13 (stream_peak_concurrency, ts_cross_correlation,
-    # doc_nb_language, doc_quality_auc, doc_pr_curve, rel_cdc_apply,
-    # rel_bucketed_join, stream_cdc_apply, doc_nb_report,
-    # rel_bootstrap_avg_order, rel_exact_percentiles, then the late-r13
-    # wave: ev_ks_drift, doc_calibration_bins, doc_lift_deciles,
-    # doc_chi2_tokens, doc_js_divergence, rel_equidepth_hist,
-    # ev_ab_ztest, ev_km_survival, stream_ks_drift) — 50 never-checked
-    # fill the window exactly via group (c); zero rotation slots this
-    # round. PENDING_QUERIES is empty in steady state.
-    #
-    # Post-backlog steady state: new operators register the round they
-    # land (group (c) front-loads them with no entry here); the window's
-    # remaining slots drain the stale-cohort debt oldest-first. The
-    # late-r13 wave also STAGED 16 further gates (PENDING_QUERIES across
-    # the plan modules — the window-full rule), so the r14 window is
-    # those 16 first-ever checks + 34 stale rotations (4 r08 + 30 r09);
-    # r14 executed exactly that (all 16 flipped, nothing else
-    # registered). Stage into PENDING_QUERIES whenever registering
-    # would push the never-checked count past the 50-slot window.
-    #
-    # REGISTRY GROWTH BUDGET (standing policy, VERDICT_r13 next-round
-    # #2 option (a)): at most 15 NEW registrations per round, so >= 35
-    # window slots always rotate stale cohorts. New gates beyond the
-    # budget stay in PENDING_QUERIES (pre-verified by
-    # tests/test_pending_gates.py) until a round has budget room.
-    # Recheck-cycle arithmetic under the cap, from the post-r14
-    # histogram (r09 x20, r10 x50, r11 x50, r12 x50, r13 x50, r14 x50):
-    #   r15 = <=15 flips + 20 r09 + >=15 r10 rotations  -> floor r10
-    #   r16 = <=15 flips + the remaining <=35 r10 rows  -> floor r11
-    # i.e. the floor reaches r11 by r16 and thereafter trails the
-    # current round by at most ceil(registry / 35) rounds — bounded as
-    # long as the cap holds. Prefer retiring a redundant gate to
-    # unit-only coverage over exceeding the cap.
-    #
-    # r14 executed the budget exactly: the r14 session staged 15 gates
-    # (PENDING_QUERIES across the modules, every one pre-verified at
-    # sf0.001 + sf0.01 + sf0.1 through the pending harness), so the
-    # r15 window is EXACTLY 15 flips + 20 r09 + 15 r10 = 50. The r15
-    # session must register nothing beyond the flips (stage its own
-    # new gates for r16).
-    #
-    # r15 executed exactly that: the 15 r14-staged gates flipped, 5
-    # redundant gates RETIRED to unit-only coverage (VERDICT_r14 #3:
-    # ts_per_second, ts_moving_sum, ts_moving_min_max, sim_pq_topk,
-    # media_wav_samples — COVERAGE.md names each inheriting test), so
-    # the registry is 280 and the r15 window = 15 flips + 19 r09 (the
-    # cohort lost media_wav_samples) + 16 r10 rotations. The r15 wave
-    # (stream_retention_rates, ev_gini_concentration,
-    # doc_simpson_diversity, ts_seasonal_mad, ev_cohort_ltv,
-    # rel_profile_drift, graph_clustering_coeff) is staged for r16:
-    # r16 = 7 flips + 34 r10 + 9 r11 rotations -> floor reaches r11;
-    # post-retirement cycle = ceil(280/35) = 8 rounds.
-    #
-    # r16 executed exactly that: the 7 r15-staged gates flipped, and 11
-    # redundant gates RETIRED to unit-only coverage across the round
-    # (3 at the flip commit + 8 per VERDICT_r15 #5 — COVERAGE.md names
-    # every inheriting test; none touch the pinned first-50 window).
-    # Registry 276; cycle ceil(276/35) = 8 rounds. The r16 wave
-    # (monitor_seasonal_lifecycle, stream_cohort_ltv, graph_modularity,
-    # sim_silhouette, ev_outlier_audit, graph_shortest_paths) is staged
-    # for r17: after the r16 driver run the stale floor is r11 with 35
-    # rows left, so r17 = 6 flips + 35 r11 + 9 r12 rotations = 50.
-)
-
-
 def _green(entry: dict) -> bool:
     """A driver correctness row counts as green only when every check
     passed (rows + schema + hash all true, no error)."""
@@ -134,8 +48,9 @@ def _latest_check_by_query(root: str) -> dict:
 
 def all_pending() -> dict:
     """Union of every plan module's PENDING_QUERIES — gates built and
-    oracle-verified but deliberately NOT registered yet (the 50-slot
-    window arithmetic documented above). tests/test_pending_gates.py
+    oracle-verified but deliberately NOT registered yet (the driver's
+    gate hashes only the first 50 entries of :func:`all_queries`).
+    tests/test_pending_gates.py
     drives each through the driver's comparison so registration later
     is a known-green one-line move."""
     from rearview_spark.plans import (
@@ -190,9 +105,8 @@ def all_queries() -> dict:
     # from the union of ALL past CORRECTNESS_r*.json files (not just the
     # last two rounds — VERDICT_r04 "What's wrong" #5):
     #   a) rows whose LATEST driver check is red — repairs confirm first,
-    #   b) operators new this round (_NEW_THIS_ROUND),
-    #   c) rows never driver-checked in any round,
-    #   d) everything else by oldest latest-green round first (stalest
+    #   b) rows never driver-checked in any round,
+    #   c) everything else by oldest latest-green round first (stalest
     #      confirmation rotates in first; freshest greens fill last).
     # Registration order breaks ties inside each group.
     root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -201,7 +115,6 @@ def all_queries() -> dict:
     front: list[str] = []
     for group in (
         [n for n in out if n in latest and not latest[n][1]],
-        _NEW_THIS_ROUND,
         [n for n in out if n not in latest],
     ):
         for n in group:

@@ -1215,7 +1215,7 @@ QUERIES["ts_cusum_drift"] = {"fn": ts_cusum_drift, "oracle": TS_CUSUM_SQL}
 # The r06 driver window closed at exactly 50 rows, so this gate was staged
 # in PENDING_QUERIES for one round (verified by tests/test_pending_gates.py
 # through the same compare path as tools/oracle_check.py) and registered
-# into QUERIES + _NEW_THIS_ROUND in round 7.
+# into QUERIES in round 7.
 
 LTTB_T = 20
 _LTTB_NB = LTTB_T - 2

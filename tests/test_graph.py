@@ -398,7 +398,7 @@ def test_shortest_paths_weighted_vs_round_bound(spark):
     the two-step path (cost 2) beats the direct heavy edge; with ONE
     round only the direct relaxation exists (cost 5) — the round cap
     is a path-LENGTH bound, exactly like bfs_hops. Off-graph seeds are
-    ignored; negative weights raise."""
+    ignored; NULL or negative weights raise."""
     from rearview_spark.operators.graph import shortest_paths
 
     pairs = [(1, 2, 1), (2, 3, 1), (1, 3, 5)]
@@ -416,6 +416,13 @@ def test_shortest_paths_weighted_vs_round_bound(spark):
     neg = spark.createDataFrame([(1, 2, -1), (2, 1, -1)], "src bigint, dst bigint, w bigint")
     with pytest.raises(ValueError, match="negative"):
         shortest_paths(neg, seeds)
+    # a NULL weight would leave NULL distances behind it: out of contract
+    null_w = spark.createDataFrame(
+        [(1, 2, None), (2, 1, None), (2, 3, 4), (3, 2, 4)],
+        "src bigint, dst bigint, w bigint",
+    )
+    with pytest.raises(ValueError, match="NULL"):
+        shortest_paths(null_w, seeds)
 
 
 def test_hits_iteration_costs_six_jobs(spark, count_jobs):
@@ -450,21 +457,25 @@ def test_connected_components_round_costs_three_jobs(spark, count_jobs):
 
 def test_fixed_points_warn_when_stopped_unconverged(spark):
     """A 9-node path needs more than 3 rounds: connected_components at
-    max_iter=3 and k_core at max_rounds=3 both warn. A triangle
-    converges within the default caps and neither warns."""
+    max_iter=3 and k_core at max_rounds=3 both warn, pointing at the
+    line that called the operator. A triangle converges within the
+    default caps and neither warns."""
     import warnings
 
     from rearview_spark.operators.dedup import connected_components
 
     path = [(i, i + 1) for i in range(8)]
     pairs = spark.createDataFrame(path, "id_a bigint, id_b bigint")
-    with pytest.warns(RuntimeWarning, match=r"connected_components: .*max_iter=3"):
+    with pytest.warns(RuntimeWarning, match=r"connected_components: .*max_iter=3") as cc_w:
         got = connected_components(pairs, max_iter=3).collect()
     assert len({r["component"] for r in got}) > 1
     # a 2-core peel of a path removes one end node per side per round
     edges = spark.createDataFrame(_sym(path), "src bigint, dst bigint")
-    with pytest.warns(RuntimeWarning, match=r"k_core: .*max_rounds=3"):
+    with pytest.warns(RuntimeWarning, match=r"k_core: .*max_rounds=3") as kc_w:
         assert k_core(edges, k=2, max_rounds=3).count() > 0
+    for w in [*cc_w, *kc_w]:
+        if issubclass(w.category, RuntimeWarning):
+            assert w.filename == __file__
     tri = [(0, 1), (1, 2), (0, 2)]
     with warnings.catch_warnings():
         warnings.simplefilter("error", RuntimeWarning)
@@ -474,3 +485,108 @@ def test_fixed_points_warn_when_stopped_unconverged(spark):
         assert {r["component"] for r in got} == {0}
         tri_edges = spark.createDataFrame(_sym(tri), "src bigint, dst bigint")
         assert k_core(tri_edges, k=2).count() == 3
+
+
+# --- one fixed-point loop: per-round cost and the folded operators ---------
+
+from rearview_spark.operators import graph as G  # noqa: E402
+
+_ROUND_RUNNERS = {
+    "pagerank": lambda e, s, n: G.pagerank(e, iterations=n),
+    "personalized_pagerank": lambda e, s, n: G.personalized_pagerank(e, s, n),
+    "label_propagation": lambda e, s, n: G.label_propagation(e, iterations=n),
+    "bfs_hops": lambda e, s, n: G.bfs_hops(e, s, max_hops=n),
+    "shortest_paths": lambda e, s, n: G.shortest_paths(
+        e.withColumn("w", F.lit(1).cast("long")), s, rounds=n
+    ),
+    "k_core": lambda e, s, n: G.k_core(e, k=2, max_rounds=n),
+}
+
+
+@pytest.mark.parametrize(
+    "op,per_round",
+    [
+        ("pagerank", 3),
+        ("personalized_pagerank", 3),
+        ("label_propagation", 4),
+        ("bfs_hops", 4),
+        ("shortest_paths", 4),
+        ("k_core", 4),
+    ],
+)
+def test_iterative_round_job_cost(spark, count_jobs, op, per_round):
+    """One more round costs the operator's fixed number of jobs (the
+    state broadcast, its shuffle maps and the checkpoint fill) — the
+    shared loop adds none. A 10-node path keeps every operator moving
+    for 3 rounds (k_core peels one end node per side per round)."""
+    import warnings
+
+    edges = spark.createDataFrame(
+        _sym([(i, i + 1) for i in range(9)]), "src bigint, dst bigint"
+    )
+    seeds = spark.createDataFrame([(0,)], "node bigint")
+    run = _ROUND_RUNNERS[op]
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", RuntimeWarning)
+        _, two = count_jobs(lambda: run(edges, seeds, 2).collect())
+        _, three = count_jobs(lambda: run(edges, seeds, 3).collect())
+    assert three - two == per_round
+
+
+def _seeded_rank_py(edges: list, iterations: int, seeds=None, scale=PAGERANK_SCALE) -> dict:
+    """Driver-side replay of pagerank (``seeds`` None) and
+    personalized_pagerank that also covers off-contract dst-only nodes:
+    uniform PageRank gives them the teleport base plus their
+    contributions, personalized PageRank their contributions only."""
+    outdeg: dict = {}
+    for s, _ in edges:
+        outdeg[s] = outdeg.get(s, 0) + 1
+    seeded = set(outdeg) if seeds is None else set(seeds) & set(outdeg)
+    base = (15 * scale) // (100 * len(seeded))
+    r = {v: scale // len(seeded) if v in seeded else 0 for v in outdeg}
+    for _ in range(iterations):
+        nxt = {v: base if v in seeded else 0 for v in outdeg}
+        for s, d in edges:
+            nxt.setdefault(d, base if seeds is None else 0)
+            nxt[d] += (85 * r[s]) // (100 * outdeg[s])
+        r = nxt
+    return r
+
+
+def test_pagerank_off_contract_dst_only_node(spark):
+    """Node 3 appears only as a dst. PageRank gives it the teleport
+    base plus its contributions; personalized PageRank (seed 0) gives
+    it only its contributions."""
+    edges = [(0, 1), (1, 0), (1, 2), (2, 0), (1, 3), (2, 3)]
+    df = spark.createDataFrame(edges, "src bigint, dst bigint")
+    pr = {r["node"]: r["rank_fp"] for r in G.pagerank(df, iterations=3).collect()}
+    want = _seeded_rank_py(edges, 3)
+    assert pr == want
+    assert want[3] > (15 * PAGERANK_SCALE) // (100 * 3)  # base + contributions
+    seeds = spark.createDataFrame([(0,)], "node bigint")
+    ppr = {
+        r["node"]: r["rank_fp"]
+        for r in G.personalized_pagerank(df, seeds, 3).collect()
+    }
+    assert ppr == _seeded_rank_py(edges, 3, seeds=[0])
+
+
+def test_shortest_paths_unit_weights_cost_bfs_jobs(spark, count_jobs):
+    """The weight check rides the edge checkpoint's fill job, so unit-
+    weight shortest paths cost exactly the jobs of bfs_hops and return
+    the same distances."""
+    edges = spark.createDataFrame(
+        _sym([(i, i + 1) for i in range(5)]), "src bigint, dst bigint"
+    )
+    seeds = spark.createDataFrame([(0,)], "node bigint")
+    for rounds in (0, 2):
+        bfs, bfs_jobs = count_jobs(
+            lambda: G.bfs_hops(edges, seeds, max_hops=rounds).collect()
+        )
+        sp, sp_jobs = count_jobs(
+            lambda: G.shortest_paths(
+                edges.withColumn("w", F.lit(1).cast("long")), seeds, rounds=rounds
+            ).collect()
+        )
+        assert sp_jobs == bfs_jobs
+        assert sorted(map(tuple, sp)) == sorted(map(tuple, bfs))

@@ -298,3 +298,93 @@ def test_observed_checkpoint_launches_one_job(spark, count_jobs):
     )
     assert got == {"mx": 198}
     assert jobs == 1
+
+
+def _countdown(spark, values):
+    """A frame of ``v`` values and a step that lowers each by one down
+    to 0, recording every call: the label sum falls until all are 0."""
+    from pyspark.sql import functions as F
+
+    calls = []
+
+    def step(df, obs):
+        calls.append(obs)
+        return df.select(F.greatest(F.col("v") - 1, F.lit(0)).alias("v"))
+
+    return spark.createDataFrame([(v,) for v in values], "v bigint"), step, calls
+
+
+def test_fixed_point_stops_on_first_unchanged_scalar(spark):
+    """Sums 3 -> 1 -> 0 -> 0: the third round repeats the second's
+    scalar and ends the loop; each step sees the previous round's
+    observation, the first the seeded one. Seeded with the input's own
+    sum, an input already at its fixed point costs one round."""
+    from pyspark.sql import functions as F
+
+    from rearview_spark.operators._util import fixed_point
+
+    df, step, calls = _countdown(spark, [0, 1, 2])
+    out = fixed_point(
+        df, step, 10, obs={"s": 3}, converge_on="s", s=F.sum("v")
+    )
+    assert calls == [{"s": 3}, {"s": 1}, {"s": 0}]
+    assert sorted(r["v"] for r in out.collect()) == [0, 0, 0]
+
+    done, step, calls = _countdown(spark, [0, 0])
+    fixed_point(done, step, 10, obs={"s": 0}, converge_on="s", s=F.sum("v"))
+    assert len(calls) == 1
+
+
+def test_fixed_point_warns_only_when_rounds_run_out(spark):
+    import warnings
+
+    from pyspark.sql import functions as F
+
+    from rearview_spark.operators._util import fixed_point
+
+    df, step, calls = _countdown(spark, [5])
+    with pytest.warns(RuntimeWarning, match=r"my_op: stopped at max_steps=2 "):
+        fixed_point(
+            df, step, 2, obs={"s": 5}, converge_on="s",
+            op="my_op", cap_name="max_steps", s=F.sum("v"),
+        )
+    assert len(calls) == 2
+    df, step, _ = _countdown(spark, [1])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        fixed_point(
+            df, step, 5, obs={"s": 1}, converge_on="s",
+            op="my_op", cap_name="max_steps", s=F.sum("v"),
+        )
+        # a fixed round count (no converge_on) never warns
+        fixed_point(df, step, 1)
+
+
+def test_fixed_point_without_observations_checkpoints_plainly(spark):
+    """No aggregates to observe: each round is a plain eager local
+    checkpoint and the seeded obs reaches every step unchanged."""
+    from rearview_spark.operators._util import fixed_point
+
+    df, step, calls = _countdown(spark, [2, 4])
+    out = fixed_point(df, step, 3, obs={"tag": 1})
+    assert calls == [{"tag": 1}] * 3
+    assert out._jdf.queryExecution().analyzed().toString().startswith("LogicalRDD")
+    assert sorted(r["v"] for r in out.collect()) == [0, 1]
+
+
+def test_fixed_point_round_launches_one_job(spark, count_jobs):
+    """Over a pre-shuffled state a round is its checkpoint's fill job,
+    which also yields the observed scalars."""
+    from pyspark.sql import functions as F
+
+    from rearview_spark.operators._util import fixed_point
+
+    pre = spark.range(100).repartition(4, "id").localCheckpoint(eager=True)
+    for observe in ({"mx": F.max("id")}, {}):
+        _, jobs = count_jobs(
+            lambda: fixed_point(
+                pre, lambda df, _: df.select((F.col("id") * 2).alias("id")), 1,
+                **observe,
+            )
+        )
+        assert jobs == 1
