@@ -527,9 +527,11 @@ def compile_target(target: str, metric_names: DataFrame | None = None) -> Plan:
 
     With ``metric_names`` (the metric-name dimension), every glob inside
     the target resolves to a pushable IN-list / broadcast-semi at plan
-    time instead of an rlike (operators/timeseries.select_glob) — the
-    monitors path passes its names dimension here and gets bucket/row-
-    group pruning on glob'd jobs.metrics without any per-call API."""
+    time instead of an rlike (operators/timeseries.select_glob), for
+    bucket/row-group pruning on glob'd jobs.metrics. The monitor tick
+    (monitors/evaluate.py) does not pass it: resolving a glob against
+    ``sources/layout.metric_names_dimension`` costs a driver collect, so
+    it would add a Spark job per glob target to every tick."""
     ast = parse_target(target)
 
     def plan(ts: DataFrame) -> DataFrame:

@@ -22,13 +22,20 @@ Statuses (reference state machine, SURVEY.md §2.4 S4 — distinct graphite
 job_errors): 'success' | 'failed' (expr truthy) | 'error' (empty window or
 expression error).
 
-Scale: one action, run by the caller, evaluates ALL due monitors — each
-target's plan is tagged (window group, var) and unioned with one sentinel
-row per group, so Catalyst sees a single DAG, every monitor reaches the
-grouped-map UDF (empty windows and bad targets included) and the UDF fans
-out across executors by window group. The frame comes back lazy and
-uncached; a caller that consumes it twice caches it. Per-job input is
-capped (``max_points_per_job``) before collection into the worker.
+Scale: one action, run by the caller, evaluates ALL due monitors. Every
+bare-path target (no render function, no glob) is answered by one scan
+of the metrics: the named series over the union of the targets' own
+windows, each row tagged with the (window group, var) of every target
+whose window holds it. A render-function or glob target keeps its own
+Catalyst branch, tagged the same way. The branches and one sentinel row
+per group are unioned as a balanced tree, so Catalyst sees a single DAG,
+every monitor reaches the grouped-map UDF (empty windows and bad targets
+included) and the UDF fans out across executors by window group. The
+frame comes back lazy and uncached: the scheduler runs it once, in the
+job_data write, and reads the statuses from an observation on the same
+action; a caller that consumes it twice runs it twice unless it caches
+it. Per-job input is capped (``max_points_per_job``) before collection
+into the worker.
 """
 
 from __future__ import annotations
@@ -37,6 +44,7 @@ import ast
 import datetime as dt
 import json
 import math
+import operator
 import signal
 import threading
 from dataclasses import dataclass
@@ -46,9 +54,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rearview_spark.functions.graphite import compile_target
+from rearview_spark.functions.graphite import PathNode, compile_target, parse_target
 from rearview_spark.monitors.schemas import RUN_RESULT
-from rearview_spark.operators.timeseries import window_fetch
+from rearview_spark.operators.timeseries import is_glob, window_fetch
 
 def _robust_z(s):
     """Modified z-score over a pandas Series (Iglewicz-Hoaglin; the same
@@ -227,6 +235,73 @@ def bind_variables(pdf: pd.DataFrame) -> dict[str, object]:
     return out
 
 
+def _plain_path(target: str) -> str | None:
+    """The series a bare, glob-free path target names; None for a render
+    function, a glob or a target that does not parse (compile_target then
+    reports the error)."""
+    try:
+        node = parse_target(target)
+    except Exception:  # noqa: BLE001 — compile_target reports it
+        return None
+    if isinstance(node, PathNode) and not is_glob(node.path):
+        return node.path
+    return None
+
+
+def _plain_targets(metrics: DataFrame, plain: dict[str, list[tuple]]) -> DataFrame:
+    """Every bare path target's points from ONE scan: fetch the named
+    series over the union of the targets' windows, then tag each row with
+    the (grp, var) of every target whose window holds it. The scan keeps
+    each target's own window (overlapping windows merged), so a backtest
+    due beside live monitors adds its window, not the span between them.
+    The tags are a literal map from path to ``array<struct<grp, var, lo,
+    hi>>`` inside the plan, so the scan stage does the tagging and no
+    lookup table is shipped by a job of its own."""
+    tags = [t for ts in plain.values() for t in ts]
+    spans: list[list] = []
+    for lo, hi in sorted({(t[2], t[3]) for t in tags}):
+        if spans and lo <= spans[-1][1]:
+            spans[-1][1] = max(spans[-1][1], hi)
+        else:
+            spans.append([lo, hi])
+    in_windows = _balanced(
+        [F.col("ts").between(F.lit(lo), F.lit(hi)) for lo, hi in spans], operator.or_
+    )
+    lookup = F.create_map(*[
+        c
+        for path, ts in plain.items()
+        for c in (
+            F.lit(path),
+            F.array(*[
+                F.struct(
+                    F.lit(grp).alias("grp"), F.lit(var).alias("var"),
+                    F.lit(start).alias("lo"), F.lit(end).alias("hi"),
+                )
+                for grp, var, start, end in ts
+            ]),
+        )
+    ])
+    hits = F.filter(
+        F.element_at(lookup, F.col("metric")),
+        lambda t: F.col("ts").between(t["lo"], t["hi"]),
+    )
+    return (
+        metrics.filter(in_windows & F.col("metric").isin(list(plain)))
+        .select(F.explode(hits).alias("t"), "metric", "ts", "value")
+        .select("t.grp", "t.var", "metric", "ts", "value")
+    )
+
+
+def _balanced(items: list, combine):
+    """Fold ``items`` with ``combine`` as a balanced tree: a left-deep
+    chain of unions re-analyses a plan that grows with every branch, and
+    a left-deep OR nests as deep as it has terms."""
+    if len(items) == 1:
+        return items[0]
+    mid = len(items) // 2
+    return combine(_balanced(items[:mid], combine), _balanced(items[mid:], combine))
+
+
 # One row per window group carrying only its key (``var`` null). Unioned
 # into the tagged points, it makes every group reach the grouped UDF, even
 # one whose window is empty or whose targets failed to compile, so the
@@ -246,9 +321,9 @@ def evaluate_monitors(
     uncached DataFrame with RUN_RESULT schema, one row per monitor.
 
     No Spark job runs here: the caller's action evaluates ALL the
-    monitors at once. A caller that consumes the frame twice (the scheduler collects
-    the statuses, then appends job_data) caches it and unpersists it
-    when done.
+    monitors at once. Nothing is cached, so a caller that consumes the
+    frame twice evaluates twice; the scheduler consumes it once, in the
+    job_data write, with the statuses observed on that same action.
 
     The monitors list is config-scale (the reference preloads all jobs
     into its scheduler, Rakefile:4-7) — iterating it on the driver builds
@@ -275,15 +350,22 @@ def evaluate_monitors(
         groups.setdefault(key, []).append(spec)
 
     tagged_frames = []
+    # bare path -> [(grp, var, start, end)]: every glob-free path target,
+    # answered by one scan in _plain_targets
+    plain: dict[str, list[tuple]] = {}
     # key -> (members, target compile error or None)
     group_info: dict[str, tuple[list[tuple], str | None]] = {}
     for key, members in groups.items():
         lead = members[0]
         end = scheduled[lead.id]
         start = end - dt.timedelta(minutes=lead.minutes)
-        windowed = window_fetch(metrics, start, end)
-        frames, error = [], None
+        windowed = None
+        frames, paths, error = [], [], None
         for i, target in enumerate(lead.metrics):
+            path = _plain_path(target)
+            if path is not None:
+                paths.append((path, (key, _var_name(i), start, end)))
+                continue
             try:
                 plan = compile_target(target)
                 lb = getattr(plan, "lookback_s", 0)
@@ -300,6 +382,8 @@ def evaluate_monitors(
                     )
                     df = window_fetch(plan(src), start, end)
                 else:
+                    if windowed is None:
+                        windowed = window_fetch(metrics, start, end)
                     df = plan(windowed)
             except Exception as e:  # noqa: BLE001 — bad target -> error status
                 error = f"target {target!r}: {e}"
@@ -315,6 +399,8 @@ def evaluate_monitors(
             # a group's points join the union only once ALL its targets
             # compiled; a bad later target leaves just its sentinel
             tagged_frames.extend(frames)
+            for path, tag in paths:
+                plain.setdefault(path, []).append(tag)
         group_info[key] = (
             [
                 (
@@ -327,6 +413,8 @@ def evaluate_monitors(
             ],
             error,
         )
+    if plain:
+        tagged_frames.append(_plain_targets(metrics, plain))
 
     b_groups = spark.sparkContext.broadcast(group_info)
 
@@ -403,7 +491,5 @@ def evaluate_monitors(
         return pd.DataFrame(out)
 
     sentinels = spark.createDataFrame([(k, None, None, None, None) for k in group_info], _SENTINEL)
-    union = sentinels.coalesce(1)
-    for f in tagged_frames:
-        union = union.unionByName(f)
+    union = _balanced([sentinels.coalesce(1), *tagged_frames], DataFrame.unionByName)
     return union.groupBy("grp").applyInPandas(_eval_group, RUN_RESULT)

@@ -8,10 +8,12 @@ db/schema.rb:55,62):
   evaluate -> persist job_data -> status transition + debounce ->
   open/close job_errors -> fan out alerts.
 
-This class drives the same steps with only the data plane in Spark —
-the window fetch and evaluation (one action, the tick's status collect)
-and the job_data append (read from the cached evaluation), a handful of
-jobs per tick however many monitors are due. The config and control
+This class drives the same steps with only the data plane in Spark,
+and that plane is ONE uncached action per tick however many monitors are
+due: the window fetch and evaluation run inside the write that stages
+the tick's job_data rows, and the same action hands the statuses back
+through an ``Observation``. The staged rows are published into job_data
+only after the monitors compare-and-swap succeeds. The config and control
 tables (the monitors table, alert outbox, dispatch log, job_errors) are
 read and written on the driver with Arrow (``store.py``), so their few
 rows cost no Spark job and a tick with nothing due launches none. Time
@@ -23,10 +25,12 @@ historical runs (db/schema.rb:68).
 from __future__ import annotations
 
 import datetime as dt
+from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rearview_spark.monitors.cron import next_fire
@@ -75,8 +79,9 @@ class MonitorScheduler:
         happens only AFTER the compare-and-swap on that table succeeds
         (``_merge_monitors``).  A second tick computed from the same
         snapshot fails the CAS with ``ConcurrentWriteError`` before it
-        appends job_data or sends any alert — its work is discarded
-        whole, never half-applied.
+        publishes job_data or sends any alert — its work is discarded
+        whole, never half-applied: its staged job_data dir is removed
+        and job_data is left as it was.
 
         At-least-once alerting across crashes: the alerts a tick owes are
         committed as an outbox sidecar of the SAME monitors pointer flip
@@ -87,25 +92,37 @@ class MonitorScheduler:
         them (re-sending only the unmarked tail).
 
         Spark work: the due list and the monitors swap are driver-side
-        Arrow I/O, so a tick with nothing due launches no Spark job. The
-        evaluation frame is cached; the status collect is the one action
-        that evaluates every due monitor, the job_data append reads the
-        cache, and the frame is unpersisted however the tick ends (a lost
-        CAS included).
+        Arrow I/O, so a tick with nothing due launches no Spark job. A
+        tick with work runs one action and caches nothing: the write of
+        its job_data rows to a staging dir beside the table
+        (``JobStore.stage_job_data``) evaluates every due monitor, and an
+        ``Observation`` on the evaluation collects each monitor's
+        ``(job_id, status, message)`` in that same action. After the CAS
+        the staged part files are moved into job_data one ``os.replace``
+        each (``publish_append``), as Spark's own append commit renames
+        task files into place, so a crash mid-publish is no weaker than a
+        crash mid-append; ids are content-derived, so a re-run tick writes
+        the same rows. A crash before the publish leaves job_data as it
+        was and a staging dir behind. The staging dir names the monitors
+        snapshot, and a later tick sweeps it once the monitors table is
+        two versions past that snapshot and the dir is older than the
+        store's ``claim_ttl_s`` (``sweep_staged``). A tick still writing
+        is therefore swept only when it can no longer win its CAS. A lost
+        CAS or any other exception removes the staging dir at once.
 
-        Result-sink shape (the 10^5-monitor question): the status collect
-        pulls ONE summary row per due monitor — job id, status and
+        Result-sink shape (the 10^5-monitor question): the observation
+        brings back ONE summary row per due monitor — job id, status and
         message, never the series data, which stays in the Spark job and
-        lands in job_data via the store writer. That makes the tick's
+        lands in job_data via the staged write. That makes the tick's
         driver traffic O(active monitors), ~100 B/row: 10^5 due monitors
-        collect ~10 MB and iterate a trivial Python loop, comfortably
-        inside one driver. The scale-out past that is sharding ticks by
-        ``pmod(monitor_id, n_shards)`` (each shard an independent
-        scheduler over a disjoint config slice — the CAS key is
-        per-table, so give each shard its own store prefix), NOT a
-        foreachBatch rewrite: transitions need read-your-writes against
-        the open-error table inside one commit, which a streaming sink
-        can't give without re-introducing the same per-shard serial
+        return ~10 MB through the observed metric and iterate a trivial
+        Python loop, comfortably inside one driver. The scale-out past
+        that is sharding ticks by ``pmod(monitor_id, n_shards)`` (each
+        shard an independent scheduler over a disjoint config slice — the
+        CAS key is per-table, so give each shard its own store prefix),
+        NOT a foreachBatch rewrite: transitions need read-your-writes
+        against the open-error table inside one commit, which a streaming
+        sink can't give without re-introducing the same per-shard serial
         point. job_errors is read once and rewritten whole on the driver
         (Arrow, no Spark job), so incident history adds file I/O to a
         tick but not Spark jobs.
@@ -113,30 +130,31 @@ class MonitorScheduler:
         # drain alerts stranded by a predecessor that died mid-dispatch
         stranded = self._drain_outbox()
         monitors_version, _ = self.store.current_version("monitors")
+        self.store.sweep_staged("job_data", monitors_version)
         due = self.due_monitors(now)
         if not due:
             return {"ran": 0, "alerts": stranded}
 
         specs = [MonitorSpec.from_row(r) for r in due]
-        # cached: the collect below runs the evaluation, the job_data
-        # append reads it back; released however the tick ends
-        results = evaluate_monitors(self.spark, specs, self.metrics, now).cache()
+        results = evaluate_monitors(self.spark, specs, self.metrics, now)
+        # the staged write is the tick's one action; the observation
+        # returns each monitor's status from it
+        runs = Observation()
+        summary = F.collect_list(F.struct("job_id", "status", "message")).alias("runs")
+        staged = self.store.stage_job_data(results.observe(runs, summary), now, monitors_version)
         try:
-            n_alerts = self._commit(now, due, results, monitors_version)
+            n_alerts = self._commit(now, due, runs.get["runs"], monitors_version, staged)
         finally:
-            results.unpersist()
+            self.store.discard_staged(staged)  # a no-op once published
         return {"ran": len(due), "alerts": n_alerts + stranded}
 
     def _commit(
-        self, now: dt.datetime, due: list[dict], results: DataFrame, monitors_version: int
+        self, now: dt.datetime, due: list[dict], runs: list, monitors_version: int, staged: Path
     ) -> int:
-        """Run the evaluation (the status collect), then the transitions,
-        the CAS-gated monitors swap, the job_data append, the incident
-        rewrite and the drain. Returns the number of alerts sent."""
-        by_id = {
-            r["job_id"]: r
-            for r in results.select("job_id", "status", "message").collect()
-        }
+        """Given the evaluated runs, apply the transitions, swap the
+        monitors table under its CAS, publish the staged job_data, rewrite
+        the incidents and drain. Returns the number of alerts sent."""
+        by_id = {r["job_id"]: r for r in runs}
 
         # status transitions + debounce (S4/S5) on the driver: due list is
         # config-scale; the heavy work already happened in the Spark job.
@@ -192,16 +210,16 @@ class MonitorScheduler:
 
         # CAS gate: the monitors swap is the tick's serialization point.
         # An overlapped tick that computed from the same snapshot raises
-        # ConcurrentWriteError HERE — before any job_data row is appended
-        # or any alert leaves the process. The owed alerts ride the same
-        # pointer flip as an outbox sidecar, so from this commit onward
-        # they survive a crash (at-least-once).
+        # ConcurrentWriteError HERE — before any staged job_data row is
+        # published or any alert leaves the process. The owed alerts ride
+        # the same pointer flip as an outbox sidecar, so from this commit
+        # onward they survive a crash (at-least-once).
         self._merge_monitors(
             updated_monitors,
             expect_version=monitors_version,
             outbox=self._outbox_rows(deferred_alerts, now),
         )
-        self.store.append_job_data(results, now)  # persist job_data (S8)
+        self.store.publish_append("job_data", staged)  # persist job_data (S8)
         self._merge_errors(errors, open_errors, new_error_rows, closed_job_ids, now)
         return self._drain_outbox()
 

@@ -13,13 +13,24 @@ transactional properties re-created file-system-first (SURVEY.md §4.2 #4):
 - **Version guard (CAS)** — ``overwrite(..., expect_version=)`` fails
   with ``ConcurrentWriteError`` when the table moved since the caller's
   snapshot, and the claim file (O_CREAT|O_EXCL) serializes two writers
-  racing to produce the same next version.  The scheduler claims the
-  monitors table first thing in a tick, so an overlapped tick aborts
-  before persisting job_data or dispatching alerts — the exactly-once
+  racing to produce the same next version.  The scheduler snapshots
+  the monitors version with its due list and swaps under that CAS
+  before it publishes job_data or dispatches alerts, so an overlapped
+  tick aborts with nothing persisted — the exactly-once
   status-transition contract under concurrent ticks.
-- **Append-only job_data** never mutates; ids are content-derived
+- **Staged, append-only job_data** never mutates; ids are content-derived
   (xxhash64(job_id, scheduled_ts)) so a re-run of the same tick writes
-  the same ids instead of colliding per-batch counters.
+  the same ids instead of colliding per-batch counters. A tick's rows
+  are written by its one Spark job into
+  ``<table>.staging/<snapshot>-<token>/`` BESIDE the table dir (inside
+  it, readers and ``current_version``'s legacy-dir check would see
+  them), and published after the CAS by moving each part file in with
+  ``os.replace`` — per file, like Spark's own append commit, so no
+  weaker. A lost CAS discards the staging dir. One stranded by a crash
+  is swept once the monitors table is two versions past the snapshot
+  named in it (its writer can no longer publish) and the dir is older
+  than ``claim_ttl_s``; age alone never decides, because a live write
+  keeps its dir's start-of-write mtime for as long as it runs.
 
 Config tables are dimension-scale: full rewrite per tick is bounded and
 cheap.
@@ -52,6 +63,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 import shutil
+import time
 import uuid
 from pathlib import Path
 
@@ -183,14 +195,78 @@ class VersionedParquetTables:
             w = w.partitionBy(*partition_by)
         w.parquet(str(self._legacy_path(table)))
 
+    # -- staged appends ------------------------------------------------------
+    #
+    # root/<table>.staging/<snapshot>-<token>/
+    #     one writer's unpublished append, beside the table dir, so neither
+    #     readers nor current_version's legacy-dir check ever see it;
+    #     <snapshot> is the version of the table whose CAS gates the publish
+
+    def _staging_root(self, table: str) -> Path:
+        return self.root / f"{table}.staging"
+
+    def stage_append(self, table: str, df: DataFrame, snapshot: int) -> Path:
+        """Write ``df`` to a fresh staging dir of ``table`` (the write is
+        the action that runs ``df``'s plan); nothing is visible until
+        :meth:`publish_append`. ``snapshot`` is the version of the table
+        whose CAS the writer must win before it publishes (see
+        :meth:`sweep_staged`). A failed write leaves no staging dir."""
+        staged = self._staging_root(table) / f"{snapshot}-{uuid.uuid4().hex}"
+        try:
+            df.write.parquet(str(staged))
+        except BaseException:
+            shutil.rmtree(staged, ignore_errors=True)
+            raise
+        return staged
+
+    def publish_append(self, table: str, staged: Path) -> None:
+        """Move a staged append's part files into the table dir, one
+        ``os.replace`` each, then drop the staging dir. Spark's own
+        append commit also renames task files into place one by one, so
+        a crash mid-publish is no weaker than a crash mid-append: some
+        part files visible, none torn. Part names are unique per write,
+        so a publish never overwrites another writer's file."""
+        dest = self._legacy_path(table)
+        dest.mkdir(exist_ok=True)
+        for f in sorted(staged.iterdir()):
+            if not f.name.startswith((".", "_")):
+                os.replace(f, dest / f.name)
+        shutil.rmtree(staged, ignore_errors=True)
+
+    def discard_staged(self, staged: Path) -> None:
+        """Drop a staged append (a no-op once published)."""
+        shutil.rmtree(staged, ignore_errors=True)
+
+    def sweep_staged(self, table: str, current: int) -> None:
+        """Remove the staging dirs a dead writer left behind, given the
+        ``current`` version of the gating table. A writer that staged at
+        snapshot ``v`` publishes only after winning the CAS from ``v`` to
+        ``v + 1``; once the table is at ``v + 2`` it has either lost that
+        CAS or won it and been followed by another commit, so it will
+        never publish again. Only such dirs are swept, and only once they
+        are also older than ``claim_ttl_s``, a margin for a winner still
+        moving its files. Age alone is no evidence: Spark keeps a live
+        write's files under ``_temporary`` until its job commits, so the
+        dir's mtime stays at the start of a write however long it runs."""
+        root = self._staging_root(table)
+        if not root.exists():
+            return
+        cutoff = time.time() - self.claim_ttl_s
+        for p in root.iterdir():
+            try:
+                snapshot = int(p.name.split("-", 1)[0])
+                stale = snapshot <= current - 2 and p.stat().st_mtime <= cutoff
+            except (ValueError, FileNotFoundError):
+                continue  # not a staging dir, or its owner just removed it
+            if stale:
+                shutil.rmtree(p, ignore_errors=True)
+
     def _claim(self, table: str, vdir: Path, vname: Path, nxt: int, token: str) -> Path:
         """Take the O_EXCL claim for version ``nxt`` and record ``token``
         (the fencing identity) inside it; on conflict, reclaim a
         hard-crashed writer's orphan (claim older than ``claim_ttl_s``
         with CURRENT still below ``nxt`` — a live writer finishes its
         config-scale write well inside the TTL) and retry once."""
-        import time
-
         claim = vdir / f"{vname.name}.claim"
         for attempt in (0, 1):
             try:
@@ -443,8 +519,13 @@ class JobStore(VersionedParquetTables):
         )
         os.replace(log / f".{name}", log / name)
 
-    def append_job_data(self, run_results: DataFrame, now: dt.datetime) -> None:
-        """Materialize run results as job_data rows (R12/S8).
+    def stage_job_data(
+        self, run_results: DataFrame, now: dt.datetime, monitors_version: int
+    ) -> Path:
+        """Write run results as job_data rows (R12/S8) to a staging dir,
+        in the one Spark job that runs the evaluation; returns the dir
+        for :meth:`publish_append` or :meth:`discard_staged`.
+        ``monitors_version`` is the snapshot the tick's CAS expects.
 
         ``id`` is xxhash64(job_id, scheduled_ts): unique per (job, tick)
         and *deterministic*, so an idempotent re-run of a tick reproduces
@@ -463,7 +544,14 @@ class JobStore(VersionedParquetTables):
                 F.col("graph_data"),
             ).alias("data"),
         )
-        self.append("job_data", rows)
+        return self.stage_append("job_data", rows, monitors_version)
+
+    def append_job_data(self, run_results: DataFrame, now: dt.datetime) -> None:
+        """Stage and publish run results as job_data rows at once. The
+        tick stages and publishes separately; this survives only because
+        ``perfbench/tick.py`` wraps it by name in its trace."""
+        staged = self.stage_job_data(run_results, now, self.current_version("monitors")[0])
+        self.publish_append("job_data", staged)
 
     def latest_job_data(self) -> DataFrame:
         """R8 — latest result per job via row_number window."""

@@ -61,6 +61,12 @@ def select_metric(ts: DataFrame, name: str) -> DataFrame:
     return ts.filter(F.col(METRIC) == F.lit(name))
 
 
+def is_glob(pattern: str) -> bool:
+    """Whether a metric path has any Graphite wildcard (else it names
+    one series exactly)."""
+    return any(ch in pattern for ch in "*?{[")
+
+
 def glob_to_regex(pattern: str) -> str:
     """Translate a Graphite glob (``stats.*.cpu.{user,sys}``, ``[0-9]``)
     into an anchored Java regex. ``*`` does not cross dots (Graphite
@@ -116,7 +122,7 @@ def select_glob(
     broadcast of the (deduplicated) name set, no giant literal. The
     driver-side count(1) probe on the DIMENSION (config-scale) is what
     decides the route — the fact table is never touched to choose."""
-    if not any(ch in pattern for ch in "*?{["):
+    if not is_glob(pattern):
         return select_metric(ts, pattern)
     rx = glob_to_regex(pattern)
     if metric_names is not None:

@@ -4,8 +4,9 @@ monitors table are read and written on the driver with pyarrow. These
 tests pin that the files stay interchangeable with Spark's in both
 directions, that a drain interrupted mid-way redelivers only its unsent
 tail, that a tick's Spark job count does not grow with incident history
-and is zero when nothing is due, and that a tick releases the evaluation
-it cached."""
+and is zero when nothing is due, that a tick caches nothing (it releases
+every persisted RDD), and that its job_data rows are staged by its one
+action and published only after its CAS."""
 
 from __future__ import annotations
 
@@ -277,3 +278,158 @@ def test_tick_releases_its_cached_evaluation(spark, tmp_path):
     sched.race = False
     assert sched.tick(NOW + dt.timedelta(minutes=2))["ran"] == 1
     assert persisted().size() == before
+
+
+def _files(path) -> dict[str, bytes]:
+    return {p.name: p.read_bytes() for p in sorted(path.iterdir())} if path.exists() else {}
+
+
+def test_lost_cas_leaves_job_data_untouched_and_no_staging(spark, tmp_path):
+    """The job_data rows a tick stages are published only after its CAS:
+    a tick that loses the CAS leaves job_data byte-identical and its
+    staging dir removed."""
+    root = tmp_path / "store"
+    st = JobStore(spark, str(root))
+    st.save_monitors(spark.createDataFrame([_monitor(1)], MONITORS))
+    sched = _RacedScheduler(spark, st, _metrics(spark, 200.0), AlertRouter())
+    sched.tick(NOW)
+    before = _files(root / "job_data")
+    assert before
+    sched.race = True
+    with pytest.raises(ConcurrentWriteError):
+        sched.tick(NOW + dt.timedelta(minutes=1))
+    assert _files(root / "job_data") == before
+    assert _files(root / "job_data.staging") == {}
+
+
+def test_tick_job_data_rows_match_the_evaluation(spark, tmp_path):
+    """A winning tick persists, per due monitor, the row the direct
+    append wrote: id xxhash64(job_id, scheduled_ts), the tick time, and
+    the evaluation's status and graph_data."""
+    from rearview_spark.monitors.evaluate import MonitorSpec, evaluate_monitors
+
+    rows = [_monitor(1), _monitor(2, metrics=["movingAverage(stats.req, 5)"]),
+            _monitor(3, metrics=["stats.none"])]
+    st = JobStore(spark, str(tmp_path / "store"))
+    st.save_monitors(spark.createDataFrame(rows, MONITORS))
+    m = _metrics(spark, 200.0)
+    MonitorScheduler(spark, st, m, AlertRouter()).tick(NOW)
+
+    specs = [MonitorSpec.from_row(r) for r in st.read("monitors").collect()]
+    expected = evaluate_monitors(spark, specs, m, NOW).select(
+        F.xxhash64("job_id", "scheduled_ts").alias("id"), "job_id",
+        F.lit(NOW).alias("created_at"), F.lit(NOW).alias("updated_at"),
+        "status", "graph_data",
+    )
+    got = st.read("job_data").select(
+        "id", "job_id", "created_at", "updated_at", "data.status", "data.graph_data"
+    )
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expected.collect()))
+    assert {r["job_id"]: r["status"] for r in got.collect()} == {
+        1: "failed", 2: "failed", 3: "error"
+    }
+
+
+def test_tick_of_plain_path_monitors_is_two_spark_jobs(spark, tmp_path):
+    """Three bare-path monitors over a parquet metric store: the tick's
+    data plane is one action, the metrics scan stage and the final
+    evaluate-and-write stage, with no separate status collect."""
+    path = str(tmp_path / "metrics.parquet")
+    rows = [(f"stats.s{k}", T0 + dt.timedelta(minutes=i), 10.0 * k)
+            for k in (1, 2, 3) for i in range(120)]
+    spark.createDataFrame(rows, "metric string, ts timestamp, value double").write.parquet(path)
+    st = JobStore(spark, str(tmp_path / "store"))
+    st.save_monitors(spark.createDataFrame(
+        [_monitor(k, metrics=[f"stats.s{k}"], minutes=10 * k) for k in (1, 2, 3)], MONITORS
+    ))
+    sched = MonitorScheduler(spark, st, spark.read.parquet(path), AlertRouter())
+    assert _tick_jobs(spark, sched, NOW, f"plain-{tmp_path.name}") == 2
+    assert st.read("job_data").count() == 3
+
+
+def test_staged_job_data_is_invisible_until_swept(spark, tmp_path):
+    """Rows staged by a writer that never published are not part of
+    job_data for either reader. A tick sweeps the staging dir only once
+    the monitors table is two versions past the dir's snapshot AND the
+    dir is older than the store's claim TTL; either alone keeps it."""
+    root = tmp_path / "store"
+    st = JobStore(spark, str(root))
+    st.save_monitors(spark.createDataFrame([_monitor(1)], MONITORS))
+    sched = MonitorScheduler(spark, st, _metrics(spark, 200.0), AlertRouter())
+    sched.tick(NOW)
+
+    from rearview_spark.monitors.evaluate import MonitorSpec, evaluate_monitors
+
+    spec = MonitorSpec.from_row(st.read("monitors").collect()[0])
+    later = NOW + dt.timedelta(minutes=5)
+    v, _ = st.current_version("monitors")
+    staged = st.stage_job_data(evaluate_monitors(spark, [spec], sched.metrics, later), later, v)
+    assert any(staged.iterdir())
+    assert st.read("job_data").count() == 1
+    assert st.read_arrow("job_data").num_rows == 1
+    assert st.read("job_data").filter(F.col("created_at") == later).count() == 0
+
+    def age(seconds):
+        t = staged.stat().st_mtime - seconds
+        os.utime(staged, (t, t))
+
+    idle = NOW + dt.timedelta(seconds=30)  # nothing due: only the sweep runs
+    age(st.claim_ttl_s + 1)
+    for _ in range(2):  # old, but the table is at v, then v + 1
+        sched.tick(idle)
+        assert staged.exists()
+        st.save_monitors(st.read("monitors"))
+    assert st.current_version("monitors")[0] == v + 2
+    os.utime(staged)  # v + 2, but younger than claim_ttl_s
+    sched.tick(idle)
+    assert staged.exists()
+    age(st.claim_ttl_s + 1)
+    sched.tick(idle)
+    assert not staged.exists()
+    assert st.read_arrow("job_data").num_rows == 1
+
+
+class _SlowScheduler(MonitorScheduler):
+    """Between its staged write and its commit, ages the staging dir past
+    the claim TTL (a write that ran that long keeps its start-of-write
+    mtime) and runs ``overlap(staged)``."""
+
+    overlap = None
+
+    def _commit(self, now, due, runs, monitors_version, staged):
+        t = staged.stat().st_mtime - self.store.claim_ttl_s - 1
+        os.utime(staged, (t, t))
+        self.overlap(staged)
+        return super()._commit(now, due, runs, monitors_version, staged)
+
+
+def test_sweep_spares_a_slow_tick_that_has_not_committed(spark, tmp_path):
+    """A tick whose staged write outlasts the claim TTL keeps its staging
+    dir through an overlapping tick's sweep: if it then wins its CAS its
+    rows are published, and if it loses, the overlapping tick's rows are
+    job_data's and its own dir is removed."""
+    root = tmp_path / "store"
+    st = JobStore(spark, str(root))
+    st.save_monitors(spark.createDataFrame([_monitor(1, next_run=NOW)], MONITORS))
+    m = _metrics(spark, 200.0)
+    slow = _SlowScheduler(spark, st, m, AlertRouter())
+
+    def sweep(staged):  # a tick with nothing due: its sweep alone runs
+        MonitorScheduler(spark, st, m, AlertRouter()).tick(NOW - dt.timedelta(days=1))
+        assert staged.exists()
+
+    slow.overlap = sweep
+    assert slow.tick(NOW)["ran"] == 1
+    assert st.read_arrow("job_data").num_rows == 1
+
+    later = NOW + dt.timedelta(minutes=1)
+
+    def overlapping_tick(staged):  # due the same monitor, and wins the CAS
+        assert MonitorScheduler(spark, st, m, AlertRouter()).tick(later)["ran"] == 1
+        assert staged.exists()
+
+    slow.overlap = overlapping_tick
+    with pytest.raises(ConcurrentWriteError):
+        slow.tick(later)
+    assert st.read_arrow("job_data").num_rows == 2
+    assert _files(root / "job_data.staging") == {}

@@ -6,6 +6,12 @@ shuffle. Complements test_joins' plan assertions for the join family.
 
 from __future__ import annotations
 
+import dataclasses
+import datetime as dt
+import re
+
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -483,3 +489,220 @@ def test_graph_iterations_identical_with_and_without_state_broadcast(
     monkeypatch.setattr(_util, "BROADCAST_STATE_MAX", 20_000_000)
     on = snap()
     assert off == on
+
+
+# --- monitor evaluation ------------------------------------------------------
+
+_T0 = dt.datetime(2024, 1, 1, 0, 0)
+_NOW = _T0 + dt.timedelta(minutes=60)
+
+
+def _series(i: int) -> dict[str, float | None]:
+    """Values at minute ``i`` of the monitor-evaluation metric store."""
+    return {
+        "svc.a.req": 100.0 + i,
+        "svc.b.req": 200.0 + 2 * i,
+        "svc.a.err": float(i % 4),
+        "svc.b.err": None if i == 58 else float((i + 1) % 3),
+    }
+
+
+@pytest.fixture(scope="module")
+def metric_store(spark, tmp_path_factory):
+    """(parquet-backed metrics frame, the same rows in pandas)."""
+    rows = [
+        (name, _T0 + dt.timedelta(minutes=i), v)
+        for i in range(61)
+        for name, v in _series(i).items()
+    ]
+    path = str(tmp_path_factory.mktemp("metrics") / "metrics.parquet")
+    spark.createDataFrame(rows, "metric string, ts timestamp, value double").write.parquet(path)
+    return spark.read.parquet(path), pd.DataFrame(rows, columns=["metric", "ts", "value"])
+
+
+def _spec(id, metrics, minutes, expr="a.max() > 0"):
+    from rearview_spark.monitors.evaluate import MonitorSpec
+
+    return MonitorSpec(id=id, metrics=list(metrics), monitor_expr=expr,
+                       minutes=minutes, name=f"mon{id}")
+
+
+def _metric_scans(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString().count("FileScan parquet")
+
+
+def test_monitor_evaluation_scans_metrics_once_for_plain_targets(spark, metric_store):
+    """Bare-path targets share one metrics scan: 1 target and 30 over
+    different windows plan the same number of FileScans."""
+    from rearview_spark.monitors.evaluate import evaluate_monitors
+
+    metrics, _ = metric_store
+    paths = sorted(_series(0))
+    one = evaluate_monitors(spark, [_spec(1, [paths[0]], 5)], metrics, _NOW)
+    many = evaluate_monitors(
+        spark, [_spec(i, [paths[i % 4]], 1 + i) for i in range(30)], metrics, _NOW
+    )
+    assert _metric_scans(one) == _metric_scans(many) == 1
+
+
+def test_plain_target_scan_keeps_each_window(spark, metric_store):
+    """A backtest (``to_date``) due beside live monitors: the one metrics
+    scan pushes down the targets' own windows, overlapping ones merged,
+    not the span from the backtest's start to now, and each monitor sees
+    only its own window's points."""
+    from rearview_spark.monitors.evaluate import evaluate_monitors
+
+    metrics, _ = metric_store
+    backtest = dataclasses.replace(
+        _spec(1, ["svc.a.req"], 5), to_date=_T0 + dt.timedelta(minutes=10)
+    )
+    specs = [backtest, _spec(2, ["svc.a.req"], 5), _spec(3, ["svc.b.req"], 3)]
+    df = evaluate_monitors(spark, specs, metrics, _NOW)
+    plan = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    i = next(i for i, line in enumerate(plan) if "FileScan parquet" in line)
+    assert "PushedFilters: [Or(And(GreaterThanOrEqual(ts," in plan[i]
+    assert "Filter" in plan[i - 1]
+    assert re.findall(r"ts#\d+ >= ([\d:. -]+)\)", plan[i - 1]) == [
+        "2024-01-01 00:05:00", "2024-01-01 00:55:00"
+    ]
+    minutes = {
+        r["job_id"]: sorted(int((p["ts"] - _T0).total_seconds()) // 60 for p in r["graph_data"])
+        for r in df.collect()
+    }
+    assert minutes == {1: list(range(5, 11)), 2: list(range(55, 61)), 3: list(range(57, 61))}
+
+
+# A mixed fleet: raw paths (two groups share svc.a.req over different
+# windows, one group mixes a raw path with timeShift, monitors 1 and 11
+# share a window), a glob, sumSeries, movingAverage, asPercent, a bad
+# later target and a missing series.
+MIXED_FLEET = [
+    (1, ["svc.a.req"], 5, "a.iloc[-1] > 150"),
+    (2, ["svc.a.req"], 3, "a.mean() > 160"),
+    (3, ["svc.*.req"], 3, "a.max().max() > 250"),
+    (4, ["sumSeries(svc.*.err)"], 4, "a.sum() > 100"),
+    (5, ["movingAverage(svc.b.req, 3)"], 5, "a.iloc[-1] > 300"),
+    (6, ["svc.a.req", "timeShift(svc.a.req, '-10min')"], 3, "(a - b).abs().max() > 5"),
+    (7, ["asPercent(svc.*.err)"], 2, "a.max().max() > 90"),
+    (8, ["svc.a.req", "noSuchFn(svc.a.req)"], 5, "a.max() > 0"),
+    (9, ["svc.missing"], 5, "a.max() > 0"),
+    (10, ["svc.a.req", "svc.b.req"], 2, "(b - a).min() > 150"),
+    (11, ["svc.a.req"], 5, "a.max() < 0"),
+]
+RAW_PATH_IDS = (1, 2, 9, 10, 11)
+
+
+def _mixed_fleet_runs(spark, metrics) -> dict[int, tuple]:
+    """job id -> (status, message, graph_data as (metric, minute, value))."""
+    from rearview_spark.monitors.evaluate import evaluate_monitors
+
+    specs = [_spec(*m) for m in MIXED_FLEET]
+    out = {}
+    for r in evaluate_monitors(spark, specs, metrics, _NOW).collect():
+        graph = None if r["graph_data"] is None else [
+            (p["metric"], int((p["ts"] - _T0).total_seconds()) // 60,
+             None if p["value"] is None else round(p["value"], 9))
+            for p in r["graph_data"]
+        ]
+        out[r["job_id"]] = (r["status"], r["message"], graph)
+    return out
+
+
+# Captured from the evaluator as it was when each target still had its own
+# branch and metrics scan.
+MIXED_FLEET_EXPECTED = {1: ('failed',
+                            'alert: mon1 (a.iloc[-1] > 150)',
+                            [('svc.a.req', 55, 155.0),
+                             ('svc.a.req', 56, 156.0),
+                             ('svc.a.req', 57, 157.0),
+                             ('svc.a.req', 58, 158.0),
+                             ('svc.a.req', 59, 159.0),
+                             ('svc.a.req', 60, 160.0)]),
+                        2: ('success',
+                            None,
+                            [('svc.a.req', 57, 157.0),
+                             ('svc.a.req', 58, 158.0),
+                             ('svc.a.req', 59, 159.0),
+                             ('svc.a.req', 60, 160.0)]),
+                        3: ('failed',
+                            'alert: mon3 (a.max().max() > 250)',
+                            [('svc.a.req', 57, 157.0),
+                             ('svc.a.req', 58, 158.0),
+                             ('svc.a.req', 59, 159.0),
+                             ('svc.a.req', 60, 160.0),
+                             ('svc.b.req', 57, 314.0),
+                             ('svc.b.req', 58, 316.0),
+                             ('svc.b.req', 59, 318.0),
+                             ('svc.b.req', 60, 320.0)]),
+                        4: ('success',
+                            None,
+                            [('sumSeries', 56, 0.0),
+                             ('sumSeries', 57, 2.0),
+                             ('sumSeries', 58, 2.0),
+                             ('sumSeries', 59, 3.0),
+                             ('sumSeries', 60, 1.0)]),
+                        5: ('failed',
+                            'alert: mon5 (a.iloc[-1] > 300)',
+                            [('svc.b.req', 55, 310.0),
+                             ('svc.b.req', 56, 311.0),
+                             ('svc.b.req', 57, 312.0),
+                             ('svc.b.req', 58, 314.0),
+                             ('svc.b.req', 59, 316.0),
+                             ('svc.b.req', 60, 318.0)]),
+                        6: ('failed',
+                            'alert: mon6 ((a - b).abs().max() > 5)',
+                            [('svc.a.req', 57, 157.0),
+                             ('svc.a.req', 58, 158.0),
+                             ('svc.a.req', 59, 159.0),
+                             ('svc.a.req', 60, 160.0),
+                             ('svc.a.req', 57, 147.0),
+                             ('svc.a.req', 58, 148.0),
+                             ('svc.a.req', 59, 149.0),
+                             ('svc.a.req', 60, 150.0)]),
+                        7: ('failed',
+                            'alert: mon7 (a.max().max() > 90)',
+                            [('svc.a.err', 58, 100.0),
+                             ('svc.a.err', 59, 100.0),
+                             ('svc.a.err', 60, 0.0),
+                             ('svc.b.err', 58, None),
+                             ('svc.b.err', 59, 0.0),
+                             ('svc.b.err', 60, 100.0)]),
+                        8: ('error', "target 'noSuchFn(svc.a.req)': unsupported Graphite function: noSuchFn", None),
+                        9: ('error', 'no data in window', None),
+                        10: ('failed',
+                             'alert: mon10 ((b - a).min() > 150)',
+                             [('svc.a.req', 58, 158.0),
+                              ('svc.a.req', 59, 159.0),
+                              ('svc.a.req', 60, 160.0),
+                              ('svc.b.req', 58, 316.0),
+                              ('svc.b.req', 59, 318.0),
+                              ('svc.b.req', 60, 320.0)]),
+                        11: ('success',
+                             None,
+                             [('svc.a.req', 55, 155.0),
+                              ('svc.a.req', 56, 156.0),
+                              ('svc.a.req', 57, 157.0),
+                              ('svc.a.req', 58, 158.0),
+                              ('svc.a.req', 59, 159.0),
+                              ('svc.a.req', 60, 160.0)])}
+
+
+def test_mixed_fleet_runs_match_the_per_target_evaluator(spark, metric_store):
+    """Statuses, messages and graph_data of a mixed fleet equal the
+    values the evaluator gave when every target was its own branch; the
+    raw-path monitors' points equal a pandas recomputation as well."""
+    metrics, pdf = metric_store
+    runs = _mixed_fleet_runs(spark, metrics)
+    assert runs == MIXED_FLEET_EXPECTED
+
+    for id, targets, minutes, _ in MIXED_FLEET:
+        if id not in RAW_PATH_IDS:
+            continue
+        lo = _NOW - dt.timedelta(minutes=minutes)
+        expected = [
+            (r.metric, int((r.ts - _T0).total_seconds()) // 60, r.value)
+            for path in targets
+            for r in pdf[(pdf.metric == path) & pdf.ts.between(lo, _NOW)]
+            .sort_values("ts").itertuples()
+        ]
+        assert runs[id][2] == (expected or None), id
