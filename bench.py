@@ -1,20 +1,49 @@
-"""Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default
+"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    python bench.py [--plans-dir DIR | --ab REF] [QUERY ...]
 
-The per-query timing is wall clock of plan execution + result
-materialization (count only — the driver compares engine throughput, not
-driver-side collect cost). A warmup pass on sf0.001 primes the JVM.
+runs $SPARK_GRAFT_BENCH_REPEATS interleaved passes (default 3):
+
+- QUERY: any registered or pending gate name; none means HEADLINE. An
+  unknown name exits non-zero, listing the valid names, before Spark
+  starts. ``sim_pq_scan_topk`` also times its index build as the
+  ``sim_pq_fit_encode`` line.
+- ``--plans-dir DIR``: before timing, write each line's
+  ``explain("formatted")`` to ``DIR/<name>.txt`` and print its
+  Exchange/Join/Aggregate/Window/Generate node counts and non-empty
+  ``PushedFilters`` to stderr.
+- ``--ab REF``: check REF out as a detached ``git worktree`` in the temp
+  directory, then run 10 pairs of REF's and this tree's bench.py one
+  after the other (never two JVMs at once), alternating which goes
+  first, one pass per arm; print per-line medians, REF's IQR, win counts
+  and an ``ab_verdict``.
+
+Prints ONE JSON line on stdout: metric, value, unit, queries, sf, load
+(1-minute loadavg per pass) and a comparable summary. A line's time is
+the wall clock of plan construction + ``count()`` (engine throughput, not
+collect cost), after a warmup pass on sf0.001 primes the JVM. Every run
+also profiles each line: plan vs action seconds and the Spark figures of
+a job group set around it. That goes to stderr, one JSON line per query
+([min, median, max] seconds, then the min pass's profile), and, for a
+full HEADLINE run, into the ``bench_history/`` archive. Named runs are
+not archived, so they never move the drift baseline.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import re
+import shutil
+import statistics
+import subprocess
 import sys
+import tempfile
 import time
+import uuid
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -195,9 +224,10 @@ def _current_round(here: str) -> int | None:
 def _previous_bench(
     here: str | None = None,
     want_sf: object | None = None,
-) -> tuple[str, dict, object, dict] | None:
-    """(round tag, timings, sf, spread) of the newest prior-round bench
-    record — the cross-round drift baseline.
+) -> tuple[str, dict, object, dict, str] | None:
+    """(round tag, timings, sf, spread, path) of the newest prior-round
+    bench record — the cross-round drift baseline; ``path`` names the file
+    it came from, relative to ``here``.
 
     Two sources, per round: ``bench_history/r*.json`` (written by this
     script — the FULL payload, always parseable) is preferred over the
@@ -275,8 +305,9 @@ def format_driver_line(out: dict, limit: int = 1900) -> str:
     and r16 lines both outgrew it, which nulled the driver's own
     cross-round baseline two rounds running). Unconditionally: compact
     separators, per-query seconds at 2dp, and a SUMMARY-only
-    ``comparable`` (vs_round, n, totals, delta) — the full-precision
-    timings, spreads, per-pass samples and detail maps all live in
+    ``comparable`` (vs_round, totals, delta) — the full-precision
+    timings, pass count, shared-line count, spreads, per-pass samples,
+    profiles and detail maps all live in
     ``bench_history/`` (the archive _previous_bench prefers). If the
     line still exceeds ``limit`` (far more queries than today's 63),
     the comparable drops, then per-query precision falls to 1dp, then to
@@ -290,7 +321,7 @@ def format_driver_line(out: dict, limit: int = 1900) -> str:
     if comp:
         summary = {
             k: comp[k]
-            for k in ("vs_round", "n_queries", "total", "prev_total", "delta_pct")
+            for k in ("vs_round", "total", "prev_total", "delta_pct")
             if k in comp
         }
         slim["comparable"] = summary
@@ -340,26 +371,244 @@ def _pq_scan_from_index(spark, sf_dir: str, base: str):
     return S.pq_scan_topk(codes, cb, queries, topk=10, m=4)
 
 
-def main() -> None:
-    import tempfile
+def _line_frame(spark, qs: dict, name: str, sf_dir: str, index_dir: str):
+    """The DataFrame a bench line counts (the PQ scan reads the index
+    ``_pq_index_build`` persisted under ``index_dir``)."""
+    if name == "sim_pq_scan_topk":
+        return _pq_scan_from_index(spark, sf_dir, index_dir)
+    return qs[name]["fn"](spark, sf_dir)
 
-    from rearview_spark.plans import all_queries
 
-    spark = get_spark("rearview_bench")
-    qs = all_queries()
+def _profiled(spark, label: str, build) -> dict[str, float]:
+    """Clear caches, then time ``build()`` (plan construction, plus any
+    eager jobs it runs) and, when it returns a DataFrame, its ``count()``
+    (the action), all under a job group of their own. Returns
+    ``{"s", "plan_s", "action_s"}`` plus the group's Spark figures."""
+    from perfbench.spans import spark_group_figures
+
+    sc = spark.sparkContext
+    group = f"bench:{label}:{uuid.uuid4().hex}"
+    spark.catalog.clearCache()
+    sc.setJobGroup(group, label)
+    try:
+        t0 = time.perf_counter()
+        df = build()
+        t1 = time.perf_counter()
+        if df is not None:
+            df.count()
+        t2 = time.perf_counter()
+    finally:
+        sc.setJobGroup(None, None)
+    return {"s": t2 - t0, "plan_s": t1 - t0, "action_s": t2 - t1,
+            **spark_group_figures(spark, group)}
+
+
+def run_line(spark, qs: dict, name: str, sf_dir: str, index_dir: str) -> dict[str, dict]:
+    """Time one bench line: ``{line: profile}`` (see ``_profiled``).
+    ``sim_pq_scan_topk`` yields two lines, the index build
+    (``sim_pq_fit_encode``) and then the scan over it, so neither number
+    hides the other."""
+    out = {}
+    if name == "sim_pq_scan_topk":
+        out["sim_pq_fit_encode"] = _profiled(
+            spark, "sim_pq_fit_encode", lambda: _pq_index_build(spark, sf_dir, index_dir)
+        )
+    out[name] = _profiled(spark, name, lambda: _line_frame(spark, qs, name, sf_dir, index_dir))
+    return out
+
+
+def _compact(profile: dict[str, float]) -> dict[str, float]:
+    return {k: round(v, 3) if k == "s" or k.endswith("_s") else int(v) for k, v in profile.items()}
+
+
+_PLAN_NODE = re.compile(r"Exchange|Join|Aggregate|Window|Generate|CartesianProduct")
+
+
+def plan_summary(text: str) -> tuple[dict[str, int], list[str]]:
+    """Exchange/Join/Aggregate/Window/Generate node counts and the
+    non-empty ``PushedFilters`` lines of an ``explain("formatted")``
+    string (numbered node headers are ``(N) NodeName ...``)."""
+    nodes = Counter(re.findall(r"^\(\d+\) (\w+)", text, re.M))
+    counts = {k: v for k, v in sorted(nodes.items()) if _PLAN_NODE.search(k)}
+    pushed = [
+        s.strip() for s in text.splitlines()
+        if s.strip().startswith("PushedFilters") and "[]" not in s
+    ]
+    return counts, pushed
+
+
+def _write_plans(spark, qs: dict, lines: list[str], sf_dir: str, index_dir: str, plans_dir: str) -> None:
+    os.makedirs(plans_dir, exist_ok=True)
+    for name in lines:
+        if name == "sim_pq_scan_topk":  # the scan plans over a built index
+            _pq_index_build(spark, sf_dir, index_dir)
+        df = _line_frame(spark, qs, name, sf_dir, index_dir)
+        text = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+        with open(os.path.join(plans_dir, f"{name}.txt"), "w") as f:
+            f.write(text)
+        counts, pushed = plan_summary(text)
+        print(f"== {name} {counts}", file=sys.stderr)
+        for s in pushed:
+            print(f"   {s[:140]}", file=sys.stderr)
+
+
+def ab_verdict(ref: list[float], cur: list[float]) -> tuple[str, int, int]:
+    """``(verdict, cur_wins, ref_wins)`` over paired samples, by the
+    simplicity-review rule: "faster" (or "slower") only when the current
+    tree wins (or loses) at least nine tenths of the pairs, ties counting
+    for neither side, AND the medians differ by more than REF's
+    interquartile range; otherwise "parity"."""
+    cur_wins = sum(c < r for r, c in zip(ref, cur))
+    ref_wins = sum(r < c for r, c in zip(ref, cur))
+    q1, _, q3 = statistics.quantiles(ref, n=4, method="inclusive")
+    gap = statistics.median(ref) - statistics.median(cur)
+    if 10 * cur_wins >= 9 * len(ref) and gap > q3 - q1:
+        return "faster", cur_wins, ref_wins
+    if 10 * ref_wins >= 9 * len(ref) and -gap > q3 - q1:
+        return "slower", cur_wins, ref_wins
+    return "parity", cur_wins, ref_wins
+
+
+def _bench_child(tree: str, names: list[str]) -> dict[str, float]:
+    """One pass of ``tree``'s bench.py in a fresh process: its per-line
+    seconds (the one JSON line on stdout)."""
+    p = subprocess.run(
+        [sys.executable, "bench.py", *names],
+        cwd=tree,
+        env=dict(os.environ, SPARK_GRAFT_BENCH_REPEATS="1"),
+        capture_output=True,
+        text=True,
+    )
+    if p.returncode:
+        raise RuntimeError(f"bench.py in {tree} exited {p.returncode}: {p.stderr[-2000:]}")
+    line = [s for s in p.stdout.splitlines() if s.startswith("{")][-1]
+    return json.loads(line)["queries"]
+
+
+def _ab(ref: str, names: list[str], pairs: int = 10) -> None:
+    """Interleaved A/B of REF's committed tree against this one. A REF
+    whose bench.py predates named lines runs its full set, so only the
+    lines every run of both sides timed are compared; its JVM is then
+    warmed by every plan shape while this side's is warmed by the named
+    ones only, which biases a named A/B against this tree. A/B the full
+    set against such a REF."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    # named on this side too, so no arm writes the bench_history archive
+    names = names or HEADLINE
+    tree = tempfile.mkdtemp(prefix="bench_ab_")
+    runs: dict[str, list[dict[str, float]]] = {"ref": [], "cur": []}
+    loads = []
+    try:
+        subprocess.run(
+            ["git", "worktree", "add", "--detach", tree, ref],
+            cwd=here, check=True, capture_output=True,
+        )
+        for i in range(pairs):
+            loads.append(round(os.getloadavg()[0], 1))
+            order = [("ref", tree), ("cur", here)]
+            for side, cwd in order if i % 2 == 0 else order[::-1]:
+                runs[side].append(_bench_child(cwd, names))
+    finally:
+        subprocess.run(["git", "worktree", "remove", "--force", tree], cwd=here, check=False)
+        shutil.rmtree(tree, ignore_errors=True)
+
+    shared = [q for q in runs["cur"][0] if all(q in r for r in runs["ref"] + runs["cur"])]
+    print(f"ab: ref={ref} sf_dir={SF_DIR} pairs={pairs} lines={len(shared)} load_1m={loads}")
+    print(f"{'line':34} {'ref_med':>8} {'ref_iqr':>8} {'cur_med':>8} {'cur:ref wins':>12}  verdict")
+    rows = {q: ([r[q] for r in runs["ref"]], [r[q] for r in runs["cur"]]) for q in shared}
+    rows["TOTAL"] = tuple(
+        [round(sum(r[q] for q in shared), 3) for r in runs[side]] for side in ("ref", "cur")
+    )
+    for q, (r, c) in rows.items():
+        verdict, cw, rw = ab_verdict(r, c)
+        q1, _, q3 = statistics.quantiles(r, n=4, method="inclusive")
+        print(
+            f"{q:34} {statistics.median(r):8.3f} {q3 - q1:8.3f} "
+            f"{statistics.median(c):8.3f} {f'{cw}:{rw}':>12}  {verdict}"
+        )
+
+
+def _archive(here: str, full: dict, names: list[str]) -> None:
+    """Archive the FULL payload (queries + per-query spread + per-pass
+    samples and profiles + uncapped comparable) under
+    ``bench_history/r{N}_sf{sf}.json``: only the last ~2000 chars of
+    stdout are kept by whoever runs the bench, and once the printed line
+    outgrew that window its parse silently failed and the next round lost
+    its drift baseline. The archive is the durable cross-round record
+    _previous_bench prefers; the PRINTED line stays the one-line contract
+    and is kept under the window by moving spread out of it and capping
+    the comparable detail maps (full versions live in the archive). A run
+    of named lines is not archived: its subset would become the next
+    round's drift baseline."""
+    if names:
+        return
+    try:
+        hist = os.path.join(here, "bench_history")
+        os.makedirs(hist, exist_ok=True)
+        rnd = _current_round(here)
+        name = (
+            f"r{rnd:02d}_sf{full['sf']}.json" if rnd else f"local_sf{full['sf']}.json"
+        )
+        with open(os.path.join(hist, name), "w") as f:
+            json.dump(full, f)
+        # ALSO keep a per-run copy (…_runK.json): the latest-run file
+        # above is what _previous_bench reads (its glob regex skips the
+        # _runK suffix), but a round often benches several times and the
+        # per-run spreads are the raw material for noise adjudication —
+        # overwriting them erased r10's earlier runs (PLANS.md note).
+        k = 1
+        while os.path.exists(
+            os.path.join(hist, name.replace(".json", f"_run{k}.json"))
+        ):
+            k += 1
+        with open(
+            os.path.join(hist, name.replace(".json", f"_run{k}.json")), "w"
+        ) as f:
+            json.dump(full, f)
+    except OSError:
+        pass  # archiving is best-effort; the printed contract line rules
+
+
+def main(argv: list[str] | None = None) -> None:
+    from rearview_spark.plans import all_pending, all_queries
+
+    ap = argparse.ArgumentParser(description="Time bench lines (module docstring).")
+    ap.add_argument("names", nargs="*", metavar="QUERY")
+    ap.add_argument("--plans-dir", metavar="DIR")
+    ap.add_argument("--ab", metavar="REF")
+    args = ap.parse_args(argv)
+    qs = {**all_queries(), **all_pending()}  # pending gates are measurable too
+    unknown = [q for q in args.names if q not in qs]
+    if unknown:
+        ap.error(f"unknown query name(s) {unknown}; valid names: {' '.join(sorted(qs))}")
+    if args.ab:
+        if args.plans_dir:
+            ap.error("--plans-dir does not combine with --ab")
+        _ab(args.ab, args.names)
+        return
+    lines = args.names or HEADLINE
+
+    # The profile reads each line's jobs and stages back from the status
+    # store, which past its default 1000 retained stages evicts SKIPPED
+    # stages first, the running line's own included.
+    spark = get_spark("rearview_bench", extra_conf={
+        "spark.ui.retainedJobs": "100000", "spark.ui.retainedStages": "100000",
+    })
     index_dir = tempfile.mkdtemp(prefix="rearview_bench_idx_")
 
     # warmup: prime JVM JIT + whole-stage-codegen class compilation for
-    # EVERY headline plan shape on the smallest SF, so the timed sf0.1 runs
+    # EVERY timed plan shape on the smallest SF, so the timed sf0.1 runs
     # measure engine throughput, not first-compile of the generated code
     # (codegen classes are keyed by plan shape and reused across SFs).
     warm_idx = f"{index_dir}/warm"
-    for name in HEADLINE:
+    for name in lines:
         if name == "sim_pq_scan_topk":
             _pq_index_build(spark, "/root/testdata/sf0.001", warm_idx)
             _pq_scan_from_index(spark, "/root/testdata/sf0.001", warm_idx).count()
         else:
             qs[name]["fn"](spark, "/root/testdata/sf0.001").count()
+    if args.plans_dir:
+        _write_plans(spark, qs, lines, SF_DIR, f"{index_dir}/main", args.plans_dir)
 
     # N full interleaved PASSES over the whole headline set (VERDICT_r15
     # next-round #4): each pass times every query once, so the artifact
@@ -382,8 +631,7 @@ def main() -> None:
     passes = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
 
     def _spread(s: list[float]) -> list[float]:
-        med = s[len(s) // 2] if len(s) % 2 else (s[len(s) // 2 - 1] + s[len(s) // 2]) / 2
-        return [round(s[0], 3), round(med, 3), round(s[-1], 3)]
+        return [round(x, 3) for x in (s[0], statistics.median(s), s[-1])]
 
     def _loadavg() -> str:
         try:
@@ -392,32 +640,15 @@ def main() -> None:
         except OSError:
             return "n/a"
 
-    def _timed(thunk) -> float:
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        thunk()
-        return time.perf_counter() - t0
-
-    pass_times: list[dict[str, float]] = []
+    pass_profiles: list[dict[str, dict]] = []
     pass_loads: list[str] = []
     for _p in range(passes):
         pass_loads.append(_loadavg())
-        cur: dict[str, float] = {}
-        for name in HEADLINE:
-            if name == "sim_pq_scan_topk":
-                # build once per pass (its own line), then time the scan
-                cur["sim_pq_fit_encode"] = _timed(
-                    lambda: _pq_index_build(spark, SF_DIR, f"{index_dir}/main")
-                )
-                cur[name] = _timed(
-                    lambda: _pq_scan_from_index(
-                        spark, SF_DIR, f"{index_dir}/main"
-                    ).count()
-                )
-            else:
-                fn = qs[name]["fn"]
-                cur[name] = _timed(lambda: fn(spark, SF_DIR).count())
-        pass_times.append(cur)
+        cur: dict[str, dict] = {}
+        for name in lines:
+            cur.update(run_line(spark, qs, name, SF_DIR, f"{index_dir}/main"))
+        pass_profiles.append(cur)
+    pass_times = [{q: p["s"] for q, p in pp.items()} for pp in pass_profiles]
 
     timings: dict[str, float] = {}
     spreads: dict[str, list[float]] = {}
@@ -425,6 +656,14 @@ def main() -> None:
         s = sorted(pt[name] for pt in pass_times)
         timings[name] = round(s[0], 3)
         spreads[name] = _spread(s)
+        best = min(pass_profiles, key=lambda pp: pp[name]["s"])
+        print(
+            json.dumps(
+                {"line": name, "spread": spreads[name], **_compact(best[name])},
+                separators=(",", ":"),
+            ),
+            file=sys.stderr,
+        )
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     out = {
@@ -433,7 +672,8 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "repeats": passes,
+        # one 1-minute loadavg per pass, so its length is the pass count
+        "load": [round(float(la.split()[0]), 1) for la in pass_loads if la != "n/a"],
     }
     # Cross-round drift, computed on the queries BOTH rounds timed so new
     # headline lines never skew the comparison (VERDICT r04 next-round #8).
@@ -475,13 +715,7 @@ def main() -> None:
             sample_totals = [
                 round(sum(pt[q] for q in shared), 3) for pt in pass_times
             ]
-            st = sorted(sample_totals)
-            median_total = round(
-                st[len(st) // 2]
-                if len(st) % 2
-                else (st[len(st) // 2 - 1] + st[len(st) // 2]) / 2,
-                3,
-            )
+            median_total = round(statistics.median(sample_totals), 3)
             out["comparable"] = {
                 "vs_round": tag,
                 # which archived run the totals were compared against
@@ -502,47 +736,17 @@ def main() -> None:
                 "within_noise": noise,
             }
 
-    # Archive the FULL payload (queries + per-query spread + uncapped
-    # comparable) under bench_history/r{N}.json: the driver records only
-    # the last ~2000 chars of stdout, and once the printed line outgrew
-    # that window (r09) its parse silently failed and the next round lost
-    # its drift baseline. The archive is the durable cross-round record
-    # _previous_bench prefers; the PRINTED line stays the driver contract
-    # and is kept under the window by moving spread out of it and capping
-    # the comparable detail maps (full versions live in the archive).
-    here = os.path.dirname(os.path.abspath(__file__))
-    full = dict(out)
+    full = dict(out, repeats=passes)
     full["spread"] = spreads
     # raw per-pass per-query samples — the material drift adjudication
     # actually needs (the printed line stays within the driver window)
     full["pass_queries"] = [
         {q: round(v, 3) for q, v in pt.items()} for pt in pass_times
     ]
-    try:
-        hist = os.path.join(here, "bench_history")
-        os.makedirs(hist, exist_ok=True)
-        rnd = _current_round(here)
-        name = (
-            f"r{rnd:02d}_sf{out['sf']}.json" if rnd else f"local_sf{out['sf']}.json"
-        )
-        with open(os.path.join(hist, name), "w") as f:
-            json.dump(full, f)
-        # ALSO keep a per-run copy (…_runK.json): the latest-run file
-        # above is what _previous_bench reads (its glob regex skips the
-        # _runK suffix), but a round often benches several times and the
-        # per-run spreads are the raw material for noise adjudication —
-        # overwriting them erased r10's earlier runs (PLANS.md note).
-        k = 1
-        while os.path.exists(
-            os.path.join(hist, name.replace(".json", f"_run{k}.json"))
-        ):
-            k += 1
-        with open(
-            os.path.join(hist, name.replace(".json", f"_run{k}.json")), "w"
-        ) as f:
-            json.dump(full, f)
-    except OSError:
-        pass  # archiving is best-effort; the printed contract line rules
+    full["profile"] = [
+        {q: _compact(p) for q, p in pp.items()} for pp in pass_profiles
+    ]
+    _archive(os.path.dirname(os.path.abspath(__file__)), full, args.names)
 
     print(format_driver_line(out))
 

@@ -16,7 +16,12 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("rearview_tests", shuffle_partitions=8)
+    # Keep every job and stage in the status store: past the default 1000
+    # retained stages Spark evicts SKIPPED stages first, even those of the
+    # job a test is reading back (tests/test_bench_profile.py).
+    s = get_spark("rearview_tests", shuffle_partitions=8, extra_conf={
+        "spark.ui.retainedJobs": "100000", "spark.ui.retainedStages": "100000",
+    })
     yield s
 
 

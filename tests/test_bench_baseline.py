@@ -124,7 +124,7 @@ def _line_for(queries: dict) -> str:
         "unit": "sec",
         "queries": queries,
         "sf": 0.1,
-        "repeats": 3,
+        "load": [31.9, 31.9, 31.9],
         "comparable": _fat_comparable(),
     }
     return bench.format_driver_line(out)
@@ -146,6 +146,7 @@ def test_printed_line_fits_for_real_headline_set():
     assert set(doc["queries"]) == set(queries)
     for k in ("metric", "value", "unit", "queries", "sf"):
         assert k in doc
+    assert doc["load"] == [31.9, 31.9, 31.9]
     # detail maps never print — they live in bench_history/
     assert "outliers" not in json.dumps(doc.get("comparable", {}))
 
@@ -188,3 +189,124 @@ def test_printed_line_falls_to_whole_seconds_then_raises():
     assert json.loads(line)["queries"]["q000"] == 12
     with pytest.raises(ValueError, match="whole-second"):
         bench.format_driver_line(out, limit=len(whole) - 1)
+
+
+# ---------------------------------------------------------------------------
+# The harness inputs: --ab verdicts, --plans-dir summaries, name checking,
+# and named runs staying out of the drift baseline.
+# ---------------------------------------------------------------------------
+
+_REF = [1.00, 1.01, 1.02, 1.03, 1.04, 1.05, 1.06, 1.07, 1.08, 1.09]
+
+
+@pytest.mark.parametrize(
+    "cur, expected",
+    [
+        # 9/10 wins and a median gap (0.2 s) past REF's IQR (0.045 s)
+        ([r - 0.2 for r in _REF[:9]] + [_REF[9] + 0.1], ("faster", 9, 1)),
+        # 8/10 wins is not enough, however large the gap
+        ([r - 0.2 for r in _REF[:8]] + [r + 0.1 for r in _REF[8:]], ("parity", 8, 2)),
+        # ties count for neither side: 9 wins + 1 tie still reads faster,
+        # 8 wins + 2 ties does not
+        ([r - 0.2 for r in _REF[:9]] + [_REF[9]], ("faster", 9, 0)),
+        ([r - 0.2 for r in _REF[:8]] + _REF[8:], ("parity", 8, 0)),
+        # every pair won, but by less than REF's IQR
+        ([r - 0.001 for r in _REF], ("parity", 10, 0)),
+        # the symmetric case of the first row
+        ([r + 0.2 for r in _REF[:9]] + [_REF[9] - 0.1], ("slower", 1, 9)),
+    ],
+)
+def test_ab_verdict(cur, expected):
+    assert bench.ab_verdict(_REF, cur) == expected
+
+
+_EXPLAIN = """== Physical Plan ==
+AdaptiveSparkPlan (11)
++- HashAggregate (10)
+   +- Exchange (9)
+      +- HashAggregate (8)
+         +- Window (7)
+            +- BroadcastHashJoin Inner BuildRight (6)
+               :- Generate (3)
+               :  +- Scan parquet  (1)
+               +- BroadcastExchange (5)
+                  +- Scan parquet  (4)
+
+
+(1) Scan parquet 
+Output [2]: [l_orderkey#1L, l_extendedprice#2]
+Batched: true
+PushedFilters: [IsNotNull(l_orderkey), GreaterThan(l_extendedprice,1.0)]
+ReadSchema: struct<l_orderkey:bigint,l_extendedprice:double>
+
+(3) Generate
+Input [2]: [l_orderkey#1L, l_extendedprice#2]
+
+(4) Scan parquet 
+Output [1]: [o_orderkey#3L]
+PushedFilters: []
+ReadSchema: struct<o_orderkey:bigint>
+
+(5) BroadcastExchange
+Input [1]: [o_orderkey#3L]
+
+(6) BroadcastHashJoin [codegen id : 2]
+Left keys [1]: [l_orderkey#1L]
+
+(7) Window
+Input [2]: [l_orderkey#1L, l_extendedprice#2]
+
+(8) HashAggregate [codegen id : 3]
+Keys [1]: [l_orderkey#1L]
+
+(9) Exchange
+Input [2]: [l_orderkey#1L, sum#4]
+
+(10) HashAggregate [codegen id : 4]
+Keys [1]: [l_orderkey#1L]
+
+(11) AdaptiveSparkPlan
+Output [2]: [l_orderkey#1L, revenue#5]
+"""
+
+
+def test_plan_summary_counts_wide_nodes_and_pushed_filters():
+    counts, pushed = bench.plan_summary(_EXPLAIN)
+    assert counts == {
+        "BroadcastExchange": 1,
+        "BroadcastHashJoin": 1,
+        "Exchange": 1,
+        "Generate": 1,
+        "HashAggregate": 2,
+        "Window": 1,
+    }
+    assert pushed == [
+        "PushedFilters: [IsNotNull(l_orderkey), GreaterThan(l_extendedprice,1.0)]"
+    ]
+
+
+def test_unknown_query_name_exits_before_spark_starts(monkeypatch, capsys):
+    def no_spark(*_a, **_k):
+        raise AssertionError("a Spark session started")
+
+    monkeypatch.setattr(bench, "get_spark", no_spark)
+    with pytest.raises(SystemExit) as exc:
+        bench.main(["q1_pricing_summary", "no_such_query"])
+    assert exc.value.code != 0
+    err = capsys.readouterr().err
+    assert "no_such_query" in err
+    assert "q1_pricing_summary" in err and "graph_hits" in err  # valid names listed
+
+
+def test_named_run_leaves_previous_bench_unchanged(tmp_path, monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_BASELINE_ROUND", raising=False)
+    (tmp_path / "VERDICT.md").write_text("# VERDICT — round 4\n")
+    full = {"queries": {"q1": 1.0, "q2": 2.0, "q3": 3.0}, "sf": 0.1}
+    bench._archive(str(tmp_path), full, [])
+    bench._archive(str(tmp_path), {"queries": {"q1": 9.0}, "sf": 0.1}, ["q1"])
+    # round 5 (the archived runs' round) closes: its FULL run is the
+    # baseline the next round compares against
+    (tmp_path / "VERDICT.md").write_text("# VERDICT — round 5\n")
+    tag, queries, sf, _spread, path = bench._previous_bench(str(tmp_path))
+    assert (tag, queries, sf) == ("r05", full["queries"], 0.1)
+    assert path == os.path.join("bench_history", "r05_sf0.1.json")
