@@ -408,6 +408,12 @@ def run_line(spark, qs: dict, name: str, sf_dir: str, index_dir: str) -> dict[st
     ``sim_pq_scan_topk`` yields two lines, the index build
     (``sim_pq_fit_encode``) and then the scan over it, so neither number
     hides the other."""
+    from rearview_spark.sources.loader import resolve_table_schemas
+
+    # The loader infers a table's schema on its first read in a process
+    # only: resolve them outside the profile, so that a line's figures do
+    # not depend on which line read its tables first.
+    resolve_table_schemas(spark, sf_dir)
     out = {}
     if name == "sim_pq_scan_topk":
         out["sim_pq_fit_encode"] = _profiled(

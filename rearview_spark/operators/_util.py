@@ -89,6 +89,24 @@ def observed_checkpoint(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
     return cp, obs.get
 
 
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the executor blocks behind a frame returned by
+    :func:`observed_checkpoint`, once nothing will read it again.
+
+    The frame is a ``LogicalRDD`` over the locally checkpointed RDD;
+    unpersisting that RDD drops its blocks (and its entry in
+    ``getPersistentRDDs``). A later read of the frame fails with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` instead of recomputing, so
+    release only after every frame that reads it is materialized.
+    """
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() != "LogicalRDD":
+        raise ValueError(
+            f"release_checkpoint: expected a checkpointed frame, got {plan.nodeName()}"
+        )
+    plan.rdd().unpersist(False)
+
+
 def fixed_point(
     state: DataFrame,
     step,

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from rearview_spark.operators._util import bcast_state as _bcast_state
 from rearview_spark.operators._util import ensure_parallelism, fixed_point
 from rearview_spark.operators._util import observed_checkpoint as _observed_checkpoint
+from rearview_spark.operators._util import release_checkpoint as _release_checkpoint
 from rearview_spark.operators.text import normalize_text, tokens
 
 # Fixed, public hash-mixing constants (string salts keep the scheme
@@ -342,11 +343,11 @@ def minhash_near_duplicates(
     bands: int = DEFAULT_BANDS,
     shingle_n: int = 3,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    scope_caches: bool = True,
 ) -> DataFrame:
     """Full MinHash-LSH pipeline: signatures → banded candidates → exact
     Jaccard verification on candidates only. Returns (id_a, id_b, jaccard)
-    with jaccard >= threshold."""
+    with jaccard >= threshold, materialized: the signatures it was built
+    from are already released."""
     df = ensure_parallelism(df, id_col)
     shingled = df.select(
         F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("sh")
@@ -354,12 +355,15 @@ def minhash_near_duplicates(
     # ONE shingle->explode->md5->aggregate pass produces BOTH the minhash
     # signature and the doc's 60-bit shingle-fingerprint set (see
     # signature_from_shingles): the banding stage reads sig, the
-    # verification stage intersects shs. Cached because the banded
-    # self-join and the two verification sides are three consumers; the
-    # per-doc row is narrow (16 longs + ~|sh| longs).
-    sigs = signature_from_shingles(
-        shingled, id_col, num_hashes, with_hash_set=True
-    ).cache()
+    # verification stage intersects shs. The banded self-join and the
+    # two verification sides scan it three times in one plan, so it is
+    # filled once by an eager checkpoint: a .cache() there is built
+    # once PER SCAN under AQE (one table-cache stage each) and keeps
+    # the aggregate's uncoalesced partitioning. The per-doc row is
+    # narrow (16 longs + ~|sh| longs).
+    sigs, _ = _observed_checkpoint(
+        signature_from_shingles(shingled, id_col, num_hashes, with_hash_set=True)
+    )
     cands = lsh_candidate_pairs(
         sigs.select(id_col, "sig"), id_col, num_hashes, bands, max_bucket_size
     )
@@ -376,18 +380,12 @@ def minhash_near_duplicates(
         joined.select("id_a", "id_b", _exact_jaccard("sh_a", "sh_b").alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
-    # Materialize the (pairs-scale, small) verified result and release the
-    # corpus-scale cache before returning: an unbounded .cache() pinned
-    # for the caller's lifetime competes with the shuffle for storage
-    # memory at 100 TB (VERDICT r04 "What's wrong" #4). localCheckpoint
-    # also truncates the lineage so the returned frame references the
-    # cache no longer. Measured sf0.1 cost of the eager materialization:
-    # ~+3% wall on this operator (see PLANS.md "Cache-scoping cost") —
-    # paid for the scale-safety; pass scope_caches=False to keep the lazy
-    # frame and manage the cache lifetime yourself.
-    if scope_caches:
-        verified = verified.localCheckpoint(eager=True)
-        sigs.unpersist()
+    # Materialize the (pairs-scale, small) verified result, then release
+    # the corpus-scale signatures: blocks pinned for the caller's
+    # lifetime would compete with the shuffle for storage memory at
+    # corpus scale.
+    verified, _ = _observed_checkpoint(verified)
+    _release_checkpoint(sigs)
     return verified
 
 
@@ -541,7 +539,10 @@ def incremental_minhash_dedup(
         new_sigs = minhash_store_rows(
             new_docs, text_col, id_col, num_hashes, shingle_n, bands
         )
-    new_sigs = new_sigs.cache()
+    # new_sigs and store are each scanned several times in one plan
+    # (both candidate sides, the verify sides, the output join): filled
+    # once, as in minhash_near_duplicates
+    new_sigs, _ = _observed_checkpoint(new_sigs)
     banded_new = (
         new_sigs.select(F.col(id_col), F.explode("bands").alias("bb"))
         .select(id_col, "bb.band", "bb.bh")
@@ -574,7 +575,7 @@ def incremental_minhash_dedup(
             store = store.withColumn(
                 "bands", F.expr(_band_structs_sql(num_hashes, bands))
             )
-        store = store.select(id_col, "shs", "bands").cache()
+        store, _ = _observed_checkpoint(store.select(id_col, "shs", "bands"))
         banded_store = (
             store.select(F.col(id_col), F.explode("bands").alias("bb"))
             .select(id_col, "bb.band", "bb.bh")
@@ -636,10 +637,10 @@ def incremental_minhash_dedup(
             F.col("_nid").alias(id_col), F.col("_mid").alias("dup_of"), "jaccard"
         )
     )
-    out = new_sigs.join(best, id_col, "left").localCheckpoint(eager=True)
-    new_sigs.unpersist()
+    out, _ = _observed_checkpoint(new_sigs.join(best, id_col, "left"))
+    _release_checkpoint(new_sigs)
     if store is not None:
-        store.unpersist()
+        _release_checkpoint(store)
     return out
 
 
@@ -1205,7 +1206,6 @@ def simhash_near_duplicates(
     bits: int = DEFAULT_SIMHASH_BITS,
     max_hamming: int = 3,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    scope_caches: bool = True,
 ) -> DataFrame:
     """Pairs whose SimHash signatures differ in <= max_hamming bits, via
     the pigeonhole chunk join: split the signature into (max_hamming+1)
@@ -1217,8 +1217,11 @@ def simhash_near_duplicates(
     in a bucket past ``max_bucket_size``, which is dropped whole rather
     than allowed to go quadratic (a 60-bit signature makes chunks >=15
     bits wide, so only a pathological corpus — thousands of bitwise-equal
-    chunks — ever hits the cap)."""
-    sigs = simhash_signature(df, text_col, id_col, bits).cache()
+    chunks — ever hits the cap). The result is materialized and the
+    signatures released (see :func:`minhash_near_duplicates`)."""
+    # three scans in one plan (both chunk sides, both verify sides):
+    # filled once, as in minhash_near_duplicates
+    sigs, _ = _observed_checkpoint(simhash_signature(df, text_col, id_col, bits))
     n_chunks = max_hamming + 1
     chunk_structs = []
     for c in range(n_chunks):
@@ -1253,15 +1256,8 @@ def simhash_near_duplicates(
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-    # Same cache-scoping pattern as minhash_near_duplicates: materialize
-    # the small pair set, then drop the corpus-scale signature cache.
-    # Measured sf0.1 cost of the eager materialization on this operator:
-    # see PLANS.md "Cache-scoping cost" (the r05 +16% bench drift was
-    # attributed here). scope_caches=False opts out for callers that
-    # manage cache lifetime themselves.
-    if scope_caches:
-        verified = verified.localCheckpoint(eager=True)
-        sigs.unpersist()
+    verified, _ = _observed_checkpoint(verified)
+    _release_checkpoint(sigs)
     return verified
 
 
@@ -1675,9 +1671,9 @@ def minhash_estimate_error(
 
     Scale shape: identical to minhash_near_duplicates (one signature
     pass, banded candidates — never all-pairs, pair-scale verification)
-    plus one K-element zip per pair; the same cache-scoping discipline
-    (errors materialize pair-scale, the corpus-scale signature cache
-    releases before return).
+    plus one K-element zip per pair; the same memory scoping (errors
+    materialize pair-scale, the corpus-scale signatures are released
+    before return).
 
     Cost warning (the PLANS.md decade table's 100× finding, carried
     into the contract): cost tracks CANDIDATE PAIRS under the bucket
@@ -1697,9 +1693,10 @@ def minhash_estimate_error(
     shingled = df.select(
         F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("sh")
     )
-    sigs = signature_from_shingles(
-        shingled, id_col, num_hashes, with_hash_set=True
-    ).cache()
+    # three scans in one plan: filled once, as in minhash_near_duplicates
+    sigs, _ = _observed_checkpoint(
+        signature_from_shingles(shingled, id_col, num_hashes, with_hash_set=True)
+    )
     cands = lsh_candidate_pairs(
         sigs.select(id_col, "sig"), id_col, num_hashes, bands, max_bucket_size
     )
@@ -1723,8 +1720,8 @@ def minhash_estimate_error(
     err = F.abs(m.cast("long") * u - i * F.lit(num_hashes)).cast("double") / (
         F.lit(num_hashes) * u
     ).cast("double")
-    errs = joined.select(err.alias("err")).localCheckpoint(eager=True)
-    sigs.unpersist()
+    errs, _ = _observed_checkpoint(joined.select(err.alias("err")))
+    _release_checkpoint(sigs)
     agg = errs.agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
         F.sum(F.round(F.col("err") * F.lit(float(scale))).cast("long")).alias(

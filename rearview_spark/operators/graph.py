@@ -663,14 +663,19 @@ def hits(
     All values are nonnegative, so truncating and floor division agree
     (Spark ``div`` == DuckDB ``//`` here, no pmod dance needed).
 
-    Scale shape per iteration: two equi-joins of the checkpointed edge
-    list against O(nodes) score frames (each on its own join key: dst
-    for authorities, src for hubs) + two map-side-combined hash
-    aggregates; the two renorm maxima are observed by the jobs that
-    fill the score checkpoints, NOT partition-less windows — the plan
-    stays sweep-clean. Returns ``(node, hub_fp, hub, auth_fp, auth)``
-    with zeros for roles a node never plays (a pure source has no
-    authority; a pure sink no hubness).
+    Since ``h_0`` is the constant ``scale``, ``a_1(v)`` is ``scale``
+    times v's in-degree: one aggregate over the edges, no score frame
+    and no join.
+
+    Scale shape per later half-step: an equi-join of the checkpointed
+    edge list against an O(nodes) score frame (dst for authorities, src
+    for hubs) + a map-side-combined hash aggregate; each renorm maximum
+    is observed by the job that fills the score checkpoint, NOT a
+    partition-less window — the plan stays sweep-clean. ``h`` holds
+    every src and ``a`` every dst, so the output is their union grouped
+    by node. Returns ``(node, hub_fp, hub, auth_fp, auth)`` with zeros
+    for roles a node never plays (a pure source has no authority; a
+    pure sink no hubness). Edges with a NULL endpoint are dropped.
     """
     if iterations < 1:
         raise ValueError(
@@ -679,13 +684,8 @@ def hits(
         )
     # hub/authority state is O(src nodes)/O(dst nodes) <= edge rows, so
     # m bounds every renorm round's broadcast decision (_bcast_state)
-    ew, obs = _edges_by_src(edges)
+    ew, obs = _edges_by_src(edges.dropna(subset=["src", "dst"]))
     m = obs["m"]
-    srcs = ew.select(F.col("src").alias("node")).distinct()
-    dsts = ew.select(F.col("dst").alias("node")).distinct()
-    h = srcs.select("node", F.lit(scale).cast("long").alias("h")).localCheckpoint(
-        eager=True
-    )
 
     def _renorm(df: DataFrame, col: str) -> DataFrame:
         # Checkpoint the AGGREGATE and observe its max in the same
@@ -700,33 +700,35 @@ def hits(
             "node", F.expr(f"({col} * {scale}) div {mx}").alias(col)
         )
 
-    a = None
-    for _ in range(iterations):
-        hb = _bcast_state(h, m)
-        a = _renorm(
-            ew.join(hb, ew["src"] == hb["node"])
-            .groupBy(F.col("dst").alias("node2"))
-            .agg(F.sum("h").alias("a"))
-            .select(F.col("node2").alias("node"), "a"),
-            "a",
+    def _step(score: DataFrame, via: str, to: str, col: str) -> DataFrame:
+        # one half-step: sum the ``via`` endpoints' scores onto ``to``
+        sb = _bcast_state(score, m)
+        return _renorm(
+            ew.join(sb, ew[via] == sb["node"])
+            .groupBy(F.col(to).alias("node2"))
+            .agg(F.sum(score.columns[1]).alias(col))
+            .select(F.col("node2").alias("node"), col),
+            col,
         )
-        ab = _bcast_state(a, m)
-        h = _renorm(
-            ew.join(ab, ew["dst"] == ab["node"])
-            .groupBy(F.col("src").alias("node2"))
-            .agg(F.sum("a").alias("h"))
-            .select(F.col("node2").alias("node"), "h"),
-            "h",
-        )
+
+    a = _renorm(
+        ew.groupBy(F.col("dst").alias("node")).agg(
+            (F.count(F.lit(1)) * F.lit(scale)).alias("a")
+        ),
+        "a",
+    )
+    h = _step(a, "dst", "src", "h")
+    for _ in range(iterations - 1):
+        a = _step(h, "src", "dst", "a")
+        h = _step(a, "dst", "src", "h")
+    zero = F.lit(0).cast("long")
     out = (
-        srcs.unionAll(dsts)
-        .distinct()
-        .join(_bcast_state(h, m), "node", "left")
-        .join(_bcast_state(a, m), "node", "left")
-        .select(
-            "node",
-            F.coalesce(F.col("h"), F.lit(0)).cast("long").alias("hub_fp"),
-            F.coalesce(F.col("a"), F.lit(0)).cast("long").alias("auth_fp"),
+        h.select("node", F.col("h").alias("hub_fp"), zero.alias("auth_fp"))
+        .unionAll(a.select("node", zero.alias("hub_fp"), F.col("a").alias("auth_fp")))
+        .groupBy("node")
+        .agg(
+            F.max("hub_fp").cast("long").alias("hub_fp"),
+            F.max("auth_fp").cast("long").alias("auth_fp"),
         )
     )
     return out.select(

@@ -242,7 +242,6 @@ def embedding_near_duplicates(
     vec_col: str = "embedding",
     dim: int = 64,
     max_bucket_size: int | None = 1000,
-    scope_caches: bool = True,
 ) -> DataFrame:
     """Near-duplicate vector pairs via sign-random-projection LSH: each
     vector's sign bits against ``planes`` fixed hyperplanes, banded into
@@ -260,10 +259,14 @@ def embedding_near_duplicates(
     meets. Band width controls selectivity: 8-bit bands = 256 buckets
     per band, keeping candidate volume ~collisions, not corpus**2 (4-bit
     bands at corpus scale put hundreds of vectors per bucket and the
-    verify stage degenerates toward all-pairs)."""
-    from pyspark.sql import Window  # noqa: F401  (parity with module imports)
-
-    from rearview_spark.operators._util import ensure_parallelism
+    verify stage degenerates toward all-pairs). The result is
+    materialized and the signature and vector frames released (see
+    dedup.minhash_near_duplicates)."""
+    from rearview_spark.operators._util import (
+        ensure_parallelism,
+        observed_checkpoint,
+        release_checkpoint,
+    )
 
     # small-SF parquet arrives as ONE partition; the signature projection
     # and the per-vector norm scan would run single-threaded (no-op at
@@ -271,13 +274,11 @@ def embedding_near_duplicates(
     corpus = ensure_parallelism(corpus, id_col)
 
     band_structs = _sign_band_structs(vec_col, planes, bands, dim)
-    # One signature pass, cached: the banded self-join's two aliases would
-    # otherwise each re-run the 16-hyperplane projection over the corpus
-    # (same pattern as dedup.minhash_near_duplicates).
-    sigs = (
+    # One signature pass, filled once: the banded self-join's two aliases
+    # scan it in one plan (same pattern as dedup.minhash_near_duplicates).
+    sigs, _ = observed_checkpoint(
         corpus.select(F.col(id_col), F.explode(F.array(*band_structs)).alias("bb"))
         .select(id_col, "bb.band", "bb.bh")
-        .cache()
     )
     from rearview_spark.operators.dedup import _cap_buckets
 
@@ -294,15 +295,15 @@ def embedding_near_duplicates(
         .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
         .distinct()
     )
-    # Norms are per-vector, not per-pair: compute once into the cached
-    # frame so verification does ONE interpreted higher-order fold (the
-    # dot product) per candidate instead of three. Same fold order as
-    # cosine(), so the doubles — and the 6-decimal rounded output — are
-    # bit-identical.
+    # Norms are per-vector, not per-pair: compute once into the
+    # materialized frame so verification does ONE interpreted
+    # higher-order fold (the dot product) per candidate instead of
+    # three. Same fold order as cosine(), so the doubles — and the
+    # 6-decimal rounded output — are bit-identical.
     dv = _as_double(F.col(vec_col))
-    vecs = corpus.select(
-        F.col(id_col), dv.alias("_v"), _norm(dv).alias("_n")
-    ).cache()
+    vecs, _ = observed_checkpoint(
+        corpus.select(F.col(id_col), dv.alias("_v"), _norm(dv).alias("_n"))
+    )
     va = vecs.select(F.col(id_col).alias("id_a"), F.col("_v").alias("va"), F.col("_n").alias("na"))
     vb = vecs.select(F.col(id_col).alias("id_b"), F.col("_v").alias("vb"), F.col("_n").alias("nb"))
     denom = F.col("na") * F.col("nb")
@@ -316,16 +317,9 @@ def embedding_near_duplicates(
         )
         .filter(F.col("cosine_sim") >= threshold)
     )
-    # Cache-scoping (same pattern as dedup.minhash_near_duplicates):
-    # materialize the pairs-scale result, release the corpus-scale
-    # signature/vector caches before handing the frame to the caller.
-    # Measured sf0.1 cost of the eager materialization: see PLANS.md
-    # "Cache-scoping cost" (the r05 +9% bench drift was attributed here).
-    # scope_caches=False opts out for callers managing cache lifetime.
-    if scope_caches:
-        verified = verified.localCheckpoint(eager=True)
-        sigs.unpersist()
-        vecs.unpersist()
+    verified, _ = observed_checkpoint(verified)
+    release_checkpoint(sigs)
+    release_checkpoint(vecs)
     return verified
 
 
@@ -376,8 +370,11 @@ def semantic_contamination(
     band — a fleet of near-zero vectors — can't flood the verify
     stage); the benchmark side is assumed curated and small.
     """
-    from rearview_spark.operators._util import ensure_parallelism
-
+    from rearview_spark.operators._util import (
+        ensure_parallelism,
+        observed_checkpoint,
+        release_checkpoint,
+    )
     from rearview_spark.operators.dedup import _cap_buckets
 
     corpus = ensure_parallelism(corpus, id_col)
@@ -385,14 +382,16 @@ def semantic_contamination(
 
     dv = _as_double(F.col(vec_col))
     # One corpus pass computes band keys AND the verify payload (vector +
-    # norm) — cached so the candidate join and the verify join read the
-    # same materialization instead of re-projecting 16 hyperplanes.
-    cvecs = corpus.select(
-        F.col(id_col),
-        F.array(*band_structs).alias("_bands"),
-        dv.alias("_cv"),
-        _norm(dv).alias("_cn"),
-    ).cache()
+    # norm), filled once: the candidate join and the verify join both
+    # scan it in one plan (see dedup.minhash_near_duplicates).
+    cvecs, _ = observed_checkpoint(
+        corpus.select(
+            F.col(id_col),
+            F.array(*band_structs).alias("_bands"),
+            dv.alias("_cv"),
+            _norm(dv).alias("_cn"),
+        )
+    )
     csigs = _cap_buckets(
         cvecs.select(id_col, F.explode("_bands").alias("bb")).select(
             id_col, "bb.band", "bb.bh"
@@ -443,8 +442,8 @@ def semantic_contamination(
         F.col("_best.cosine_sim").alias("max_cosine"),
         "n_matches",
     )
-    out = out.localCheckpoint(eager=True)  # scope the corpus-sized cache
-    cvecs.unpersist()
+    out, _ = observed_checkpoint(out)
+    release_checkpoint(cvecs)  # scope the corpus-sized frame
     return out
 
 

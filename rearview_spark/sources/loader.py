@@ -71,8 +71,9 @@ class Tables:
 # rewrite a file in place.
 _SNIFF_CACHE: dict[str, bool] = {}
 
-#: batch-resolved events schema per abspath (see load_events_stream)
-_SCHEMA_CACHE: dict[str, object] = {}
+#: inferred parquet schema per abspath, with the path's st_mtime_ns at
+#: inference (see _parquet_schema)
+_SCHEMA_CACHE: dict[str, tuple[int, object]] = {}
 
 # Epoch magnitude floor for the bare-int64 branch: 10^16 ns = 1970-04-26.
 # Any nanos timestamp from this century is ~1.7e18; the same instant in
@@ -142,6 +143,38 @@ def events_ts_is_nanos(path: str) -> bool:
     return result
 
 
+def _parquet_schema(spark: SparkSession, path: str):
+    """The schema Spark infers for ``path``, inferred once per
+    modification: schema inference is a one-task Spark job per read, and
+    a table is read by many queries. Keyed on the path's mtime, so a
+    table rewritten in place (a new file, or a directory whose entries
+    changed) is inferred again."""
+    try:
+        key, mtime = os.path.abspath(path), os.stat(path).st_mtime_ns
+    except OSError:  # missing or non-local: not memoized
+        return spark.read.parquet(path).schema
+    hit = _SCHEMA_CACHE.get(key)
+    if hit is not None and hit[0] == mtime:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMA_CACHE[key] = (mtime, schema)
+    return schema
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.schema(_parquet_schema(spark, path)).parquet(path)
+
+
+def resolve_table_schemas(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
+    """Fill the schema memo for every table under ``sf_dir`` that
+    :func:`load_table` reads through it, so that no later read of them
+    infers. Once filled, this costs one ``stat`` per table."""
+    for name in TABLE_NAMES:
+        path = f"{sf_dir.rstrip('/')}/{name}.parquet"
+        if os.path.exists(path) and not (name == "events" and events_ts_is_nanos(path)):
+            _parquet_schema(spark, path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
     if name == "events":
@@ -162,9 +195,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # whole engine sees one ts type; wall-clock values are preserved
         # (cast + display both use the session tz), matching DuckDB's
         # naive-timestamp view of the same file.
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path)
 
 
 def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -193,13 +226,7 @@ def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     # Reuse the batch-resolved schema (footer truth) as the reader schema so
     # the stream sees exactly what load_table sees, then the same cast.
-    # Memoized alongside the sniff: schema resolution is a JVM file-listing
-    # + footer read per stream build otherwise.
-    key = os.path.abspath(path)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        schema = _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
-    raw = spark.readStream.schema(schema).parquet(glob)
+    raw = spark.readStream.schema(_parquet_schema(spark, path)).parquet(glob)
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 

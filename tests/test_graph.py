@@ -425,6 +425,27 @@ def test_shortest_paths_weighted_vs_round_bound(spark):
         shortest_paths(null_w, seeds)
 
 
+def test_hits_one_iteration_and_dual_role_nodes(spark):
+    """One iteration is the in-degree step alone; nodes 1 and 3 are both
+    a src and a dst and carry both scores; an edge with a NULL endpoint
+    is dropped."""
+    from rearview_spark.operators.graph import hits
+
+    edges = [(0, 1), (2, 1), (1, 3), (3, 0), (0, 3), (3, 2)]
+    df = spark.createDataFrame(edges, "src bigint, dst bigint")
+    for iters in (1, 2):
+        rows = hits(df, iters).collect()
+        got = {r["node"]: (r["hub_fp"], r["auth_fp"]) for r in rows}
+        h, a = _hits_py(edges, iters)
+        assert got == {n: (h.get(n, 0), a.get(n, 0)) for n in set(h) | set(a)}
+    assert all(got[n][0] > 0 and got[n][1] > 0 for n in (1, 3))
+
+    nulls = df.unionByName(
+        spark.createDataFrame([(None, 1), (2, None)], "src bigint, dst bigint")
+    )
+    assert sorted(map(tuple, hits(nulls, 2).collect())) == sorted(map(tuple, rows))
+
+
 def test_hits_iteration_costs_six_jobs(spark, count_jobs):
     """Each HITS iteration launches 6 jobs: per renorm, the score
     broadcast, the join/partial-agg shuffle map and the checkpoint fill,

@@ -161,6 +161,27 @@ def test_sniff_memoized_per_path(tmp_path, monkeypatch):
     loader.reset_sniff_cache()
 
 
+def test_table_schema_inferred_once_per_rewrite(spark, tmp_path, count_jobs):
+    """A table read again infers no schema (no job at read time); a file
+    rewritten in place with an extra column is inferred again."""
+    from rearview_spark.sources.loader import Tables
+
+    path = str(tmp_path / "customer.parquet")
+    pq.write_table(pa.table({"c_custkey": pa.array([1, 2], pa.int64())}), path)
+    _, first = count_jobs(lambda: Tables(spark, str(tmp_path)).customer)
+    assert first >= 1
+    df, again = count_jobs(lambda: Tables(spark, str(tmp_path)).customer)
+    assert again == 0 and df.columns == ["c_custkey"]
+
+    pq.write_table(
+        pa.table({"c_custkey": pa.array([3], pa.int64()), "c_name": pa.array(["x"])}),
+        path,
+    )
+    df = Tables(spark, str(tmp_path)).customer
+    assert df.columns == ["c_custkey", "c_name"]
+    assert [tuple(r) for r in df.collect()] == [(3, "x")]
+
+
 # --- Kafka source plumbing (no broker in the sandbox) -----------------------
 
 

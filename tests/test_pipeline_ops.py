@@ -47,6 +47,22 @@ def test_minhash_lsh_recovers_exact_dup(docs):
     assert (1, 2) in pairs
 
 
+def test_minhash_lsh_builds_signatures_once(docs, count_jobs):
+    """The signatures the banded self-join and both verify sides scan
+    are filled by one checkpoint (a cache is built once per scan), and
+    released before return."""
+    sc = docs.sparkSession.sparkContext
+
+    def persistent():
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    before = persistent()
+    out, jobs = count_jobs(lambda: D.minhash_near_duplicates(docs, threshold=0.9))
+    assert jobs == 10
+    # the result's blocks are the only ones the call leaves behind
+    assert persistent() - before == {out._jdf.queryExecution().analyzed().rdd().id()}
+
+
 def test_setsim_prefix_matches_brute_force(spark):
     """Completeness of the AllPairs/PPJoin prefix filter: the prefix-
     filtered join must equal the brute-force all-pairs result on every

@@ -388,3 +388,26 @@ def test_fixed_point_round_launches_one_job(spark, count_jobs):
             )
         )
         assert jobs == 1
+
+
+def test_release_checkpoint_frees_blocks(spark):
+    """Releasing a checkpoint drops its RDD from the persistent set; a
+    later read fails instead of recomputing. Anything else is refused."""
+    from rearview_spark.operators._util import observed_checkpoint, release_checkpoint
+
+    sc = spark.sparkContext
+
+    def persistent():
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    cp, _ = observed_checkpoint(spark.range(50).repartition(2))
+    rid = cp._jdf.queryExecution().analyzed().rdd().id()
+    before = persistent()
+    release_checkpoint(cp)
+    after = persistent()
+    # exactly the checkpoint's RDD leaves (others may only be GC'd)
+    assert rid in before and rid not in after and after <= before
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        cp.count()
+    with pytest.raises(ValueError, match="checkpointed frame"):
+        release_checkpoint(spark.range(5))
