@@ -2,6 +2,7 @@
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
     python bench.py [--plans-dir DIR | --ab REF] [QUERY ...]
+    python bench.py --tick-bracket
 
 runs $SPARK_GRAFT_BENCH_REPEATS interleaved passes (default 3):
 
@@ -18,6 +19,10 @@ runs $SPARK_GRAFT_BENCH_REPEATS interleaved passes (default 3):
   after the other (never two JVMs at once), alternating which goes
   first, one pass per arm; print per-line medians, REF's IQR, win counts
   and an ``ab_verdict``.
+- ``--tick-bracket``: instead of the bench lines, evaluate monitor
+  fleets of 12, 96, 384 and 768 distinct targets over the perfbench
+  metric store as a tick does, then one wide glob, printing the build
+  and collect seconds and the Spark figures of each (``_tick_bracket``).
 
 Prints ONE JSON line on stdout: metric, value, unit, queries, sf, load
 (1-minute loadavg per pass) and a comparable summary. A line's time is
@@ -44,6 +49,8 @@ import tempfile
 import time
 import uuid
 from collections import Counter
+
+from pyspark.sql import DataFrame
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -379,11 +386,12 @@ def _line_frame(spark, qs: dict, name: str, sf_dir: str, index_dir: str):
     return qs[name]["fn"](spark, sf_dir)
 
 
-def _profiled(spark, label: str, build) -> dict[str, float]:
+def _profiled(spark, label: str, build, action=DataFrame.count) -> dict[str, float]:
     """Clear caches, then time ``build()`` (plan construction, plus any
-    eager jobs it runs) and, when it returns a DataFrame, its ``count()``
-    (the action), all under a job group of their own. Returns
-    ``{"s", "plan_s", "action_s"}`` plus the group's Spark figures."""
+    eager jobs it runs) and, when it returns a DataFrame, ``action`` on it
+    (its ``count()`` by default), all under a job group of their own.
+    Returns ``{"s", "plan_s", "action_s"}`` plus the group's Spark
+    figures."""
     from perfbench.spans import spark_group_figures
 
     sc = spark.sparkContext
@@ -395,7 +403,7 @@ def _profiled(spark, label: str, build) -> dict[str, float]:
         df = build()
         t1 = time.perf_counter()
         if df is not None:
-            df.count()
+            action(df)
         t2 = time.perf_counter()
     finally:
         sc.setJobGroup(None, None)
@@ -575,33 +583,12 @@ def _archive(here: str, full: dict, names: list[str]) -> None:
         pass  # archiving is best-effort; the printed contract line rules
 
 
-def main(argv: list[str] | None = None) -> None:
-    from rearview_spark.plans import all_pending, all_queries
-
-    ap = argparse.ArgumentParser(description="Time bench lines (module docstring).")
-    ap.add_argument("names", nargs="*", metavar="QUERY")
-    ap.add_argument("--plans-dir", metavar="DIR")
-    ap.add_argument("--ab", metavar="REF")
-    args = ap.parse_args(argv)
-    qs = {**all_queries(), **all_pending()}  # pending gates are measurable too
-    unknown = [q for q in args.names if q not in qs]
-    if unknown:
-        ap.error(f"unknown query name(s) {unknown}; valid names: {' '.join(sorted(qs))}")
-    if args.ab:
-        if args.plans_dir:
-            ap.error("--plans-dir does not combine with --ab")
-        _ab(args.ab, args.names)
-        return
-    lines = args.names or HEADLINE
-
-    # The profile reads each line's jobs and stages back from the status
-    # store, which past its default 1000 retained stages evicts SKIPPED
-    # stages first, the running line's own included.
-    spark = get_spark("rearview_bench", extra_conf={
-        "spark.ui.retainedJobs": "100000", "spark.ui.retainedStages": "100000",
-    })
-    index_dir = tempfile.mkdtemp(prefix="rearview_bench_idx_")
-
+def _timed_passes(
+    spark, qs: dict, lines: list[str], index_dir: str, plans_dir: str | None
+) -> tuple[list[dict[str, dict]], list[str]]:
+    """Warm every line up, write its plan when ``plans_dir`` is set, then
+    time $SPARK_GRAFT_BENCH_REPEATS passes: ``(per-pass {line: profile},
+    per-pass loadavg)``. The PQ index lives under ``index_dir``."""
     # warmup: prime JVM JIT + whole-stage-codegen class compilation for
     # EVERY timed plan shape on the smallest SF, so the timed sf0.1 runs
     # measure engine throughput, not first-compile of the generated code
@@ -613,8 +600,8 @@ def main(argv: list[str] | None = None) -> None:
             _pq_scan_from_index(spark, "/root/testdata/sf0.001", warm_idx).count()
         else:
             qs[name]["fn"](spark, "/root/testdata/sf0.001").count()
-    if args.plans_dir:
-        _write_plans(spark, qs, lines, SF_DIR, f"{index_dir}/main", args.plans_dir)
+    if plans_dir:
+        _write_plans(spark, qs, lines, SF_DIR, f"{index_dir}/main", plans_dir)
 
     # N full interleaved PASSES over the whole headline set (VERDICT_r15
     # next-round #4): each pass times every query once, so the artifact
@@ -636,9 +623,6 @@ def main(argv: list[str] | None = None) -> None:
     # code, so drift adjudication needs the spread, not the point.
     passes = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
 
-    def _spread(s: list[float]) -> list[float]:
-        return [round(x, 3) for x in (s[0], statistics.median(s), s[-1])]
-
     def _loadavg() -> str:
         try:
             with open("/proc/loadavg") as f:
@@ -654,7 +638,123 @@ def main(argv: list[str] | None = None) -> None:
         for name in lines:
             cur.update(run_line(spark, qs, name, SF_DIR, f"{index_dir}/main"))
         pass_profiles.append(cur)
+    return pass_profiles, pass_loads
+
+
+TICK_BRACKET = (12, 96, 384, 768)
+
+
+def _bracket_fleet(paths: list[str], n: int) -> list:
+    """``n`` monitors over ``paths``, each its own window group: even ones
+    watch a raw path, odd ones ``movingAverage`` of it, and the k-th
+    round over ``paths`` widens the window (and the average) by k
+    minutes."""
+    from rearview_spark.monitors.evaluate import MonitorSpec
+
+    specs = []
+    for i in range(n):
+        path, k = paths[i % len(paths)], i // len(paths)
+        target = path if i % 2 == 0 else f"movingAverage({path}, {3 + k})"
+        specs.append(MonitorSpec(
+            id=i, metrics=[target], monitor_expr="a.mean() > 1e12", minutes=15 + k,
+            name=f"bracket{i}",
+        ))
+    return specs
+
+
+def _tick_probe(spark, label: str, specs: list, metrics, now) -> dict:
+    """One evaluation as a tick runs it, profiled (``_profiled``):
+    ``evaluate_monitors`` is the plan, one collect of the statuses and the
+    release of its shared fetch the action."""
+    from rearview_spark.monitors.evaluate import evaluate_monitors, release_evaluation
+
+    statuses: Counter = Counter()
+
+    def collect(results) -> None:
+        try:
+            statuses.update(r["status"] for r in results.select("job_id", "status").collect())
+        finally:
+            release_evaluation(results)
+
+    profile = _profiled(
+        spark, label, lambda: evaluate_monitors(spark, specs, metrics, now), collect
+    )
+    return {"probe": label, "monitors": len(specs), "statuses": dict(statuses),
+            **_compact(profile)}
+
+
+def _tick_bracket(spark) -> None:
+    """The monitor tick at ``TICK_BRACKET`` fleet sizes over the perfbench
+    metric store (240 series, seed 1; see ``_bracket_fleet``), then one
+    wide glob, ``sumSeries(svc.*.*.req)`` over 3 hours. Prints one JSON
+    line per probe: its statuses and profile (``plan_s`` is the build,
+    ``action_s`` the collect). A 12-monitor probe warms the session
+    first, untimed."""
+    import numpy as np
+
+    from perfbench import inputs
+    from rearview_spark.monitors.evaluate import MonitorSpec
+
+    store = inputs.metric_frame(np.random.default_rng(1), inputs.shape_rng())
+    paths = sorted(store.levels)
+    tmp = tempfile.mkdtemp(prefix="rearview_tick_bracket_")
+    try:
+        path = os.path.join(tmp, "metrics.parquet")
+        store.frame.to_parquet(path, index=False)
+        metrics = spark.read.parquet(path)
+        now = inputs.T_START
+        _tick_probe(spark, "warm", _bracket_fleet(paths, 12), metrics, now)
+        for n in TICK_BRACKET:
+            print(json.dumps(_tick_probe(spark, f"fleet{n}", _bracket_fleet(paths, n), metrics, now)))
+        wide = MonitorSpec(
+            id=0, metrics=["sumSeries(svc.*.*.req)"], monitor_expr="a.mean() > 1e12",
+            minutes=180, name="wide",
+        )
+        print(json.dumps(_tick_probe(spark, "wide_glob", [wide], metrics, now)))
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def main(argv: list[str] | None = None) -> None:
+    from rearview_spark.plans import all_pending, all_queries
+
+    ap = argparse.ArgumentParser(description="Time bench lines (module docstring).")
+    ap.add_argument("names", nargs="*", metavar="QUERY")
+    ap.add_argument("--plans-dir", metavar="DIR")
+    ap.add_argument("--ab", metavar="REF")
+    ap.add_argument("--tick-bracket", action="store_true")
+    args = ap.parse_args(argv)
+    qs = {**all_queries(), **all_pending()}  # pending gates are measurable too
+    unknown = [q for q in args.names if q not in qs]
+    if unknown:
+        ap.error(f"unknown query name(s) {unknown}; valid names: {' '.join(sorted(qs))}")
+    if args.tick_bracket and (args.names or args.ab or args.plans_dir):
+        ap.error("--tick-bracket takes no query names and no other option")
+    if args.ab:
+        if args.plans_dir:
+            ap.error("--plans-dir does not combine with --ab")
+        _ab(args.ab, args.names)
+        return
+    lines = args.names or HEADLINE
+
+    # The profile reads each line's jobs and stages back from the status
+    # store, which past its default 1000 retained stages evicts SKIPPED
+    # stages first, the running line's own included.
+    spark = get_spark("rearview_bench", extra_conf={
+        "spark.ui.retainedJobs": "100000", "spark.ui.retainedStages": "100000",
+    })
+    if args.tick_bracket:
+        _tick_bracket(spark)
+        return
+    index_dir = tempfile.mkdtemp(prefix="rearview_bench_idx_")
+    try:
+        pass_profiles, pass_loads = _timed_passes(spark, qs, lines, index_dir, args.plans_dir)
+    finally:
+        shutil.rmtree(index_dir, ignore_errors=True)
     pass_times = [{q: p["s"] for q, p in pp.items()} for pp in pass_profiles]
+
+    def _spread(s: list[float]) -> list[float]:
+        return [round(x, 3) for x in (s[0], statistics.median(s), s[-1])]
 
     timings: dict[str, float] = {}
     spreads: dict[str, list[float]] = {}
@@ -742,7 +842,7 @@ def main(argv: list[str] | None = None) -> None:
                 "within_noise": noise,
             }
 
-    full = dict(out, repeats=passes)
+    full = dict(out, repeats=len(pass_profiles))
     full["spread"] = spreads
     # raw per-pass per-query samples — the material drift adjudication
     # actually needs (the printed line stays within the driver window)

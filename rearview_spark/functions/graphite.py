@@ -515,6 +515,36 @@ def _shift_bounds(node) -> tuple[int, int]:
     return lb, la
 
 
+# Functions that draw a synthetic series over the span of the WHOLE input
+# frame, whatever series it holds, instead of selecting series from it.
+_FRAME_FUNCTIONS = frozenset({
+    "constantLine", "timeFunction", "sinFunction", "randomWalkFunction",
+    "threshold", "identity",
+})
+
+
+def _sources(node) -> frozenset[str] | None:
+    """Every path pattern the plan may select from its input, or None when
+    it reads the whole frame (a synthetic series over its span). A
+    superset: string arguments that name no series (an alias, an
+    interval) are listed too."""
+    if isinstance(node, PathNode):
+        return frozenset({node.path})
+    if isinstance(node, StringNode):
+        return frozenset({node.value})
+    if not isinstance(node, FuncNode):
+        return frozenset()
+    if node.name in _FRAME_FUNCTIONS:
+        return None
+    out: set[str] = set()
+    for arg in node.args:
+        child = _sources(arg)
+        if child is None:
+            return None
+        out |= child
+    return frozenset(out)
+
+
 def compile_target(target: str, metric_names: DataFrame | None = None) -> Plan:
     """Parse once; returns a reusable ``DataFrame -> DataFrame`` plan.
 
@@ -523,7 +553,9 @@ def compile_target(target: str, metric_names: DataFrame | None = None) -> Plan:
     range by the target's net time shifts and re-filter afterwards —
     Graphite fetches the *shifted* window for a timeShift'd series; a
     fetch-then-shift pipeline with no extension would compare against an
-    empty frame.
+    empty frame. Its ``sources`` attribute lists the path patterns the
+    plan may read (None: every series), so a caller may narrow the frame
+    it passes to those series first.
 
     With ``metric_names`` (the metric-name dimension), every glob inside
     the target resolves to a pushable IN-list / broadcast-semi at plan
@@ -542,6 +574,7 @@ def compile_target(target: str, metric_names: DataFrame | None = None) -> Plan:
             _METRIC_NAMES.reset(token)
 
     plan.lookback_s, plan.lookahead_s = _shift_bounds(ast)
+    plan.sources = _sources(ast)
     return plan
 
 

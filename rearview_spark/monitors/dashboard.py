@@ -19,7 +19,7 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from rearview_spark.monitors.evaluate import MonitorSpec, evaluate_monitors
+from rearview_spark.monitors.evaluate import MonitorSpec, evaluate_monitors, release_evaluation
 
 
 # --- application tree (R10): materialized path, prefix filters -------------
@@ -138,7 +138,11 @@ def preview_run(
         id=0, metrics=targets, monitor_expr=monitor_expr, minutes=minutes,
         name="preview", description="preview",
     )
-    row = evaluate_monitors(spark, [spec], metrics, now).collect()[0]
+    results = evaluate_monitors(spark, [spec], metrics, now)
+    try:
+        row = results.collect()[0]
+    finally:
+        release_evaluation(results)
     return {
         "status": row["status"],
         "message": row["message"],

@@ -22,20 +22,43 @@ Statuses (reference state machine, SURVEY.md §2.4 S4 — distinct graphite
 job_errors): 'success' | 'failed' (expr truthy) | 'error' (empty window or
 expression error).
 
-Scale: one action, run by the caller, evaluates ALL due monitors. Every
-bare-path target (no render function, no glob) is answered by one scan
-of the metrics: the named series over the union of the targets' own
-windows, each row tagged with the (window group, var) of every target
-whose window holds it. A render-function or glob target keeps its own
-Catalyst branch, tagged the same way. The branches and one sentinel row
-per group are unioned as a balanced tree, so Catalyst sees a single DAG,
-every monitor reaches the grouped-map UDF (empty windows and bad targets
-included) and the UDF fans out across executors by window group. The
-frame comes back lazy and uncached: the scheduler runs it once, in the
-job_data write, and reads the statuses from an observation on the same
-action; a caller that consumes it twice runs it twice unless it caches
-it. Per-job input is capped (``max_points_per_job``) before collection
-into the worker.
+Scale: one action, run by the caller, evaluates ALL due monitors in at
+most two Spark jobs, however many targets are due. Every bare-path
+target (no render function, no glob) is answered by one scan of the
+metrics: the named series over the union of the targets' own windows,
+each row tagged with the (window group, var) of every target whose
+window holds it. Every render-function or glob target reads ONE shared
+fetch: the series the due render plans may select, over the OR of their
+windows (each widened by its ``timeShift`` bounds), lazily checkpointed.
+A render branch reads its window of that fetch through a single
+partition, which satisfies the distribution every Graphite plan asks
+for, so its ``groupBy(ts)`` and ``Window.partitionBy(metric)`` plan no
+exchange and the target runs inside the evaluation's first stage, not as
+AQE jobs of its own; the first task to reach a block of the fetch fills
+it from one metrics scan and the others read the stored copy. The render
+branches are dealt into one single-partition bucket per core, because
+every task deserializes the whole stage's plan, which grows with the
+branch count. The buckets, the plain scan and one sentinel row per group
+are unioned as a balanced tree, so Catalyst sees a single DAG, every
+monitor reaches the grouped-map UDF (empty windows and bad targets
+included) and the UDF runs once per window group. The action is two jobs,
+the ``grp`` shuffle and the UDF; with no plain target due, every input
+of the union is one partition, Spark keeps that partitioning through the
+union and the evaluation is one job of one task. The caller frees the
+fetch with ``release_evaluation`` after its action.
+
+Out of scope, and next at scale: AQE coalesces the small ``grp``
+shuffle (about 230 KB at 768 groups) into one partition, so the UDF
+stage is one task that evaluates every group serially. Render functions
+that broadcast a per-series aggregate (``highest*``, the percentile
+filters) still add a broadcast job each, and render plans are built per
+target, not once per shape with the target as a key.
+
+The frame comes back lazy and uncached: the scheduler runs it once, in
+the job_data write, and reads the statuses from an observation on the
+same action; a caller that consumes it twice runs it twice (reading the
+fetch filled by the first run) unless it caches it. Per-job input is
+capped (``max_points_per_job``) before collection into the worker.
 """
 
 from __future__ import annotations
@@ -51,12 +74,14 @@ from dataclasses import dataclass
 from typing import Iterable, Mapping
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from rearview_spark.functions.graphite import PathNode, compile_target, parse_target
 from rearview_spark.monitors.schemas import RUN_RESULT
-from rearview_spark.operators.timeseries import is_glob, window_fetch
+from rearview_spark.operators._util import lazy_checkpoint, release_checkpoint
+from rearview_spark.operators.timeseries import glob_to_regex, is_glob, window_fetch
 
 def _robust_z(s):
     """Modified z-score over a pandas Series (Iglewicz-Hoaglin; the same
@@ -248,48 +273,107 @@ def _plain_path(target: str) -> str | None:
     return None
 
 
+_micros = T.TimestampType().toInternal  # a datetime as F.lit converts it
+
+
+def _ts_lit(d: dt.datetime) -> Column:
+    """``d`` as a timestamp literal, converted as ``F.lit`` converts a
+    datetime but built from its epoch microseconds: ``F.lit(datetime)``
+    constructs a ``java.sql.Timestamp`` through py4j, several round trips
+    per literal, and a tick builds a few per window. Catalyst folds the
+    expression back into a literal, so a scan still takes it as a pushed
+    filter."""
+    return F.timestamp_micros(F.lit(_micros(d)))
+
+
+def _in_windows(spans: Iterable[tuple]) -> Column:
+    """``ts`` inside any of the ``(lo, hi)`` windows, overlapping windows
+    merged: a balanced OR the parquet scan takes as a pushed filter."""
+    merged: list[list] = []
+    for lo, hi in sorted(set(spans)):
+        if merged and lo <= merged[-1][1]:
+            merged[-1][1] = max(merged[-1][1], hi)
+        else:
+            merged.append([lo, hi])
+    return _balanced(
+        [F.col("ts").between(_ts_lit(lo), _ts_lit(hi)) for lo, hi in merged], operator.or_
+    )
+
+
+# path -> [(grp, var, lo, hi)], the bounds as epoch microseconds
+_TAGS = "map<string, array<struct<grp: string, var: string, lo: bigint, hi: bigint>>>"
+
+
 def _plain_targets(metrics: DataFrame, plain: dict[str, list[tuple]]) -> DataFrame:
     """Every bare path target's points from ONE scan: fetch the named
     series over the union of the targets' windows, then tag each row with
     the (grp, var) of every target whose window holds it. The scan keeps
     each target's own window (overlapping windows merged), so a backtest
     due beside live monitors adds its window, not the span between them.
-    The tags are a literal map from path to ``array<struct<grp, var, lo,
-    hi>>`` inside the plan, so the scan stage does the tagging and no
-    lookup table is shipped by a job of its own."""
-    tags = [t for ts in plain.values() for t in ts]
-    spans: list[list] = []
-    for lo, hi in sorted({(t[2], t[3]) for t in tags}):
-        if spans and lo <= spans[-1][1]:
-            spans[-1][1] = max(spans[-1][1], hi)
-        else:
-            spans.append([lo, hi])
-    in_windows = _balanced(
-        [F.col("ts").between(F.lit(lo), F.lit(hi)) for lo, hi in spans], operator.or_
-    )
-    lookup = F.create_map(*[
-        c
+    The tags travel as one JSON literal that Catalyst folds into a map
+    from path to ``array<struct<grp, var, lo, hi>>``, so the scan stage
+    does the tagging, no lookup table is shipped by a job of its own and
+    building the plan costs one literal, not a few per tag. The bounds
+    are epoch microseconds as ``F.lit`` converts a datetime."""
+    tags = {
+        path: [
+            {"grp": grp, "var": var, "lo": _micros(lo), "hi": _micros(hi)}
+            for grp, var, lo, hi in ts
+        ]
         for path, ts in plain.items()
-        for c in (
-            F.lit(path),
-            F.array(*[
-                F.struct(
-                    F.lit(grp).alias("grp"), F.lit(var).alias("var"),
-                    F.lit(start).alias("lo"), F.lit(end).alias("hi"),
-                )
-                for grp, var, start, end in ts
-            ]),
-        )
-    ])
+    }
     hits = F.filter(
-        F.element_at(lookup, F.col("metric")),
-        lambda t: F.col("ts").between(t["lo"], t["hi"]),
+        F.element_at(F.from_json(F.lit(json.dumps(tags)), _TAGS), F.col("metric")),
+        lambda t: F.col("ts").between(F.timestamp_micros(t["lo"]), F.timestamp_micros(t["hi"])),
     )
+    in_windows = _in_windows((lo, hi) for ts in plain.values() for _, _, lo, hi in ts)
     return (
         metrics.filter(in_windows & F.col("metric").isin(list(plain)))
         .select(F.explode(hits).alias("t"), "metric", "ts", "value")
         .select("t.grp", "t.var", "metric", "ts", "value")
     )
+
+
+def _series_filter(plans: list) -> Column | None:
+    """The metrics rows any of ``plans`` may select: exact paths as a
+    pushable ``IN``, globs as one regex. None when a plan reads every
+    series (a synthetic series over the frame's span) or names a pattern
+    that is no glob ``select_glob`` could read."""
+    exact, regexes = set(), set()
+    for plan in plans:
+        sources = getattr(plan, "sources", None)
+        if sources is None:
+            return None
+        for p in sources:
+            if not is_glob(p):
+                exact.add(p)
+                continue
+            try:
+                regexes.add(glob_to_regex(p))
+            except ValueError:
+                return None
+    terms = []
+    if exact:
+        terms.append(F.col("metric").isin(sorted(exact)))
+    if regexes:
+        terms.append(F.col("metric").rlike("|".join(f"(?:{r})" for r in sorted(regexes))))
+    return _balanced(terms, operator.or_) if terms else F.lit(False)
+
+
+def _render_fetch(metrics: DataFrame, renders: list[tuple]) -> DataFrame:
+    """ONE fetch for every render target of the tick: the series their
+    plans may read over the OR of their windows (each already widened by
+    its ``timeShift`` bounds), lazily checkpointed. Each render branch
+    reads its own window of it through a single partition, so the first
+    task to reach a block fills it from one metrics scan and the others
+    read the stored copy, all inside the evaluation's first stage; the
+    filters of a branch cannot be pushed below the checkpoint into a scan
+    of their own."""
+    fetch = metrics.filter(_in_windows((lo, hi) for _, lo, hi in renders))
+    series = _series_filter([plan for plan, _, _ in renders])
+    if series is not None:
+        fetch = fetch.filter(series)
+    return lazy_checkpoint(fetch)
 
 
 def _balanced(items: list, combine):
@@ -321,9 +405,12 @@ def evaluate_monitors(
     uncached DataFrame with RUN_RESULT schema, one row per monitor.
 
     No Spark job runs here: the caller's action evaluates ALL the
-    monitors at once. Nothing is cached, so a caller that consumes the
-    frame twice evaluates twice; the scheduler consumes it once, in the
-    job_data write, with the statuses observed on that same action.
+    monitors at once. Only the render targets' shared fetch is kept, a
+    lazy checkpoint that the first action fills, so a caller that
+    consumes the frame twice evaluates twice from that fetch; the
+    scheduler consumes it once, in the job_data write, with the statuses
+    observed on that same action. Free the fetch with
+    :func:`release_evaluation` once the last action ran.
 
     The monitors list is config-scale (the reference preloads all jobs
     into its scheduler, Rakefile:4-7) — iterating it on the driver builds
@@ -349,56 +436,74 @@ def evaluate_monitors(
         key = json.dumps([spec.metrics, end.isoformat(), spec.minutes])
         groups.setdefault(key, []).append(spec)
 
-    tagged_frames = []
-    # bare path -> [(grp, var, start, end)]: every glob-free path target,
-    # answered by one scan in _plain_targets
-    plain: dict[str, list[tuple]] = {}
-    # key -> (members, target compile error or None)
-    group_info: dict[str, tuple[list[tuple], str | None]] = {}
+    # Compile every group's targets first: the render targets' plans size
+    # the one fetch they all read. key -> (start, end, targets), a target
+    # being (var, text, bare path | plan | compile error, lo, hi) and a
+    # group's list stopping at its first compile error.
+    compiled: dict[str, tuple] = {}
+    renders: list[tuple] = []  # (plan, lo, hi) of every render target
     for key, members in groups.items():
         lead = members[0]
         end = scheduled[lead.id]
         start = end - dt.timedelta(minutes=lead.minutes)
-        windowed = None
+        targets = []
+        for i, text in enumerate(lead.metrics):
+            target = _plain_path(text)
+            lo, hi = start, end
+            if target is None:
+                try:
+                    target = compile_target(text)
+                except Exception as e:  # noqa: BLE001 — bad target -> error status
+                    targets.append((_var_name(i), text, e, lo, hi))
+                    break
+                # timeShift targets need source data OUTSIDE the render
+                # window (Graphite fetches the shifted window): extend the
+                # fetch by the plan's reported bounds; the transformed
+                # frame is clamped back to [start, end] below.
+                lo -= dt.timedelta(seconds=getattr(target, "lookback_s", 0))
+                hi += dt.timedelta(seconds=getattr(target, "lookahead_s", 0))
+                renders.append((target, lo, hi))
+            targets.append((_var_name(i), text, target, lo, hi))
+        compiled[key] = (start, end, targets)
+    fetch = _render_fetch(metrics, renders) if renders else None
+    # (lo, hi) -> that window of the fetch in one partition, built once:
+    # one partition satisfies the distribution of every Graphite plan's
+    # groupBy(ts) and Window.partitionBy(metric), so a render target plans
+    # no exchange and runs inside a task of the evaluation's first stage,
+    # not as AQE jobs of its own
+    windows: dict[tuple, DataFrame] = {}
+
+    render_frames = []
+    # bare path -> [(grp, var, start, end)]: every glob-free path target,
+    # answered by one scan in _plain_targets
+    plain: dict[str, list[tuple]] = {}
+    # key -> (members, target error or None)
+    group_info: dict[str, tuple[list[tuple], str | None]] = {}
+    for key, (start, end, targets) in compiled.items():
         frames, paths, error = [], [], None
-        for i, target in enumerate(lead.metrics):
-            path = _plain_path(target)
-            if path is not None:
-                paths.append((path, (key, _var_name(i), start, end)))
+        for var, text, target, lo, hi in targets:
+            if isinstance(target, str):
+                paths.append((target, (key, var, start, end)))
                 continue
+            if isinstance(target, Exception):
+                error = f"target {text!r}: {target}"
+                break
             try:
-                plan = compile_target(target)
-                lb = getattr(plan, "lookback_s", 0)
-                la = getattr(plan, "lookahead_s", 0)
-                if lb or la:
-                    # timeShift targets need source data OUTSIDE the render
-                    # window (Graphite fetches the shifted window): extend
-                    # the fetch by the plan's reported bounds, then clamp
-                    # the transformed frame back to [start, end].
-                    src = window_fetch(
-                        metrics,
-                        start - dt.timedelta(seconds=lb),
-                        end + dt.timedelta(seconds=la),
-                    )
-                    df = window_fetch(plan(src), start, end)
-                else:
-                    if windowed is None:
-                        windowed = window_fetch(metrics, start, end)
-                    df = plan(windowed)
+                if (lo, hi) not in windows:
+                    windows[lo, hi] = window_fetch(fetch, _ts_lit(lo), _ts_lit(hi)).coalesce(1)
+                df = target(windows[lo, hi])
+                if (lo, hi) != (start, end):
+                    df = window_fetch(df, _ts_lit(start), _ts_lit(end))
             except Exception as e:  # noqa: BLE001 — bad target -> error status
-                error = f"target {target!r}: {e}"
+                error = f"target {text!r}: {e}"
                 break
             frames.append(
-                df.select(
-                    F.lit(key).alias("grp"),
-                    F.lit(_var_name(i)).alias("var"),
-                    "metric", "ts", "value",
-                )
+                df.select(F.lit(key).alias("grp"), F.lit(var).alias("var"), "metric", "ts", "value")
             )
         if error is None:
             # a group's points join the union only once ALL its targets
             # compiled; a bad later target leaves just its sentinel
-            tagged_frames.extend(frames)
+            render_frames.extend(frames)
             for path, tag in paths:
                 plain.setdefault(path, []).append(tag)
         group_info[key] = (
@@ -409,12 +514,22 @@ def evaluate_monitors(
                     m.description or m.name,
                     scheduled[m.id].isoformat(),
                 )
-                for m in members
+                for m in groups[key]
             ],
             error,
         )
+    # The render branches, dealt into one single-partition bucket per core
+    # at most: every task of a stage deserializes the stage's whole task
+    # binary, which grows with the branch count (9 MB at 768
+    # movingAverage targets), so one task per branch would cost targets
+    # squared.
+    n_tasks = spark.sparkContext.defaultParallelism
+    branches = [
+        _balanced(render_frames[i::n_tasks], DataFrame.unionByName).coalesce(1)
+        for i in range(min(n_tasks, len(render_frames)))
+    ]
     if plain:
-        tagged_frames.append(_plain_targets(metrics, plain))
+        branches.append(_plain_targets(metrics, plain))
 
     b_groups = spark.sparkContext.broadcast(group_info)
 
@@ -491,5 +606,16 @@ def evaluate_monitors(
         return pd.DataFrame(out)
 
     sentinels = spark.createDataFrame([(k, None, None, None, None) for k in group_info], _SENTINEL)
-    union = _balanced([sentinels.coalesce(1), *tagged_frames], DataFrame.unionByName)
-    return union.groupBy("grp").applyInPandas(_eval_group, RUN_RESULT)
+    union = _balanced([sentinels.coalesce(1), *branches], DataFrame.unionByName)
+    results = union.groupBy("grp").applyInPandas(_eval_group, RUN_RESULT)
+    results._render_fetch = fetch
+    return results
+
+
+def release_evaluation(results: DataFrame) -> None:
+    """Free the render targets' shared fetch behind a frame returned by
+    :func:`evaluate_monitors`, once the caller's action on it has run.
+    A no-op for an evaluation without render targets."""
+    fetch = getattr(results, "_render_fetch", None)
+    if fetch is not None:
+        release_checkpoint(fetch)

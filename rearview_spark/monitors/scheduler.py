@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rearview_spark.monitors.cron import next_fire
-from rearview_spark.monitors.evaluate import MonitorSpec, evaluate_monitors
+from rearview_spark.monitors.evaluate import MonitorSpec, evaluate_monitors, release_evaluation
 from rearview_spark.monitors.lifecycle import RESOLVED, TRIGGERED, transition
 from rearview_spark.monitors.notify import AlertRouter
 from rearview_spark.monitors.schemas import ALERT_OUTBOX, JOB_ERRORS, MONITORS
@@ -93,22 +93,25 @@ class MonitorScheduler:
 
         Spark work: the due list and the monitors swap are driver-side
         Arrow I/O, so a tick with nothing due launches no Spark job. A
-        tick with work runs one action and caches nothing: the write of
-        its job_data rows to a staging dir beside the table
-        (``JobStore.stage_job_data``) evaluates every due monitor, and an
-        ``Observation`` on the evaluation collects each monitor's
-        ``(job_id, status, message)`` in that same action. After the CAS
-        the staged part files are moved into job_data one ``os.replace``
-        each (``publish_append``), as Spark's own append commit renames
-        task files into place, so a crash mid-publish is no weaker than a
-        crash mid-append; ids are content-derived, so a re-run tick writes
-        the same rows. A crash before the publish leaves job_data as it
-        was and a staging dir behind. The staging dir names the monitors
-        snapshot, and a later tick sweeps it once the monitors table is
-        two versions past that snapshot and the dir is older than the
-        store's ``claim_ttl_s`` (``sweep_staged``). A tick still writing
-        is therefore swept only when it can no longer win its CAS. A lost
-        CAS or any other exception removes the staging dir at once.
+        tick with work runs one action and keeps nothing cached after
+        it: the write of its job_data rows to a staging dir beside the
+        table (``JobStore.stage_job_data``) evaluates every due monitor,
+        and an ``Observation`` on the evaluation collects each monitor's
+        ``(job_id, status, message)`` in that same action. The render
+        targets' shared window fetch, a lazy checkpoint, is filled inside
+        that action and released right after it, whether the write
+        succeeded or not. After the CAS the staged part files are moved
+        into job_data one ``os.replace`` each (``publish_append``), as
+        Spark's own append commit renames task files into place, so a
+        crash mid-publish is no weaker than a crash mid-append; ids are
+        content-derived, so a re-run tick writes the same rows. A crash
+        before the publish leaves job_data as it was and a staging dir
+        behind. The staging dir names the monitors snapshot, and a later
+        tick sweeps it once the monitors table is two versions past that
+        snapshot and the dir is older than the store's ``claim_ttl_s``
+        (``sweep_staged``). A tick still writing is therefore swept only
+        when it can no longer win its CAS. A lost CAS or any other
+        exception removes the staging dir at once.
 
         Result-sink shape (the 10^5-monitor question): the observation
         brings back ONE summary row per due monitor — job id, status and
@@ -141,7 +144,12 @@ class MonitorScheduler:
         # returns each monitor's status from it
         runs = Observation()
         summary = F.collect_list(F.struct("job_id", "status", "message")).alias("runs")
-        staged = self.store.stage_job_data(results.observe(runs, summary), now, monitors_version)
+        try:
+            staged = self.store.stage_job_data(
+                results.observe(runs, summary), now, monitors_version
+            )
+        finally:
+            release_evaluation(results)
         try:
             n_alerts = self._commit(now, due, runs.get["runs"], monitors_version, staged)
         finally:

@@ -89,9 +89,23 @@ def observed_checkpoint(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
     return cp, obs.get
 
 
+def lazy_checkpoint(df: DataFrame) -> DataFrame:
+    """Lazy ``localCheckpoint`` of ``df``: no job runs here. The first
+    action that reads the frame fills it, inside that action's own stage
+    (the first task to reach a block computes it, later readers of the
+    block get the stored copy), so a frame read by many branches of ONE
+    plan is computed once and costs no job of its own.
+
+    The frame is a ``LogicalRDD``, so filters on it are not pushed below
+    it into the source scan. Free it with :func:`release_checkpoint` once
+    that action has run."""
+    return df.localCheckpoint(eager=False)
+
+
 def release_checkpoint(df: DataFrame) -> None:
     """Free the executor blocks behind a frame returned by
-    :func:`observed_checkpoint`, once nothing will read it again.
+    :func:`observed_checkpoint` or :func:`lazy_checkpoint`, once nothing
+    will read it again.
 
     The frame is a ``LogicalRDD`` over the locally checkpointed RDD;
     unpersisting that RDD drops its blocks (and its entry in

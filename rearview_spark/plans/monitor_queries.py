@@ -17,7 +17,7 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rearview_spark.monitors.evaluate import MonitorSpec, evaluate_monitors
+from rearview_spark.monitors.evaluate import MonitorSpec, evaluate_monitors, release_evaluation
 from rearview_spark.sources.loader import Tables, events_as_timeseries
 
 WINDOW_END = dt.datetime(2024, 2, 1)
@@ -39,12 +39,27 @@ SPECS = [
 ]
 
 
+def _evaluated(spark: SparkSession, results: DataFrame, shape) -> DataFrame:
+    """``shape(results)`` run by one action, after which the evaluation's
+    shared fetch is released; the rows come back as a local frame."""
+    try:
+        out = shape(results)
+        rows = out.collect()
+    finally:
+        release_evaluation(results)
+    return spark.createDataFrame(rows, out.schema)
+
+
 def monitor_run_statuses(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end monitor evaluation: target compile -> window fetch ->
     variable binding -> restricted expression -> status."""
     metrics = events_as_timeseries(Tables(spark, sf_dir).events)
     results = evaluate_monitors(spark, SPECS, metrics, now=WINDOW_END, with_graph=False)
-    return results.select("job_id", "scheduled_ts", "status", "message").orderBy("job_id")
+    return _evaluated(
+        spark,
+        results,
+        lambda r: r.select("job_id", "scheduled_ts", "status", "message").orderBy("job_id"),
+    )
 
 
 MONITOR_RUN_SQL = """
@@ -75,16 +90,18 @@ def monitor_graph_data_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts and value checksum, proving the graph_data round-trip."""
     metrics = events_as_timeseries(Tables(spark, sf_dir).events)
     results = evaluate_monitors(spark, SPECS[:2], metrics, now=WINDOW_END)
-    exploded = results.select("job_id", F.explode("graph_data").alias("p"))
-    return (
-        exploded.groupBy("job_id")
+    return _evaluated(
+        spark,
+        results,
+        lambda r: r.select("job_id", F.explode("graph_data").alias("p"))
+        .groupBy("job_id")
         .agg(
             F.count("*").alias("n_points"),
             F.round(F.sum("p.value") + F.lit(5e-8), 4).alias("value_sum"),
             F.min("p.ts").alias("first_ts"),
             F.max("p.ts").alias("last_ts"),
         )
-        .orderBy("job_id")
+        .orderBy("job_id"),
     )
 
 

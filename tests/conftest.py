@@ -94,6 +94,7 @@ SLOW_TESTS = {
     "test_pipeline_ops.py::test_vocab_growth_hand_computed",  # 6.7s
     "test_plan_shapes.py::test_graph_iterations_identical_with_and_without_state_broadcast",  # 6.9s
     "test_plan_shapes.py::test_no_unbounded_global_window_sweep",  # 255.5s
+    "test_plan_shapes.py::test_render_targets_share_one_fetch",  # 8-16s
     "test_queries_smoke.py::test_query_runs[monitor_lifecycle_replay]",  # 27.1s
     "test_queries_smoke.py::test_query_runs[sim_ivf_rpq_topk]",  # 6.6s
     "test_queries_smoke.py::test_query_runs[ts_rollup_refresh]",  # 7.5s

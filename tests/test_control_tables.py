@@ -265,9 +265,11 @@ class _RacedScheduler(MonitorScheduler):
 
 def test_tick_releases_its_cached_evaluation(spark, tmp_path):
     """Three ticks, the second losing its CAS, leave as many persisted
-    RDDs as there were before them."""
+    RDDs as there were before them, with render targets due beside a
+    plain one (their shared fetch is checkpointed and released)."""
     st = JobStore(spark, str(tmp_path / "store"))
-    st.save_monitors(spark.createDataFrame([_monitor(1)], MONITORS))
+    render = ["movingAverage(stats.req, 3)", "sumSeries(stats.*)"]
+    st.save_monitors(spark.createDataFrame([_monitor(1), _monitor(2, metrics=render)], MONITORS))
     sched = _RacedScheduler(spark, st, _metrics(spark, 200.0), AlertRouter())
     persisted = spark.sparkContext._jsc.getPersistentRDDs
     before = persisted().size()
@@ -276,7 +278,26 @@ def test_tick_releases_its_cached_evaluation(spark, tmp_path):
     with pytest.raises(ConcurrentWriteError):
         sched.tick(NOW + dt.timedelta(minutes=1))
     sched.race = False
-    assert sched.tick(NOW + dt.timedelta(minutes=2))["ran"] == 1
+    assert sched.tick(NOW + dt.timedelta(minutes=2))["ran"] == 2
+    assert persisted().size() == before
+
+
+def test_dashboard_and_gate_evaluations_release_their_fetch(spark, sf_dir):
+    """A dashboard preview with render targets and the
+    ``monitor_run_statuses`` gate leave as many persisted RDDs as there
+    were before them."""
+    from rearview_spark.monitors.dashboard import preview_run
+    from rearview_spark.plans.monitor_queries import monitor_run_statuses
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    out = preview_run(
+        spark, _metrics(spark, 200.0), ["stats.req", "movingAverage(stats.req, 3)"],
+        "(a - b).abs().max() > 1", 15, NOW,
+    )
+    assert out["status"] == "success"
+    assert len(out["graph_data"]) == 32
+    assert [r["status"] for r in monitor_run_statuses(spark, sf_dir).collect()][-1] == "error"
     assert persisted().size() == before
 
 

@@ -706,3 +706,44 @@ def test_mixed_fleet_runs_match_the_per_target_evaluator(spark, metric_store):
             .sort_values("ts").itertuples()
         ]
         assert runs[id][2] == (expected or None), id
+
+
+_RENDER_TARGETS = [
+    "movingAverage(svc.a.req, 3)",
+    "sumSeries(svc.*.err)",
+    "asPercent(svc.*.req)",
+    "timeShift(svc.b.req, '-10min')",
+]
+
+
+def test_render_targets_share_one_fetch(spark, metric_store, count_jobs):
+    """3 and 30 distinct render targets, beside a plain target, evaluate
+    in the same 2 jobs (the grouped-map shuffle and the result) and read
+    the metrics file once: every branch reads the one lazily checkpointed
+    fetch through a single partition, so no target adds a scan or an
+    exchange of its own. In the executed lineage the branches meet at one
+    checkpointed RDD (the fetch's scan sits behind it), and the one file
+    scan left is the plain target's."""
+    from rearview_spark.monitors.evaluate import evaluate_monitors, release_evaluation
+
+    metrics, _ = metric_store
+
+    def run(n):
+        specs = [_spec(i, [_RENDER_TARGETS[i % 4]], 2 + i // 4, "a.max().max() > 1e9")
+                 for i in range(n)]
+        specs.append(_spec(n, ["svc.a.req"], 5, "a.max() > 1e9"))
+        results = evaluate_monitors(spark, specs, metrics, _NOW, with_graph=False)
+        df = results.select("status")
+        try:
+            statuses = {r["status"] for r in df.collect()}
+            lineage = df._jdf.queryExecution().executedPlan().execute().toDebugString()
+        finally:
+            release_evaluation(results)
+        return statuses, lineage
+
+    for n in (3, 30):
+        (statuses, lineage), jobs = count_jobs(lambda: run(n))
+        assert statuses == {"success"}, n
+        assert jobs == 2, n
+        assert len(set(re.findall(r"(\w+RDD\[\d+\]) at localCheckpoint", lineage))) == 1, n
+        assert len(set(re.findall(r"FileScanRDD\[\d+\]", lineage))) == 1, n
