@@ -28,11 +28,13 @@ Prints ONE JSON line on stdout: metric, value, unit, queries, sf, load
 (1-minute loadavg per pass) and a comparable summary. A line's time is
 the wall clock of plan construction + ``count()`` (engine throughput, not
 collect cost), after a warmup pass on sf0.001 primes the JVM. Every run
-also profiles each line: plan vs action seconds and the Spark figures of
-a job group set around it. That goes to stderr, one JSON line per query
-([min, median, max] seconds, then the min pass's profile), and, for a
-full HEADLINE run, into the ``bench_history/`` archive. Named runs are
-not archived, so they never move the drift baseline.
+also profiles each line: plan vs action seconds, the Spark figures of
+a job group set around it and its jobs by kind (``job_kinds``:
+broadcast, shuffle map, checkpoint fill, write or result). That goes to
+stderr, one JSON line per query ([min, median, max] seconds, then the
+min pass's profile), and, for a full HEADLINE run, into the
+``bench_history/`` archive. Named runs are not archived, so they never
+move the drift baseline.
 """
 
 from __future__ import annotations
@@ -391,7 +393,7 @@ def _profiled(spark, label: str, build, action=DataFrame.count) -> dict[str, flo
     eager jobs it runs) and, when it returns a DataFrame, ``action`` on it
     (its ``count()`` by default), all under a job group of their own.
     Returns ``{"s", "plan_s", "action_s"}`` plus the group's Spark
-    figures."""
+    figures and its job counts by kind (``job_kinds``)."""
     from perfbench.spans import spark_group_figures
 
     sc = spark.sparkContext
@@ -408,7 +410,64 @@ def _profiled(spark, label: str, build, action=DataFrame.count) -> dict[str, flo
     finally:
         sc.setJobGroup(None, None)
     return {"s": t2 - t0, "plan_s": t1 - t0, "action_s": t2 - t1,
-            **spark_group_figures(spark, group)}
+            **spark_group_figures(spark, group), **job_kinds(spark, group)}
+
+
+JOB_KINDS = ("broadcast", "shuffle", "checkpoint", "write", "result")
+
+
+def _last_op_kind(graph) -> str:
+    """The kind of a stage by the last RDD it builds (the node no edge of
+    the stage's operation graph leaves): ``checkpoint`` when that RDD is
+    persisted (an eager checkpoint's or a cache's fill), else by the
+    innermost operator scope holding it: ``broadcast``
+    (BroadcastExchange), ``shuffle`` (Exchange, the map side; a range
+    partitioner's sample job also ends there), ``write`` (WriteFiles),
+    otherwise ``result``."""
+    sources = set()
+    it = graph.edges().iterator()
+    while it.hasNext():
+        sources.add(it.next().fromId())
+    found = []
+
+    def walk(cluster) -> None:
+        nodes = cluster.childNodes().iterator()
+        while nodes.hasNext():
+            node = nodes.next()
+            if node.id() not in sources:
+                found.append((node.id(), node.cached(), cluster.name()))
+        clusters = cluster.childClusters().iterator()
+        while clusters.hasNext():
+            walk(clusters.next())
+
+    walk(graph.rootCluster())
+    _, cached, scope = max(found)
+    if cached:
+        return "checkpoint"
+    if scope.startswith("BroadcastExchange"):
+        return "broadcast"
+    if scope.startswith("Exchange"):
+        return "shuffle"
+    if scope.startswith("WriteFiles"):
+        return "write"
+    return "result"
+
+
+def job_kinds(spark, group: str) -> dict[str, int]:
+    """``{"jobs.<kind>": n}`` over the jobs launched under ``group``, each
+    counted by the last operator of its final stage (the one with the
+    highest id: a job creates its parent stages first), read from the
+    status store's ``operationGraphForStage`` (see ``_last_op_kind``)."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    out = dict.fromkeys((f"jobs.{k}" for k in JOB_KINDS), 0)
+    for job_id in sc.statusTracker().getJobIdsForGroup(group):
+        it = store.job(int(job_id)).stageIds().iterator()
+        last = 0
+        while it.hasNext():
+            last = max(last, int(it.next()))
+        out[f"jobs.{_last_op_kind(store.operationGraphForStage(last))}"] += 1
+    return out
 
 
 def run_line(spark, qs: dict, name: str, sf_dir: str, index_dir: str) -> dict[str, dict]:

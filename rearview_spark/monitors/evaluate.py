@@ -76,12 +76,17 @@ from typing import Iterable, Mapping
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from rearview_spark.functions.graphite import PathNode, compile_target, parse_target
 from rearview_spark.monitors.schemas import RUN_RESULT
 from rearview_spark.operators._util import lazy_checkpoint, release_checkpoint
-from rearview_spark.operators.timeseries import glob_to_regex, is_glob, window_fetch
+from rearview_spark.operators.timeseries import (
+    epoch_micros,
+    glob_to_regex,
+    is_glob,
+    ts_lit,
+    window_fetch,
+)
 
 def _robust_z(s):
     """Modified z-score over a pandas Series (Iglewicz-Hoaglin; the same
@@ -273,19 +278,6 @@ def _plain_path(target: str) -> str | None:
     return None
 
 
-_micros = T.TimestampType().toInternal  # a datetime as F.lit converts it
-
-
-def _ts_lit(d: dt.datetime) -> Column:
-    """``d`` as a timestamp literal, converted as ``F.lit`` converts a
-    datetime but built from its epoch microseconds: ``F.lit(datetime)``
-    constructs a ``java.sql.Timestamp`` through py4j, several round trips
-    per literal, and a tick builds a few per window. Catalyst folds the
-    expression back into a literal, so a scan still takes it as a pushed
-    filter."""
-    return F.timestamp_micros(F.lit(_micros(d)))
-
-
 def _in_windows(spans: Iterable[tuple]) -> Column:
     """``ts`` inside any of the ``(lo, hi)`` windows, overlapping windows
     merged: a balanced OR the parquet scan takes as a pushed filter."""
@@ -296,7 +288,7 @@ def _in_windows(spans: Iterable[tuple]) -> Column:
         else:
             merged.append([lo, hi])
     return _balanced(
-        [F.col("ts").between(_ts_lit(lo), _ts_lit(hi)) for lo, hi in merged], operator.or_
+        [F.col("ts").between(ts_lit(lo), ts_lit(hi)) for lo, hi in merged], operator.or_
     )
 
 
@@ -317,7 +309,7 @@ def _plain_targets(metrics: DataFrame, plain: dict[str, list[tuple]]) -> DataFra
     are epoch microseconds as ``F.lit`` converts a datetime."""
     tags = {
         path: [
-            {"grp": grp, "var": var, "lo": _micros(lo), "hi": _micros(hi)}
+            {"grp": grp, "var": var, "lo": epoch_micros(lo), "hi": epoch_micros(hi)}
             for grp, var, lo, hi in ts
         ]
         for path, ts in plain.items()
@@ -490,10 +482,10 @@ def evaluate_monitors(
                 break
             try:
                 if (lo, hi) not in windows:
-                    windows[lo, hi] = window_fetch(fetch, _ts_lit(lo), _ts_lit(hi)).coalesce(1)
+                    windows[lo, hi] = window_fetch(fetch, lo, hi).coalesce(1)
                 df = target(windows[lo, hi])
                 if (lo, hi) != (start, end):
-                    df = window_fetch(df, _ts_lit(start), _ts_lit(end))
+                    df = window_fetch(df, start, end)
             except Exception as e:  # noqa: BLE001 — bad target -> error status
                 error = f"target {text!r}: {e}"
                 break

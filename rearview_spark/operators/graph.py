@@ -53,12 +53,13 @@ from rearview_spark.operators._util import observed_checkpoint as _observed_chec
 PAGERANK_SCALE = 10**12
 
 
-def _edges_by_src(edges: DataFrame, **checks) -> tuple[DataFrame, dict]:
-    """Edges repartitioned by ``src`` and checkpointed, with their row
-    count ``m`` and any ``checks`` aggregates observed by the fill job."""
-    return _observed_checkpoint(
-        edges.repartition("src"), m=F.count(F.lit(1)), **checks
-    )
+def _edges_checkpoint(edges: DataFrame, **checks) -> tuple[DataFrame, dict]:
+    """The edge list checkpointed as it stands, with its row count ``m``
+    and any ``checks`` aggregates observed by the fill job. It is not
+    repartitioned by ``src`` first: under AQE the checkpoint reports
+    ``UnknownPartitioning``, so no later join could use that layout, and
+    the exchange would only cost a job."""
+    return _observed_checkpoint(edges, m=F.count(F.lit(1)), **checks)
 
 
 def pagerank(
@@ -389,7 +390,7 @@ def label_propagation(edges: DataFrame, iterations: int = 4) -> DataFrame:
     """
     # edge-row count bounds the node count (every node appears as src):
     # an exact-enough driver scalar to gate the per-iteration broadcast
-    ew, obs = _edges_by_src(edges)
+    ew, obs = _edges_checkpoint(edges)
     m = obs["m"]
     labels = (
         ew.select(F.col("src").alias("node"))
@@ -439,7 +440,7 @@ def k_core(edges: DataFrame, k: int, max_rounds: int = 8) -> DataFrame:
     Returns ``(node, core_degree)`` — survivors with their degree
     inside the core.
     """
-    cur, obs = _edges_by_src(edges)
+    cur, obs = _edges_checkpoint(edges)
 
     def peel(cur: DataFrame, obs: dict) -> DataFrame:
         keep = (
@@ -590,7 +591,7 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int = 6) -> DataFrame
     Returns ``(node, hops)`` for reached nodes only (seeds at 0). This
     is :func:`shortest_paths` with unit weights, and runs the same core.
     """
-    ew, obs = _edges_by_src(edges)
+    ew, obs = _edges_checkpoint(edges)
     return _relax(ew, obs["m"], seeds, max_hops, F.lit(1), "hops")
 
 
@@ -599,8 +600,8 @@ def _relax(
 ) -> DataFrame:
     """Bounded min-plus relaxation behind :func:`bfs_hops` (``cost`` 1)
     and :func:`shortest_paths` (``cost`` the weight column) over the
-    src-partitioned, checkpointed edge list ``ew`` of ``m`` rows: the
-    ``(node, <col>)`` frame after ``rounds`` rounds of
+    checkpointed edge list ``ew`` of ``m`` rows: the ``(node, <col>)``
+    frame after ``rounds`` rounds of
 
         d_{t+1}(v) = min(d_t(v), min over in-edges (u,v) of d_t(u) + cost)
 
@@ -684,7 +685,7 @@ def hits(
         )
     # hub/authority state is O(src nodes)/O(dst nodes) <= edge rows, so
     # m bounds every renorm round's broadcast decision (_bcast_state)
-    ew, obs = _edges_by_src(edges.dropna(subset=["src", "dst"]))
+    ew, obs = _edges_checkpoint(edges.dropna(subset=["src", "dst"]))
     m = obs["m"]
 
     def _renorm(df: DataFrame, col: str) -> DataFrame:
@@ -975,7 +976,7 @@ def shortest_paths(
     Returns ``(node, dist)`` for reached nodes only (seeds at 0).
     """
     w = F.col("w")
-    ew, obs = _edges_by_src(edges, bad=F.count_if(w.isNull() | (w < 0)))
+    ew, obs = _edges_checkpoint(edges, bad=F.count_if(w.isNull() | (w < 0)))
     if obs["bad"]:
         raise ValueError(
             f"shortest_paths: {obs['bad']} edge weights are NULL or negative; "

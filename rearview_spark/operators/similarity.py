@@ -913,43 +913,43 @@ def pq_fit(
     subspace -> ``(s, code, centroid)`` with ``m*k`` rows total.
 
     All subspaces train SIMULTANEOUSLY: the subvector frame carries the
-    subspace id ``s``, so one assign-join + one update-aggregate per
-    Lloyd iteration covers every subspace (iterations cost O(n*m*k)
+    subspace id ``s``, so one round covers every subspace (O(n*m*k)
     joined rows, not m separate fits). Deterministic init (the k
-    smallest ids' subvectors) and smallest-code tie-breaks keep the fit
-    reproducible — the property the recursive SQL oracle relies on.
-    The Lloyd iterations run through ``_util.fixed_point``.
+    smallest ids' subvectors, coded 0..k-1 in id order) and
+    smallest-code tie-breaks keep the fit reproducible — the property
+    the recursive SQL oracle relies on.
 
-    r16 adjudication — this broadcast-join shape STAYS, measured
-    against three zero-shuffle rewrites (kmeans_fit's r16 driver-side
-    discipline ported to PQ): (a) the m*k-literal unrolled struct CASE,
-    (b) a transform over SQL-literal arrays, (c) an ``F.lit`` nested
-    centroid tensor. All three were bit-identical but SLOWER end to end
-    in paired same-session A/Bs (a/b pay a ~0.5 s driver re-parse/
-    analyze of a ~100 KB expression per iteration and per encode; c
-    evaluates the tensor through a non-codegen literal path and read
-    worst of all, ~2x) — the assignment join's n*m-row map-side-
-    combined min is trivial next to those constants at any SF, and the
-    broadcast codebook never shuffles the corpus. The kmeans port WAS
-    kept (sel_cluster_balanced 0.69x): there the driver-side loop
-    removed three extra argmax passes and an eager checkpoint per
-    iteration, wins PQ's loop never had on the table."""
-    from pyspark.sql import Window
+    One Lloyd round (through ``_util.fixed_point``) is two aggregates:
 
-    from rearview_spark.operators._util import ensure_parallelism, fixed_point
+    - assign: the subvectors join the broadcast codebook and keep the
+      nearest ``(d, code)`` per ``(id, s)`` — the n*m*k-row SortAggregate;
+    - update: ONE ``(s, code)`` aggregate over the assigned rows unioned
+      with the previous codebook's rows. Each position is the members'
+      ``avg``, or the previous centroid when the cluster got no members,
+      so an empty cluster needs no join back to the old codebook.
+
+    The update is parsed from one SQL string: built from py4j
+    ``Column`` objects, several per position, it took about twice the
+    driver time per round. The seed codes are numbered on the k seed
+    ids (``ranked_topk``) before the join, so no window over the m*k
+    seed rows needs an exchange, and the seed codebook is checkpointed
+    as one partition."""
+    from rearview_spark.operators._util import ensure_parallelism, fixed_point, ranked_topk
 
     sub = dim // m
     subs = _subvectors(ensure_parallelism(corpus, id_col), m, sub, id_col, vec_col).cache()
-    seed_ids = corpus.select(id_col).orderBy(id_col).limit(k)
+    seeds = ranked_topk(corpus.select(id_col), [id_col], k, "code")
     codebook = (
-        subs.join(F.broadcast(seed_ids), id_col)
-        .select(
-            "s",
-            (F.row_number().over(Window.partitionBy("s").orderBy(id_col)) - 1).alias("code"),
-            F.col("sv").alias("centroid"),
-        )
+        subs.join(F.broadcast(seeds), id_col)
+        .select("s", (F.col("code") - 1).alias("code"), F.col("sv").alias("centroid"))
+        .coalesce(1)
         .localCheckpoint(eager=True)
     )
+    update = F.expr(
+        "IF(count_if(_member) = 0, max(IF(_member, NULL, sv)), array("
+        + ", ".join(f"avg(IF(_member, sv[{i}], NULL))" for i in range(sub))
+        + "))"
+    ).alias("centroid")
 
     def step(codebook: DataFrame, _) -> DataFrame:
         d = _sq_l2(F.col("sv"), F.col("centroid"))
@@ -958,21 +958,10 @@ def pq_fit(
             .select(id_col, "s", "sv", F.struct(d.alias("d"), F.col("code").alias("c")).alias("dc"))
             .groupBy(id_col, "s")
             .agg(F.min("dc").alias("dc"), F.first("sv").alias("sv"))
-            .select(id_col, "s", F.col("dc.c").alias("code"), "sv")
+            .select("s", F.col("dc.c").alias("code"), "sv", F.lit(True).alias("_member"))
         )
-        means = (
-            assigned.select("s", "code", F.posexplode("sv").alias("pos", "x"))
-            .groupBy("s", "code", "pos")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("s", "code")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select("s", "code", F.transform("pm", lambda t: t["m"]).alias("centroid"))
-        )
-        return (
-            codebook.select("s", "code", F.col("centroid").alias("_prev"))
-            .join(means, ["s", "code"], "left")
-            .select("s", "code", F.coalesce("centroid", "_prev").alias("centroid"))
-        )
+        prev = codebook.select("s", "code", F.col("centroid").alias("sv"), F.lit(False).alias("_member"))
+        return assigned.unionByName(prev).groupBy("s", "code").agg(update)
 
     codebook = fixed_point(codebook, step, iters)
     # codebook is checkpointed; the subvector cache has no readers left

@@ -1386,16 +1386,11 @@ def er_customer_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.abs(F.col("c_acctbal_b") - F.col("c_acctbal_a")) <= 100)
     )
     cc = connected_components(matched)
-    sizes = cc.groupBy("component").agg(F.count("*").alias("entity_size"))
-    return (
-        cc.join(sizes, "component")
-        .select(
-            F.col("id").alias("c_custkey"),
-            F.col("component").alias("entity"),
-            "entity_size",
-        )
-        .orderBy("c_custkey")
-    )
+    return cc.select(
+        F.col("id").alias("c_custkey"),
+        F.col("component").alias("entity"),
+        F.count("*").over(Window.partitionBy("component")).alias("entity_size"),
+    ).orderBy("c_custkey")
 
 
 ER_CUSTOMER_SQL = """

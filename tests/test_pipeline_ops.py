@@ -453,6 +453,61 @@ def test_pq_codes_compact_and_deterministic(spark, sf_dir):
     assert rng[0] >= 0 and rng[1] <= 15
 
 
+def _pq_lloyd_replay(vecs: dict, m: int, k: int, iters: int) -> tuple[dict, int]:
+    """NumPy replay of pq_fit's contract: per subspace, seed with the k
+    smallest ids' subvectors, assign each vector to the nearest centroid
+    (squared L2 folded left to right, ties to the smallest code), move
+    each centroid to its members' mean and leave a memberless one where
+    it was. Returns ``({(s, code): centroid}, empty clusters seen)``."""
+    import numpy as np
+
+    ids = sorted(vecs)
+    sub = len(vecs[ids[0]]) // m
+    out, empty = {}, 0
+    for s in range(m):
+        x = np.array([vecs[i][s * sub:(s + 1) * sub] for i in ids], dtype=float)
+        c = x[:k].copy()
+        for _ in range(iters):
+            d = np.zeros((len(ids), k))
+            for j in range(sub):
+                diff = x[:, j:j + 1] - c[None, :, j]
+                d = d + diff * diff
+            a = d.argmin(axis=1)
+            for code in range(k):
+                members = x[a == code]
+                if len(members):
+                    c[code] = members.sum(axis=0) / len(members)
+                else:
+                    empty += 1
+        out.update({(s, code): c[code].tolist() for code in range(k)})
+    return out, empty
+
+
+def test_pq_fit_round_cost_and_lloyd_replay(spark, count_jobs, tmp_path):
+    """One Lloyd round is three jobs (codebook broadcast, the (s, code)
+    update's map side, the checkpoint fill) over a one-file corpus, as
+    the embeddings table arrives, and the codebook is the NumPy
+    replay's bit for bit. Vectors 0 and 1 are equal, so code 1 ties
+    with code 0, loses, and starts out with no members."""
+    from rearview_spark.operators.similarity import pq_fit
+
+    vecs = {i: [float((i * (j + 3) + j * j) % 11) for j in range(8)] for i in range(2, 14)}
+    vecs[0] = vecs[1] = [1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0]
+    spark.createDataFrame(
+        sorted(vecs.items()), "vec_id long, embedding array<double>"
+    ).coalesce(1).write.parquet(str(tmp_path / "corpus"))
+    corpus = spark.read.parquet(str(tmp_path / "corpus"))
+    jobs = {}
+    for iters in (1, 2):
+        cb, jobs[iters] = count_jobs(
+            lambda: pq_fit(corpus, m=2, k=4, iters=iters, dim=8)
+        )
+    assert jobs[2] - jobs[1] == 3
+    want, empty = _pq_lloyd_replay(vecs, m=2, k=4, iters=2)
+    assert empty > 0
+    assert {(r["s"], r["code"]): list(r["centroid"]) for r in cb.collect()} == want
+
+
 def test_pq_topk_recall_vs_brute_force(spark, sf_dir):
     from rearview_spark.sources.loader import load_table
     from rearview_spark.operators.similarity import brute_force_topk, pq_topk

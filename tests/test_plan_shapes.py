@@ -286,6 +286,18 @@ def test_no_unbounded_global_window_sweep(spark, sf_dir):
     assert not bad, f"unbounded global window(s): {bad}"
 
 
+def test_er_entity_sizes_need_no_join_after_components(spark, sf_dir):
+    """er_customer_entities sizes each entity with a count over a window
+    partitioned by component, not a per-component aggregate joined back:
+    above the components' checkpoint the plan holds no join."""
+    from rearview_spark.plans.relational import er_customer_entities
+
+    plan = er_customer_entities(spark, sf_dir)._jdf.queryExecution().optimizedPlan()
+    text = plan.toString()
+    assert "LogicalRDD" in text and "Window" in text
+    assert "Join" not in text
+
+
 def test_prf_expansion_rank_is_limit_bounded(spark):
     """prf_expansion_terms' prf_rank (ADVICE r11 low #4) now ranks via
     ranked_topk — the feedback-vocabulary aggregate reaches the rank

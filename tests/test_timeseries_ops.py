@@ -268,6 +268,41 @@ def test_select_glob_dimension_pushdown(spark, tmp_path):
     assert any(("In(metric" in l) or ("EqualTo(metric" in l) for l in pushed), pushed
 
 
+def test_datetime_bounds_match_py4j_literals(spark, tmp_path):
+    """Datetime bounds are built from epoch microseconds (``ts_lit``), not
+    a py4j ``Timestamp`` per ``F.lit``: the scan's pushed filter and the
+    rows stay those of the ``F.lit`` form, for naive datetimes (local
+    wall time, as ``F.lit`` reads them) and aware ones alike."""
+    import io
+    from contextlib import redirect_stdout
+
+    path = str(tmp_path / "pts")
+    make_series(spark, {"a": [float(i) for i in range(30)]}).write.parquet(path)
+    df = spark.read.parquet(path)
+
+    def pushed(frame) -> list[str]:
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            frame.explain("formatted")
+        return [l for l in buf.getvalue().splitlines() if "PushedFilters" in l]
+
+    bounds = [
+        (ts(3), ts(17)),
+        (ts(3).replace(tzinfo=dt.timezone.utc), ts(17).replace(tzinfo=dt.timezone(dt.timedelta(hours=2)))),
+    ]
+    for lo, hi in bounds:
+        old = df.filter(F.col("ts").between(F.lit(lo), F.lit(hi)))
+        new = G.window_fetch(df, lo, hi)
+        assert pushed(new) == pushed(old) and pushed(new)
+        assert sorted(new.collect()) == sorted(old.collect())
+        inside = F.col("ts").between(F.lit(lo), F.lit(hi))
+        old_slice = df.withColumn("value", F.when(inside, F.col("value")).otherwise(None))
+        assert sorted(G.time_slice(df, lo, hi).collect()) == sorted(old_slice.collect())
+    lo, hi = bounds[0]
+    got = G.constant_line(spark, 1.0, lo, hi, 300).collect()
+    assert [r["ts"] for r in got] == [ts(3), ts(8), ts(13)]
+
+
 def test_select_glob_semi_join_fallback(spark, tmp_path):
     """Past the IN-list cap the glob routes through a broadcast semi-join
     on the dimension (no driver collect of the name list) with identical

@@ -186,6 +186,46 @@ def test_global_prefix_offsets_are_flat_map_lookup(spark):
     assert [rn for _, rn in got] == list(range(1, 301))
 
 
+def test_global_row_number_costs_only_the_range_shuffle(spark, count_jobs):
+    """The range shuffle's sample, map and checkpoint-fill jobs are the
+    whole cost: the fill observes the per-partition counts (no grouped
+    collect) and the ranks need no window exchange, so reading the
+    result is a single job."""
+    from rearview_spark.operators._util import global_row_number
+
+    pre = spark.range(200).select(
+        ((F.col("id") * 37) % 101).alias("v"), "id"
+    ).repartition(4).localCheckpoint(eager=True)
+    (out, total), jobs = count_jobs(lambda: global_row_number(pre, ["v", "id"]))
+    got, read_jobs = count_jobs(out.collect)
+    assert (jobs, read_jobs) == (3, 1)
+    assert total == 200
+    assert [(r["v"], r["id"]) for r in sorted(got, key=lambda r: r["global_rn"])] == sorted(
+        ((i * 37) % 101, i) for i in range(200)
+    )
+    assert sorted(r["global_rn"] for r in got) == list(range(1, 201))
+
+
+@pytest.mark.parametrize("partitions", [1, 300])
+def test_global_row_number_dense_at_any_partition_bound(spark, partitions):
+    """With far more shuffle partitions than rows most range partitions
+    are empty (or AQE coalesces them); every partition id stays under
+    the bound the observation covers, so the ranks are still 1..n. One
+    partition holds every row."""
+    from rearview_spark.operators._util import global_row_number
+
+    df = spark.createDataFrame([(i,) for i in (5, 3, 9, 1, 7)], "k long")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    try:
+        out, total = global_row_number(df, [F.col("k").desc()], "rn")
+        got = sorted((r["rn"], r["k"]) for r in out.collect())
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert total == 5
+    assert got == [(1, 9), (2, 7), (3, 5), (4, 3), (5, 1)]
+
+
 def test_peak_concurrency_hand_case(spark):
     from rearview_spark.operators.behavior import peak_concurrency
 
