@@ -89,6 +89,52 @@ def observed_checkpoint(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
     return cp, obs.get
 
 
+def _sql_literal(v) -> str:
+    """``v`` (None, an int, a double or a list of them) as a Spark SQL
+    literal: doubles through ``repr`` with the ``D`` suffix (parsed by
+    ``Double.parseDouble``, so they round-trip exactly), lists as
+    ``array(...)``."""
+    import math
+
+    if v is None:
+        return "NULL"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        if math.isfinite(v):
+            return f"{v!r}D"
+        return f"CAST('{v}' AS DOUBLE)"  # nan, inf, -inf
+    if isinstance(v, (list, tuple)):
+        return "array(" + ", ".join(_sql_literal(x) for x in v) + ")"
+    raise TypeError(f"literal_frame: no SQL literal for {type(v).__name__}")
+
+
+def literal_frame(spark, rows, schema: str) -> DataFrame:
+    """A frame of ``rows`` (tuples in ``schema`` order, ``schema`` a DDL
+    string) built as one inline ``VALUES`` table, for a bounded driver
+    artifact such as a codebook.
+
+    The analyzer folds an inline table of literals into a
+    ``LocalRelation``: collecting it launches no job and writing it one.
+    ``createDataFrame`` of the same rows is an RDD-backed ``LogicalRDD``
+    that costs a job to collect and two to write. Every value is cast to
+    its declared type, so the schema is ``schema`` whatever the literals'
+    own types; an empty ``rows`` gives an empty frame of that schema."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    fields = _parse_datatype_string(schema).fields
+    typed = [
+        "(" + ", ".join(
+            f"CAST({_sql_literal(v)} AS {f.dataType.simpleString()})"
+            for v, f in zip(row, fields)
+        ) + ")"
+        for row in rows or [(None,) * len(fields)]
+    ]
+    names = ", ".join(f"`{f.name}`" for f in fields)
+    out = spark.sql(f"SELECT * FROM VALUES {', '.join(typed)} AS t({names})")
+    return out if rows else out.limit(0)
+
+
 def lazy_checkpoint(df: DataFrame) -> DataFrame:
     """Lazy ``localCheckpoint`` of ``df``: no job runs here. The first
     action that reads the frame fills it, inside that action's own stage
@@ -130,6 +176,7 @@ def fixed_point(
     converge_on: str | None = None,
     op: str = "fixed_point",
     cap_name: str = "rounds",
+    done: int = 0,
     **observe,
 ) -> DataFrame:
     """Iterate ``state = step(state, obs)`` for at most ``rounds`` rounds
@@ -159,8 +206,11 @@ def fixed_point(
     previous one, seeded from ``obs`` — an input already at its fixed
     point costs one round. Running out of rounds before such a round
     warns (``RuntimeWarning`` naming ``op`` and ``cap_name``), pointed
-    at the operator's caller. Without ``converge_on``, ``rounds`` is a
-    fixed round count and nothing warns.
+    at the operator's caller. An operator that ran its first ``done``
+    rounds itself (a first round determined by the edges alone) passes
+    the rest as ``rounds``; the warning names the cap ``done + rounds``.
+    Without ``converge_on``, ``rounds`` is a fixed round count and
+    nothing warns.
     """
     import warnings
 
@@ -172,7 +222,7 @@ def fixed_point(
             obs = new
     if converge_on is not None:
         warnings.warn(
-            f"{op}: stopped at {cap_name}={rounds} without converging; "
+            f"{op}: stopped at {cap_name}={done + rounds} without converging; "
             "the result may not be the fixed point",
             RuntimeWarning,
             stacklevel=3,

@@ -1275,30 +1275,44 @@ def connected_components(
     Iterative min-label propagation: each round every node takes the min
     of its own label and its neighbors' labels — converges in O(graph
     diameter) rounds (dup clusters are shallow; a handful of rounds in
-    practice, bounded by ``max_iter``). Each round is one shuffle-join +
-    one aggregate. Label state is 16 bytes/node — billions of nodes fit
-    a modest cluster; this is the scalable alternative to collecting the
-    pair graph to the driver. Stopping at ``max_iter`` before a round
-    confirms the fixed point warns: labels may still be moving."""
+    practice, bounded by ``max_iter``). Label state is 16 bytes/node —
+    billions of nodes fit a modest cluster; this is the scalable
+    alternative to collecting the pair graph to the driver. Stopping at
+    ``max_iter`` before a round confirms the fixed point warns: labels
+    may still be moving.
+
+    Round shape. The edges are symmetric, so every node is a ``src`` and
+    round 1, starting from each node's own id, is ``least(src,
+    min(dst))`` grouped by ``src`` over the edge checkpoint: the edges
+    alone determine it, so it needs no label frame and no broadcast.
+    Each later round joins the edges to the previous labels (broadcast
+    while the node count fits, ``_util.bcast_state``) and takes the min
+    per node: the broadcast, the aggregate's map side and the fill.
+
+    Convergence: min-propagation only ever DECREASES labels, so the
+    exact sum of labels is strictly monotone until the fixpoint — equal
+    sums mean no label moved. decimal(38) keeps the sum exact at any
+    node count. Every sum (round 1's also the sum of the ids it started
+    from, and the node count gating the broadcast) is observed by the
+    job that fills the round's checkpoint, so a round costs no job
+    beyond its propagation."""
+    if max_iter < 1:
+        raise ValueError("connected_components: max_iter must be >= 1")
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     edges = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=True)
-    # Convergence test: min-propagation only ever DECREASES labels, so the
-    # exact sum of labels is strictly monotone until the fixpoint — equal
-    # sums mean no label moved. decimal(38) keeps the sum exact at any
-    # node count. Every sum (and the node count gating the per-round
-    # broadcast of the O(nodes) label frame into the edge join — see
-    # _util.bcast_state) is observed by the job that fills the label
-    # checkpoint, so a round costs no job beyond its propagation.
     label_sum = F.sum(F.col("comp").cast("decimal(38,0)"))
     labels, obs = _observed_checkpoint(
-        edges.select("src")
-        .distinct()
-        .select(F.col("src").alias("id"), F.col("src").alias("comp")),
+        edges.groupBy("src")
+        .agg(F.least(F.col("src"), F.min("dst")).alias("comp"))
+        .select(F.col("src").alias("id"), "comp"),
+        s0=F.sum(F.col("id").cast("decimal(38,0)")),
         s=label_sum,
         n=F.count(F.lit(1)),
     )
+    if obs["s"] == obs["s0"]:
+        return labels.select(F.col("id"), F.col("comp").alias("component"))
     n_nodes = obs["n"]
 
     def step(labels: DataFrame, _) -> DataFrame:
@@ -1316,11 +1330,12 @@ def connected_components(
     labels = fixed_point(
         labels,
         step,
-        max_iter,
+        max_iter - 1,
         obs=obs,
         converge_on="s",
         op="connected_components",
         cap_name="max_iter",
+        done=1,
         s=label_sum,
     )
     return labels.select(F.col("id"), F.col("comp").alias("component"))

@@ -43,7 +43,7 @@ SURVEY.md §6.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from rearview_spark.operators._util import bcast_state as _bcast_state
@@ -134,15 +134,15 @@ def _seeded_rank(
     """The rank recurrence behind :func:`pagerank` (``seeds`` None:
     every node is a seed) and :func:`personalized_pagerank`.
 
-    Scale shape: the edge list is joined to its out-degrees,
-    repartitioned by ``src`` and checkpointed ONCE; each iteration is
-    one partition-local join against the O(nodes) rank frame —
-    broadcast while the node count n fits (see ``_bcast_state``), so
-    the edge list is never re-shuffled — plus one dst-keyed aggregate.
+    Scale shape: the edge list is joined to its out-degrees and
+    checkpointed ONCE; each iteration is one join against the O(nodes)
+    rank frame — broadcast while the node count n fits (see
+    ``_bcast_state``), so the edge list is never re-shuffled — plus one
+    dst-keyed aggregate.
     Driver scalars: the seed count s and node count n, observed by the
     job that fills the node checkpoint (no job of their own)."""
     deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    ew = edges.join(deg, "src").repartition("src").localCheckpoint(eager=True)
+    ew = edges.join(deg, "src").localCheckpoint(eager=True)
     nodes = ew.select(F.col("src").alias("node")).distinct()
     if seeds is None:
         flagged, contrib_seed = nodes.withColumn("_seed", F.lit(1)), F.lit(1)
@@ -664,9 +664,15 @@ def hits(
     All values are nonnegative, so truncating and floor division agree
     (Spark ``div`` == DuckDB ``//`` here, no pmod dance needed).
 
-    Since ``h_0`` is the constant ``scale``, ``a_1(v)`` is ``scale``
-    times v's in-degree: one aggregate over the edges, no score frame
-    and no join.
+    First round. Since ``h_0`` is the constant ``scale``, ``a_1(v)`` is
+    ``scale`` times v's in-degree, renormed by the largest in-degree.
+    The edge checkpoint carries each edge's ``_indeg`` (a window over
+    ``dst``, computed in the fill) and observes its max, so ``h_1`` is
+    one ``src`` aggregate of the per-edge ``a_1(dst)``: the edges alone
+    determine the first round, with no score frame, no broadcast and no
+    join. ``a_1`` stays a lazy projection of the edges (one row per
+    edge, folded per node by the output's max) that only
+    ``iterations=1`` reads.
 
     Scale shape per later half-step: an equi-join of the checkpointed
     edge list against an O(nodes) score frame (dst for authorities, src
@@ -685,8 +691,15 @@ def hits(
         )
     # hub/authority state is O(src nodes)/O(dst nodes) <= edge rows, so
     # m bounds every renorm round's broadcast decision (_bcast_state)
-    ew, obs = _edges_checkpoint(edges.dropna(subset=["src", "dst"]))
-    m = obs["m"]
+    ew, obs = _edges_checkpoint(
+        edges.dropna(subset=["src", "dst"]).withColumn(
+            "_indeg", F.count(F.lit(1)).over(Window.partitionBy("dst"))
+        ),
+        mx=F.max("_indeg"),
+    )
+    m, mx = obs["m"], obs["mx"]
+    if not mx:
+        raise ValueError("hits: score mass vanished (empty graph?)")
 
     def _renorm(df: DataFrame, col: str) -> DataFrame:
         # Checkpoint the AGGREGATE and observe its max in the same
@@ -712,13 +725,14 @@ def hits(
             col,
         )
 
-    a = _renorm(
-        ew.groupBy(F.col("dst").alias("node")).agg(
-            (F.count(F.lit(1)) * F.lit(scale)).alias("a")
-        ),
-        "a",
+    # a_1(v) = scale * indeg(v), renormed by the max in-degree's
+    a1 = F.expr(f"(_indeg * {scale} * {scale}) div {mx * scale}")
+    h = _renorm(
+        ew.groupBy(F.col("src").alias("node")).agg(F.sum(a1).alias("h")), "h"
     )
-    h = _step(a, "dst", "src", "h")
+    # a_1 per edge: only iterations=1 reads it, through the output's
+    # per-node max, which folds the repeats with no shuffle of its own
+    a = ew.select(F.col("dst").alias("node"), a1.alias("a"))
     for _ in range(iterations - 1):
         a = _step(h, "src", "dst", "a")
         h = _step(a, "dst", "src", "h")

@@ -316,11 +316,12 @@ def cluster_balanced_sample(
     rows as ``(id, bucket, keep_threshold_bp)``.
 
     Scale shape: the k-means fit is the deterministic Lloyd's of
-    similarity.kmeans_fit (codebook broadcast per iteration; corpus
-    never leaves executors); assignment is a zero-shuffle narrow
-    projection (assign_buckets); sizes are one |clusters|-row aggregate
-    broadcast back; the keep rule is a scan-time filter. Beyond the
-    fit, the whole pass adds NO corpus-scale shuffle."""
+    similarity.kmeans_fit (the codebook a driver-side plan literal per
+    iteration; corpus never leaves executors); assignment is a
+    zero-shuffle narrow projection (assign_buckets); sizes are one
+    |clusters|-row aggregate broadcast back; the keep rule is a
+    scan-time filter. Beyond the fit, the whole pass adds NO
+    corpus-scale shuffle."""
     import math
 
     from rearview_spark.operators.similarity import (

@@ -706,8 +706,10 @@ def kmeans_fit(
     clusters keep their previous centroid (standard Lloyd
     degenerate-case handling, now a driver-side dict fallback —
     identical doubles: collected avg values round-trip exactly through
-    repr literals, the assign_buckets discipline)."""
-    from rearview_spark.operators._util import ensure_parallelism
+    repr literals, the assign_buckets discipline). The codebook comes
+    back as a ``LocalRelation`` (:func:`_util.literal_frame`), so each
+    :func:`assign_buckets` collect of it costs no job."""
+    from rearview_spark.operators._util import ensure_parallelism, literal_frame
 
     # cached: every Lloyd iteration reads vecs once (assign+update fused
     # into the means job) and the seed scan once — without the cache that
@@ -737,8 +739,8 @@ def kmeans_fit(
             for b in range(len(cents))
         ]
     vecs.unpersist()
-    spark = corpus.sparkSession
-    return spark.createDataFrame(
+    return literal_frame(
+        corpus.sparkSession,
         [(b, cents[b]) for b in range(len(cents))],
         "bucket int, centroid array<double>",
     )
@@ -899,6 +901,28 @@ def _subvectors(df: DataFrame, m: int, sub: int, id_col: str, vec_col: str) -> D
     )
 
 
+def _pq_code_sql(cents: dict) -> str:
+    """The nearest code of subvector ``sv`` in subspace ``s`` as ONE
+    parsed SQL expression over the driver-side codebook
+    ``{s: [centroid, ...]}`` (subspaces 0..m-1, codes 0..k-1).
+
+    The codebook is one ``from_json`` literal, which Catalyst folds, so
+    the assignment is a projection: ``element_at`` picks the subspace's
+    centroids, ``transform`` folds the squared L2 distance to each in
+    :func:`_sq_l2`'s order, and ``array_min`` over ``(d, code)`` structs
+    takes the nearest, ties to the smallest code. JSON carries each
+    double as its ``repr``, which round-trips exactly."""
+    import json
+
+    book = json.dumps([cents[s] for s in range(len(cents))])
+    return (
+        f"array_min(transform(element_at(from_json('{book}', "
+        "'array<array<array<double>>>'), s + 1), (c, i) -> named_struct("
+        "'d', aggregate(zip_with(sv, c, (x, y) -> (x - y) * (x - y)), "
+        "0D, (a, b) -> a + b), 'c', i))).c"
+    )
+
+
 def pq_fit(
     corpus: DataFrame,
     m: int = 4,
@@ -913,60 +937,60 @@ def pq_fit(
     subspace -> ``(s, code, centroid)`` with ``m*k`` rows total.
 
     All subspaces train SIMULTANEOUSLY: the subvector frame carries the
-    subspace id ``s``, so one round covers every subspace (O(n*m*k)
-    joined rows, not m separate fits). Deterministic init (the k
-    smallest ids' subvectors, coded 0..k-1 in id order) and
+    subspace id ``s``, so one round covers every subspace. Deterministic
+    init (the k smallest ids' subvectors, coded 0..k-1 in id order) and
     smallest-code tie-breaks keep the fit reproducible — the property
     the recursive SQL oracle relies on.
 
-    One Lloyd round (through ``_util.fixed_point``) is two aggregates:
+    The codebook is at most ``dim*k`` doubles whatever the corpus size,
+    so it lives on the driver as ``{s: [centroid, ...]}`` (the
+    :func:`kmeans_fit` pattern). One Lloyd round is one aggregate and
+    two jobs (its map side and the collect):
 
-    - assign: the subvectors join the broadcast codebook and keep the
-      nearest ``(d, code)`` per ``(id, s)`` — the n*m*k-row SortAggregate;
-    - update: ONE ``(s, code)`` aggregate over the assigned rows unioned
-      with the previous codebook's rows. Each position is the members'
-      ``avg``, or the previous centroid when the cluster got no members,
-      so an empty cluster needs no join back to the old codebook.
+    - assign: a projection, the codebook a folded plan literal
+      (:func:`_pq_code_sql`) — no broadcast, no join, no n*m*k rows;
+    - update: ``groupBy(s, code)`` averaging each position, parsed from
+      one SQL string (built from py4j ``Column`` objects, several per
+      position, it took about twice the driver time) and collected. A
+      cluster with no members keeps its centroid in the driver dict.
 
-    The update is parsed from one SQL string: built from py4j
-    ``Column`` objects, several per position, it took about twice the
-    driver time per round. The seed codes are numbered on the k seed
-    ids (``ranked_topk``) before the join, so no window over the m*k
-    seed rows needs an exchange, and the seed codebook is checkpointed
-    as one partition."""
-    from rearview_spark.operators._util import ensure_parallelism, fixed_point, ranked_topk
+    The subvectors are spread over the cores (``ensure_parallelism``)
+    and held by a lazy checkpoint that the seed collect fills, so the
+    rounds re-read them with no scan and no cache job of their own; it
+    is released before returning. The codebook comes back as a
+    ``LocalRelation`` (:func:`_util.literal_frame`): collecting it costs
+    no job."""
+    from rearview_spark.operators._util import (
+        ensure_parallelism,
+        lazy_checkpoint,
+        literal_frame,
+        release_checkpoint,
+    )
 
     sub = dim // m
-    subs = _subvectors(ensure_parallelism(corpus, id_col), m, sub, id_col, vec_col).cache()
-    seeds = ranked_topk(corpus.select(id_col), [id_col], k, "code")
-    codebook = (
-        subs.join(F.broadcast(seeds), id_col)
-        .select("s", (F.col("code") - 1).alias("code"), F.col("sv").alias("centroid"))
-        .coalesce(1)
-        .localCheckpoint(eager=True)
+    subs = lazy_checkpoint(
+        _subvectors(ensure_parallelism(corpus, id_col), m, sub, id_col, vec_col)
     )
+    cents: dict = {s: [] for s in range(m)}
+    for r in subs.orderBy(id_col, "s").limit(k * m).collect():
+        cents[r["s"]].append(list(r["sv"]))
     update = F.expr(
-        "IF(count_if(_member) = 0, max(IF(_member, NULL, sv)), array("
-        + ", ".join(f"avg(IF(_member, sv[{i}], NULL))" for i in range(sub))
-        + "))"
+        "array(" + ", ".join(f"avg(sv[{i}])" for i in range(sub)) + ")"
     ).alias("centroid")
-
-    def step(codebook: DataFrame, _) -> DataFrame:
-        d = _sq_l2(F.col("sv"), F.col("centroid"))
-        assigned = (
-            subs.join(F.broadcast(codebook), "s")
-            .select(id_col, "s", "sv", F.struct(d.alias("d"), F.col("code").alias("c")).alias("dc"))
-            .groupBy(id_col, "s")
-            .agg(F.min("dc").alias("dc"), F.first("sv").alias("sv"))
-            .select("s", F.col("dc.c").alias("code"), "sv", F.lit(True).alias("_member"))
-        )
-        prev = codebook.select("s", "code", F.col("centroid").alias("sv"), F.lit(False).alias("_member"))
-        return assigned.unionByName(prev).groupBy("s", "code").agg(update)
-
-    codebook = fixed_point(codebook, step, iters)
-    # codebook is checkpointed; the subvector cache has no readers left
-    subs.unpersist()
-    return codebook
+    for _ in range(iters):
+        for r in (
+            subs.select("s", F.expr(_pq_code_sql(cents)).alias("code"), "sv")
+            .groupBy("s", "code")
+            .agg(update)
+            .collect()
+        ):
+            cents[r["s"]][r["code"]] = list(r["centroid"])
+    release_checkpoint(subs)
+    return literal_frame(
+        corpus.sparkSession,
+        [(s, c, cent) for s in range(m) for c, cent in enumerate(cents[s])],
+        "s int, code int, centroid array<double>",
+    )
 
 
 def pq_encode(
@@ -981,20 +1005,25 @@ def pq_encode(
     nearest codebook centroid per subspace. This is the 100 TB payoff:
     a 64-dim float vector (256-512 B) becomes m bytes (~4 B), so a
     billion-vector index fits executor memory and the ANN scan reads
-    codes, not vectors. Broadcast codebook, map-side argmin — the corpus
-    never shuffles."""
-    from rearview_spark.operators._util import ensure_parallelism, fixed_point
+    codes, not vectors.
 
+    The codebook (m*k rows, a bounded artifact) is collected to the
+    driver — no job for :func:`pq_fit`'s ``LocalRelation`` — and folded
+    into the plan as a literal (:func:`_pq_code_sql`), so the encode is
+    a projection over the subvectors: no join, no aggregate, and the
+    corpus never shuffles."""
+    from rearview_spark.operators._util import ensure_parallelism
+
+    book = {(r["s"], r["code"]): list(r["centroid"]) for r in codebook.collect()}
+    k = len(book) // m
+    if sorted(book) != [(s, c) for s in range(m) for c in range(k)]:
+        raise ValueError(
+            f"pq_encode: the codebook must hold codes 0..k-1 in each subspace 0..{m - 1}"
+        )
+    cents = {s: [book[s, c] for c in range(k)] for s in range(m)}
     sub = dim // m
     subs = _subvectors(ensure_parallelism(corpus, id_col), m, sub, id_col, vec_col)
-    d = _sq_l2(F.col("sv"), F.col("centroid"))
-    return (
-        subs.join(F.broadcast(codebook), "s")
-        .select(id_col, "s", F.struct(d.alias("d"), F.col("code").alias("c")).alias("dc"))
-        .groupBy(id_col, "s")
-        .agg(F.min("dc").alias("dc"))
-        .select(id_col, "s", F.col("dc.c").alias("code"))
-    )
+    return subs.select(id_col, "s", F.expr(_pq_code_sql(cents)).alias("code"))
 
 
 def pq_scan_topk(

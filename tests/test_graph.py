@@ -476,6 +476,47 @@ def test_connected_components_round_costs_three_jobs(spark, count_jobs):
     assert two - one == 3
 
 
+def test_connected_components_first_round_from_the_edges(spark, count_jobs):
+    """Round 1 needs only the edge checkpoint: max_iter=1 is the edge
+    fill, round 1's map side and fill, and the collect (4 jobs, no label
+    frame and no broadcast). Round 1's labels are each node's min over
+    itself and its neighbours."""
+    import warnings
+
+    from rearview_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(8)], "id_a bigint, id_b bigint"
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", RuntimeWarning)
+        got, jobs = count_jobs(lambda: connected_components(pairs, max_iter=1).collect())
+    assert jobs == 4
+    assert {r["id"]: r["component"] for r in got} == {
+        i: max(i - 1, 0) for i in range(9)
+    }
+
+
+def test_hits_one_iteration_reads_the_edges_once(spark, count_jobs):
+    """hits(iterations=1) is the edge fill with its in-degree window,
+    h_1's map side and fill, and the collect's two jobs (6, no a_1
+    checkpoint and no broadcast). Its authorities come from the
+    per-edge a_1 projection, the one reader of it: every dst appears
+    once, with its in-degree renormed, beside the hub scores, on a graph
+    whose nodes have in-degrees 0 to 3."""
+    from rearview_spark.operators.graph import hits
+
+    edges = [(0, 1), (2, 1), (4, 1), (0, 3), (3, 5), (5, 3), (1, 0)]
+    df = spark.createDataFrame(edges, "src bigint, dst bigint")
+    rows, jobs = count_jobs(lambda: hits(df, 1).collect())
+    assert jobs == 6
+    assert len(rows) == len({n for e in edges for n in e})
+    h, a = _hits_py(edges, 1)
+    got = {r["node"]: (r["hub_fp"], r["auth_fp"]) for r in rows}
+    assert got == {n: (h.get(n, 0), a.get(n, 0)) for n in set(h) | set(a)}
+    assert got[1][1] == 10**6 and got[3][1] == 10**6 * 2 // 3
+
+
 def test_fixed_points_warn_when_stopped_unconverged(spark):
     """A 9-node path needs more than 3 rounds: connected_components at
     max_iter=3 and k_core at max_rounds=3 both warn, pointing at the

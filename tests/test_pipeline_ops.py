@@ -484,11 +484,12 @@ def _pq_lloyd_replay(vecs: dict, m: int, k: int, iters: int) -> tuple[dict, int]
 
 
 def test_pq_fit_round_cost_and_lloyd_replay(spark, count_jobs, tmp_path):
-    """One Lloyd round is three jobs (codebook broadcast, the (s, code)
-    update's map side, the checkpoint fill) over a one-file corpus, as
-    the embeddings table arrives, and the codebook is the NumPy
-    replay's bit for bit. Vectors 0 and 1 are equal, so code 1 ties
-    with code 0, loses, and starts out with no members."""
+    """One Lloyd round is two jobs (the (s, code) update's map side and
+    its collect; the assignment is a projection over the codebook
+    literal) over a one-file corpus, as the embeddings table arrives,
+    and the codebook is the NumPy replay's bit for bit. Vectors 0 and 1
+    are equal, so code 1 ties with code 0, loses, and starts out with
+    no members."""
     from rearview_spark.operators.similarity import pq_fit
 
     vecs = {i: [float((i * (j + 3) + j * j) % 11) for j in range(8)] for i in range(2, 14)}
@@ -502,10 +503,64 @@ def test_pq_fit_round_cost_and_lloyd_replay(spark, count_jobs, tmp_path):
         cb, jobs[iters] = count_jobs(
             lambda: pq_fit(corpus, m=2, k=4, iters=iters, dim=8)
         )
-    assert jobs[2] - jobs[1] == 3
+    assert jobs[2] - jobs[1] == 2
     want, empty = _pq_lloyd_replay(vecs, m=2, k=4, iters=2)
     assert empty > 0
     assert {(r["s"], r["code"]): list(r["centroid"]) for r in cb.collect()} == want
+
+
+def _pq_corpus(spark):
+    vecs = [(i, [float((i * (j + 5) + j) % 9) for j in range(8)]) for i in range(24)]
+    return vecs, spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+
+
+def test_pq_codebook_collects_without_a_job(spark, count_jobs):
+    """pq_fit keeps its codebook on the driver and returns it as a
+    LocalRelation: collecting it launches no job, and its schema is
+    (s int, code int, centroid array<double>)."""
+    from rearview_spark.operators.similarity import pq_fit
+
+    _, corpus = _pq_corpus(spark)
+    cb = pq_fit(corpus, m=2, k=4, iters=2, dim=8)
+    rows, jobs = count_jobs(cb.collect)
+    assert jobs == 0
+    assert len(rows) == 8
+    assert cb.schema.simpleString() == "struct<s:int,code:int,centroid:array<double>>"
+
+
+def test_pq_encode_is_a_projection(spark):
+    """pq_encode folds the codebook into the plan as a literal: its plan
+    has no join and no aggregate, and each code is the nearest centroid
+    of its subspace by squared L2 (ties to the smaller code)."""
+    from rearview_spark.operators.similarity import pq_encode, pq_fit
+
+    vecs, corpus = _pq_corpus(spark)
+    cb = pq_fit(corpus, m=2, k=4, iters=1, dim=8)
+    codes = pq_encode(corpus, cb, m=2, dim=8)
+    plan = codes._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan and "Aggregate" not in plan
+    cents = {(r["s"], r["code"]): r["centroid"] for r in cb.collect()}
+
+    def nearest(v, s):
+        sv = v[s * 4:(s + 1) * 4]
+        return min(
+            range(4),
+            key=lambda c: (sum((x - y) * (x - y) for x, y in zip(sv, cents[s, c])), c),
+        )
+
+    got = {(r["vec_id"], r["s"]): r["code"] for r in codes.collect()}
+    assert got == {(i, s): nearest(v, s) for i, v in vecs for s in range(2)}
+
+
+def test_kmeans_codebook_collects_without_a_job(spark, count_jobs):
+    """kmeans_fit's codebook is a LocalRelation: assign_buckets' collect
+    of it launches no job."""
+    from rearview_spark.operators.similarity import kmeans_fit
+
+    _, corpus = _pq_corpus(spark)
+    cb = kmeans_fit(corpus, k=3, iters=1)
+    rows, jobs = count_jobs(cb.collect)
+    assert jobs == 0 and sorted(r["bucket"] for r in rows) == [0, 1, 2]
 
 
 def test_pq_topk_recall_vs_brute_force(spark, sf_dir):

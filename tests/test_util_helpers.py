@@ -400,6 +400,22 @@ def test_fixed_point_warns_only_when_rounds_run_out(spark):
         fixed_point(df, step, 1)
 
 
+def test_fixed_point_warning_counts_the_callers_rounds(spark):
+    """An operator that ran its first round itself passes ``done=1``:
+    the warning names the cap its caller gave, not the rounds left."""
+    from pyspark.sql import functions as F
+
+    from rearview_spark.operators._util import fixed_point
+
+    df, step, calls = _countdown(spark, [5])
+    with pytest.warns(RuntimeWarning, match=r"my_op: stopped at max_steps=3 "):
+        fixed_point(
+            df, step, 2, obs={"s": 5}, converge_on="s",
+            op="my_op", cap_name="max_steps", done=1, s=F.sum("v"),
+        )
+    assert len(calls) == 2
+
+
 def test_fixed_point_without_observations_checkpoints_plainly(spark):
     """No aggregates to observe: each round is a plain eager local
     checkpoint and the seeded obs reaches every step unchanged."""
@@ -451,3 +467,36 @@ def test_release_checkpoint_frees_blocks(spark):
         cp.count()
     with pytest.raises(ValueError, match="checkpointed frame"):
         release_checkpoint(spark.range(5))
+
+
+def test_literal_frame_round_trips_and_costs_no_job(spark, count_jobs, tmp_path):
+    """literal_frame is a LocalRelation of its rows: doubles come back
+    bit for bit (repr round-trips; NaN, infinities and -0.0 included),
+    the schema is the DDL's, collecting launches no job and writing one.
+    No rows give an empty frame of the same schema."""
+    import math
+    import struct
+
+    from rearview_spark.operators._util import literal_frame
+
+    doubles = [0.1, 1 / 3, -0.0, 5e-324, 1.7976931348623157e308, -2.5e-17,
+               float("nan"), float("inf"), float("-inf")]
+    rows = [(i, 2**40 + i, x, [x, 1.0 + i]) for i, x in enumerate(doubles)]
+    schema = "i int, n bigint, x double, xs array<double>"
+    df = literal_frame(spark, rows, schema)
+    assert df.schema.simpleString() == "struct<i:int,n:bigint,x:double,xs:array<double>>"
+    got, jobs = count_jobs(df.collect)
+    assert jobs == 0
+
+    def same(a, b):
+        return struct.pack("<d", a) == struct.pack("<d", b) or math.isnan(a) and math.isnan(b)
+
+    assert [(r["i"], r["n"]) for r in got] == [(i, n) for i, n, _, _ in rows]
+    for r, (_, _, x, xs) in zip(got, rows):
+        assert same(r["x"], x) and len(r["xs"]) == 2
+        assert all(same(a, b) for a, b in zip(r["xs"], xs))
+    _, jobs = count_jobs(lambda: df.write.parquet(str(tmp_path / "lit")))
+    assert jobs == 1
+    empty = literal_frame(spark, [], schema)
+    assert empty.schema.simpleString() == df.schema.simpleString()
+    assert empty.collect() == []
